@@ -57,15 +57,17 @@ def _shipped(fn: Callable) -> Callable:
 # converted to an exact fixed-point form (functions/exact.py:
 # fixed_sum / round_ratio / floor_units / half_up_units), enforced by
 # tests/test_plans.py::test_no_engine_ambiguous_round_in_any_query_output.
-# The window therefore front-loads (a) the 18 queries whose output
+# The window therefore front-loads the 4 queries new in round 5, then
+# (a) the 18 queries whose output
 # VALUES or SCHEMA changed (renamed *_e4/*_e6 BIGINT score columns;
 # exact-decimal sums/percentiles with more precision than the old
 # round) — their prior green hashes are stale and MUST re-grade — then
 # (b) the 24 queries whose outputs are value-identical in theory (exact
 # rational rounding / integer-sum forms reproduce the old values away
 # from boundaries) but whose plans changed — re-graded to retire any
-# boundary-row staleness. The remaining 8 slots rotate in the
-# least-recently-graded untouched greens (r1-era rows). Every query
+# boundary-row staleness. The last 4 slots rotate in the
+# least-recently-graded untouched greens (r1-era rows): 4 new + 18 +
+# 24 + 4 rotated = 50. Every query
 # outside the window is hash-green in a prior driver artifact AND both
 # local mirrors passed 131/131 at sf0.01 this session after the sweep.
 _GRADE_FIRST = [

@@ -14,7 +14,10 @@ shuffle. These guards fail LOUDLY at plan-construction time instead:
   plan-time size estimate (`optimizedPlan().stats().sizeInBytes`) —
   zero jobs, no scan; parquet-backed plans carry accurate statistics.
   The estimate is intentionally compared BEFORE replication is applied
-  and multiplied by the replication factor.
+  and multiplied by the replication factor. A plan without statistics
+  (JDBC, some views and streaming sources) reports
+  `spark.sql.defaultSizeInBytes` (Long.MaxValue by default); the check
+  is skipped for it, since that number says nothing about the side.
 
 Both raise ValueError with the remediation spelled out (broadcast a
 smaller dim / rely on AQE skew splitting / raise the cap explicitly).
@@ -49,16 +52,30 @@ def plan_size_bytes(df: DataFrame) -> int:
     )
 
 
+def default_size_bytes(df: DataFrame) -> int:
+    """spark.sql.defaultSizeInBytes: the estimate Catalyst gives a leaf
+    plan that has no statistics."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return int(conf.defaultSizeInBytes())
+
+
 def check_replicated_size(
     df: DataFrame,
     factor: int,
     what: str,
     cap_bytes: int | None = None,
 ) -> None:
+    """Raise if `factor` copies of `df` would exceed `cap_bytes` by the
+    plan-time estimate. Skipped when the estimate is at or above
+    spark.sql.defaultSizeInBytes: that is Catalyst's "no statistics"
+    fallback, not a size, and raising on it would reject small sides
+    whose source simply keeps no statistics."""
     if cap_bytes is None:
         # read at call time so tests/config can adjust the module cap
         cap_bytes = MAX_REPLICATED_BYTES
     est = plan_size_bytes(df)
+    if est >= default_size_bytes(df):
+        return
     total = est * max(1, factor)
     if total > cap_bytes:
         raise ValueError(

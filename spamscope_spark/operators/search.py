@@ -320,6 +320,9 @@ def build_postings(
         F.col(id_col).alias("doc"),
         F.posexplode(_tokens(text_col)).alias("pos", "term"),
     )
+    # (term, doc) is unique after this fold, so doc alone totally orders
+    # a term's entries: array_sort(struct(doc, e)) below and the DuckDB
+    # oracle's string_agg(... ORDER BY doc) then build identical bytes.
     per_doc = toks.groupBy("term", "doc").agg(
         F.sort_array(F.collect_list("pos")).alias("poss"),
         F.count(F.lit(1)).alias("n"),

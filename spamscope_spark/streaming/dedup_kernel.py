@@ -1,14 +1,12 @@
-"""Shared per-bucket flag-dedup kernel.
+"""Per-bucket flag-dedup kernel.
 
-The vectorized bucket-processing core of the streaming dedup filter,
-shared by BOTH stateful APIs: `applyInPandasWithState`
-(dedup_state.flag_duplicates) and `transformWithStateInPandas`
-(tws_dedup.tws_flag_duplicates). Semantics are the reference's bounded
+The vectorized bucket-processing core of the streaming dedup filter
+(dedup_state.flag_duplicates, which adds only `applyInPandasWithState`
+state plumbing and the TTL). Semantics are the reference's bounded
 LRU flag-not-drop filter (src/bolts/tokenizer.py:81-97,176-196); the
 kernel owns the ordering guarantee (globally-first occurrence by
 (ts, conv_id, turn_idx) within the batch), the seen-set update, and
-the oldest-first eviction — only state plumbing and TTL mechanics
-differ per API.
+the oldest-first eviction.
 """
 
 from __future__ import annotations

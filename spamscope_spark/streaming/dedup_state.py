@@ -96,8 +96,7 @@ def flag_duplicates(
             state.remove()
             return
         seen: list[str] = list(state.get[0]) if state.exists else []
-        # shared vectorized kernel (dedup_kernel.py) — also drives the
-        # transformWithStateInPandas twin (tws_dedup.py)
+        # vectorized kernel (dedup_kernel.py), testable without Spark
         out, seen, max_ts_ms = dk.process_bucket(
             seen, list(pdfs), key, sort_cols, drop_col=_BUCKET_COL
         )

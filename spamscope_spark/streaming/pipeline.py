@@ -6,9 +6,9 @@
       shingle signature) — all vectorized, no per-row Python
     → watermark(ts)
     → stateful flag-dedup on content fingerprint (bounded keyed state)
-    → session windows per conv_id (built-in session_window aggregate
-      AND a custom applyInPandasWithState sessionizer with event-time
-      timeout — the reference's greedy buffers, bounded properly)
+    → session windows per conv_id (applyInPandasWithState sessionizer
+      with event-time timeout — the reference's greedy buffers, bounded
+      properly)
     → stream-stream join: tool-invocation ⋈ tool-response under
       watermark + time band (dialect analog)
     → foreachBatch exactly-once sink (epoch-atomic parquet MERGE on
@@ -157,6 +157,16 @@ def _session_input(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     return enriched_stream(spark, cfg, dedup_flag=False)
 
 
+def _sha1_turns(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
+    """Raw turn stream + content sha1, watermarked on ts: the common
+    prefix of both exact-dedup paths."""
+    return (
+        read_turns_stream(spark, cfg)
+        .withColumn("sha1", F.sha1(F.coalesce(F.col("text"), F.lit(""))))
+        .withWatermark("ts", cfg.watermark)
+    )
+
+
 def enriched_stream(
     spark: SparkSession, cfg: PipelineConfig, dedup_flag: bool = True
 ) -> DataFrame:
@@ -175,10 +185,7 @@ def enriched_stream(
     dedup_flag=False for consumers that add their own stateful operator
     (Structured Streaming does not support chaining two
     applyInPandasWithState ops in one query)."""
-    turns = read_turns_stream(spark, cfg)
-    turns = turns.withColumn(
-        "sha1", F.sha1(F.coalesce(F.col("text"), F.lit("")))
-    ).withWatermark("ts", cfg.watermark)
+    turns = _sha1_turns(spark, cfg)
     if dedup_flag:
         turns = flag_duplicates(
             turns, key="sha1", state_timeout_ms=cfg.dedup_state_timeout_ms
@@ -208,11 +215,7 @@ def deduped_stream_builtin(spark: SparkSession, cfg: PipelineConfig) -> DataFram
     watermark is dropped from state, so re-arrivals beyond the
     watermark horizon are NOT deduped — same horizon contract as the
     stream-stream join."""
-    turns = read_turns_stream(spark, cfg)
-    turns = turns.withColumn(
-        "sha1", F.sha1(F.coalesce(F.col("text"), F.lit("")))
-    ).withWatermark("ts", cfg.watermark)
-    deduped = turns.dropDuplicatesWithinWatermark(["sha1"])
+    deduped = _sha1_turns(spark, cfg).dropDuplicatesWithinWatermark(["sha1"])
     enriched = enrich_turns(
         deduped,
         target_keys=cfg.target_keys,
@@ -271,7 +274,7 @@ _SESSION_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 _SESS_BUCKET_COL = "_sess_bucket"
 
 # Session state-machine bounds live in session_kernel (MAX_SEEN /
-# MAX_SIGS / NEARDUP_SIM) — shared with the transformWithState path.
+# MAX_SIGS / NEARDUP_SIM).
 
 
 def stateful_sessionize(
@@ -321,9 +324,8 @@ def stateful_sessionize(
     def fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        # The session state machine itself lives in session_kernel
-        # (shared, byte-identical, with the transformWithStateInPandas
-        # path) — this wrapper is only GroupState plumbing + timers.
+        # The session state machine itself lives in session_kernel —
+        # this wrapper is only GroupState plumbing + timers.
         if state.hasTimedOut:
             states: dict = pickle.loads(state.get[0])
             wm_us = state.getCurrentWatermarkMs() * 1000
@@ -364,32 +366,6 @@ def stateful_sessionize(
         stateStructType=_SESSION_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def session_window_agg(df: DataFrame, gap_s: int = 30 * 60) -> DataFrame:
-    """Built-in session_window aggregate — the declarative twin of
-    stateful_sessionize (no custom state; Catalyst merges windows)."""
-    return (
-        df.groupBy(
-            F.col("conv_id"),
-            F.session_window("ts", f"{gap_s} seconds").alias("sw"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum((F.col("role") == "user").cast("long")).alias("n_user"),
-            F.sum((F.col("role") == "assistant").cast("long")).alias("n_assistant"),
-            F.sum((F.col("role") == "tool").cast("long")).alias("n_tool"),
-            F.sum(F.col("tool").isNotNull().cast("long")).alias("n_tool_calls"),
-            F.max("phishing_score").alias("max_phishing_score"),
-        )
-        .select(
-            "conv_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_turns", "n_user", "n_assistant", "n_tool",
-            "n_tool_calls", "max_phishing_score",
-        )
     )
 
 
@@ -603,11 +579,38 @@ def _apply_state_store(spark: SparkSession, cfg: PipelineConfig) -> None:
     )
 
 
+def _start(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    df: DataFrame,
+    name: str,
+    sink,
+    available_now: bool,
+    batch_fn=None,
+    query_name: str | None = None,
+):
+    """The one writer behind every start_*_query: select the state-store
+    backend, then run `df` through foreachBatch (`batch_fn`, default the
+    sink itself) in append mode, checkpointed under `name` and drained
+    with availableNow when asked. `query_name` defaults to `name`; three
+    queries pass their own, which MetricsListener and the benchmarks
+    key on. Returns (query, sink)."""
+    _apply_state_store(spark, cfg)
+    writer = (
+        df.writeStream.foreachBatch(batch_fn or sink)
+        .option("checkpointLocation", cfg.checkpoint(name))
+        .outputMode("append")
+        .queryName(query_name or name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start(), sink
+
+
 def start_enriched_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
     """Primary output: enriched JSON-per-turn rows, exactly-once."""
-    _apply_state_store(spark, cfg)
     df = with_json_row(enriched_stream(spark, cfg))
     order = None
     if cfg.priority_order:
@@ -616,15 +619,10 @@ def start_enriched_query(
     sink = IdempotentSink(
         cfg.output("enriched"), keys=["conv_id", "turn_idx"], order_by=order
     )
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("enriched"))
-        .outputMode("append")
-        .queryName("enriched_turns")
+    return _start(
+        spark, cfg, df, "enriched", sink, available_now,
+        query_name="enriched_turns",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def start_dedup_builtin_query(
@@ -633,20 +631,14 @@ def start_dedup_builtin_query(
     """Drop-duplicates variant of the enriched output: built-in
     watermark-scoped dedup state (see deduped_stream_builtin), same
     exactly-once sink contract."""
-    _apply_state_store(spark, cfg)
     df = with_json_row(deduped_stream_builtin(spark, cfg))
     sink = IdempotentSink(
         cfg.output("enriched_dd"), keys=["conv_id", "turn_idx"]
     )
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("enriched_dd"))
-        .outputMode("append")
-        .queryName("enriched_dedup_builtin")
+    return _start(
+        spark, cfg, df, "enriched_dd", sink, available_now,
+        query_name="enriched_dedup_builtin",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def start_queue_query(
@@ -657,18 +649,12 @@ def start_queue_query(
     the tool_calls queue (streaming/queue_sink.py)."""
     from .queue_sink import QueueSink
 
-    _apply_state_store(spark, cfg)
     sink = QueueSink(cfg.output("queues"))
     df = enriched_stream(spark, cfg, dedup_flag=False)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("queues"))
-        .outputMode("append")
-        .queryName("queue_sink")
+    return _start(
+        spark, cfg, df, "queues", sink, available_now,
+        query_name="queue_sink",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def start_hot_enriched_query(
@@ -701,33 +687,19 @@ def start_hot_enriched_query(
         )
         sink.process_batch(with_json_row(enriched), epoch)
 
-    writer = (
-        turns.writeStream.foreachBatch(process)
-        .option("checkpointLocation", cfg.checkpoint("enriched_hot"))
-        .outputMode("append")
-        .queryName("enriched_hot")
+    return _start(
+        spark, cfg, turns, "enriched_hot", sink, available_now,
+        batch_fn=process,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def start_session_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
     """Per-session feature vectors from the custom stateful sessionizer."""
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(cfg.output("sessions"), keys=["conv_id", "session_id"])
     df = stateful_sessionize(_session_input(spark, cfg), gap_s=cfg.gap_s)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("sessions"))
-        .outputMode("append")
-        .queryName("sessions")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _start(spark, cfg, df, "sessions", sink, available_now)
 
 
 def start_window_query(
@@ -738,55 +710,28 @@ def start_window_query(
     sink = IdempotentSink(
         cfg.output("window_rates"), keys=["window_start", "conv_id"]
     )
-    _apply_state_store(spark, cfg)
     df = windowed_rates(
         _session_input(spark, cfg), window_s=cfg.window_s, slide_s=cfg.slide_s
     )
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("window_rates"))
-        .outputMode("append")
-        .queryName("window_rates")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _start(spark, cfg, df, "window_rates", sink, available_now)
 
 
 def start_join_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
     """Tool-call correlation pairs, exactly-once."""
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(cfg.output("tool_pairs"), keys=["conv_id", "turn_idx"])
     df = tool_response_stream_join(spark, cfg)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("tool_pairs"))
-        .outputMode("append")
-        .queryName("tool_pairs")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _start(spark, cfg, df, "tool_pairs", sink, available_now)
 
 
 def start_timeout_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
     """Unanswered-tool-call timeouts (outer-join eviction), exactly-once."""
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(cfg.output("tool_timeouts"), keys=["conv_id", "turn_idx"])
     df = unanswered_tool_calls(spark, cfg)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("tool_timeouts"))
-        .outputMode("append")
-        .queryName("tool_timeouts")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _start(spark, cfg, df, "tool_timeouts", sink, available_now)
 
 
 def start_cm_sketch_query(
@@ -796,22 +741,13 @@ def start_cm_sketch_query(
     """Per-window count-min sketches of tool usage, exactly-once:
     bounded depth*width state per window, cells mergeable across
     windows/epochs by cell-wise sum."""
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(
         cfg.output("cm_sketch"), keys=["window_start", "row_j", "cell"]
     )
     df = windowed_cm_sketch(
         _session_input(spark, cfg), window_s=cfg.window_s, depth=depth, width=width
     )
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("cm_sketch"))
-        .outputMode("append")
-        .queryName("cm_sketch")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _start(spark, cfg, df, "cm_sketch", sink, available_now)
 
 
 def start_linreg_query(
@@ -819,18 +755,9 @@ def start_linreg_query(
 ):
     """Per-window score-drift regression, exactly-once (append mode:
     a window's fit is final once the watermark passes its end)."""
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(cfg.output("window_linreg"), keys=["window_start"])
     df = windowed_linreg(_session_input(spark, cfg), window_s=cfg.window_s)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("window_linreg"))
-        .outputMode("append")
-        .queryName("window_linreg")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
+    return _start(spark, cfg, df, "window_linreg", sink, available_now)
 
 
 def start_scd2_query(
@@ -844,7 +771,6 @@ def start_scd2_query(
     its correct interval position rather than being dropped."""
     from .scd2_sink import Scd2DimSink, risk_tier
 
-    _apply_state_store(spark, cfg)
     sink = Scd2DimSink(cfg.output("scd2_dim"))
     df = enriched_stream(spark, cfg, dedup_flag=False).select(
         "conv_id",
@@ -852,15 +778,22 @@ def start_scd2_query(
         "ts",
         F.col("turn_idx").cast("long").alias("seq"),
     )
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", cfg.checkpoint("scd2_dim"))
-        .outputMode("append")
-        .queryName("scd2_dim")
+    return _start(spark, cfg, df, "scd2_dim", sink, available_now)
+
+
+def _key_window_counts(
+    spark: SparkSession, cfg: PipelineConfig, key: str, bucket_s: int
+) -> DataFrame:
+    """Watermarked tumbling (window, key) turn count over raw turns —
+    the one wide stage of the anomaly and silence monitors. Append mode
+    emits a row once, when the watermark passes its window end."""
+    return (
+        read_turns_stream(spark, cfg)
+        .withWatermark("ts", cfg.watermark)
+        .groupBy(F.window("ts", f"{bucket_s} seconds").alias("w"), F.col(key))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("window_start"), key, "n")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def start_anomaly_query(
@@ -895,19 +828,10 @@ def start_anomaly_query(
     window pass parallelizes across keys."""
     from ..operators import cep
 
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(
         cfg.output("rate_anomaly"), keys=["window_start", key]
     )
-    src = read_turns_stream(spark, cfg)
-    cnt = (
-        src.withWatermark("ts", cfg.watermark)
-        .groupBy(
-            F.window("ts", f"{bucket_s} seconds").alias("w"), F.col(key)
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), key, "n")
-    )
+    cnt = _key_window_counts(spark, cfg, key, bucket_s)
 
     def process(batch_df: DataFrame, epoch: int) -> None:
         fresh = batch_df.select("window_start", key, "n")
@@ -938,15 +862,10 @@ def start_anomaly_query(
             epoch,
         )
 
-    writer = (
-        cnt.writeStream.foreachBatch(process)
-        .option("checkpointLocation", cfg.checkpoint("rate_anomaly"))
-        .outputMode("append")
-        .queryName("rate_anomaly")
+    return _start(
+        spark, cfg, cnt, "rate_anomaly", sink, available_now,
+        batch_fn=process,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink
 
 
 def start_silence_query(
@@ -982,18 +901,9 @@ def start_silence_query(
     stream lifetime (the r3 form re-read the whole sink and
     re-densified every key's full timeline each epoch — O(T^2)
     cumulative over a long-lived monitor)."""
-    _apply_state_store(spark, cfg)
     sink = IdempotentSink(cfg.output("silence"), keys=["window_start", key])
     state_sink = IdempotentSink(cfg.output("silence_state"), keys=[key])
-    src = read_turns_stream(spark, cfg)
-    cnt = (
-        src.withWatermark("ts", cfg.watermark)
-        .groupBy(
-            F.window("ts", f"{bucket_s} seconds").alias("w"), F.col(key)
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), key, "n")
-    )
+    cnt = _key_window_counts(spark, cfg, key, bucket_s)
     ival = F.expr(f"interval {bucket_s} seconds")
 
     def process(batch_df: DataFrame, epoch: int) -> None:
@@ -1101,12 +1011,7 @@ def start_silence_query(
         untouched = st.join(extended.select(key), key, "left_anti")
         state_sink.process_batch(extended.unionByName(untouched), epoch)
 
-    writer = (
-        cnt.writeStream.foreachBatch(process)
-        .option("checkpointLocation", cfg.checkpoint("silence"))
-        .outputMode("append")
-        .queryName("silence")
+    return _start(
+        spark, cfg, cnt, "silence", sink, available_now,
+        batch_fn=process,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), sink

@@ -1,12 +1,9 @@
-"""Shared per-bucket sessionization kernel.
+"""Per-bucket sessionization kernel.
 
-The same pure-Python/pandas core drives BOTH stateful APIs:
-`applyInPandasWithState` (pipeline.stateful_sessionize, Spark 3.4+) and
-`transformWithStateInPandas` (tws_sessionize, the Spark 4 arbitrary-
-state API with timers + RocksDB state store). Keeping the kernel in one
-place is what makes the two paths provably identical (parity test in
-tests/test_streaming.py) — only state plumbing and timer mechanics
-differ per API.
+The pure-Python/pandas core of pipeline.stateful_sessionize: that
+function is only `applyInPandasWithState` state plumbing and timers
+around it, so the state machine is testable without Spark
+(tests/test_streaming.py::TestSessionKernel).
 
 Semantics (reference parity): per-conv_id session windows with a gap
 timeout — the bounded version of the reference's wait-forever greedy

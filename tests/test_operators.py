@@ -1849,6 +1849,39 @@ class TestSmallSideGuards:
                     big, small, ["k"], salt_source=F.col("k"), n_salts=4
                 )
 
+    def test_replicated_size_skips_side_without_statistics(
+        self, spark, monkeypatch
+    ):
+        """A stat-less plan reports spark.sql.defaultSizeInBytes; that is
+        no size at all, so the guard must not reject the side for it."""
+        from spamscope_spark.operators import guards, skew
+
+        big = spark.range(100).withColumnRenamed("id", "k")
+        small = spark.range(50).withColumnRenamed("id", "k")
+        default = guards.default_size_bytes(small)
+        monkeypatch.setattr(guards, "plan_size_bytes", lambda df: default)
+        guards.check_replicated_size(small, 4, "stat-less side")
+        assert (
+            skew.salted_join(
+                big, small, ["k"], salt_source=F.col("k"), n_salts=4
+            ).count()
+            == 50
+        )
+
+    def test_replicated_size_real_over_cap_estimate_still_raises(
+        self, spark, monkeypatch
+    ):
+        import pytest as _pt
+
+        from spamscope_spark.operators import guards
+
+        small = spark.range(50).withColumnRenamed("id", "k")
+        # the largest estimate that is still a real one
+        below = guards.default_size_bytes(small) - 1
+        monkeypatch.setattr(guards, "plan_size_bytes", lambda df: below)
+        with _pt.raises(ValueError, match="replicated-shuffle cap"):
+            guards.check_replicated_size(small, 1, "huge side")
+
 
 def guards_cap() -> int:
     from spamscope_spark.operators import guards

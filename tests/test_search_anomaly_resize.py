@@ -269,6 +269,27 @@ class TestBuildPostings:
         }
         assert kept2 == {"b", "c"}
 
+    def test_one_entry_per_term_and_doc(self, spark):
+        """Rows sharing a doc id fold into ONE entry per (term, doc).
+        Cross-engine byte equality depends on it: with a repeated doc,
+        entries would tie on the doc sort key, and Spark's struct sort
+        and DuckDB's ORDER BY doc could order the tie differently."""
+        from spamscope_spark.operators.search import build_postings
+
+        df = spark.createDataFrame(
+            [(5, "x y x"), (4, "x"), (5, "y x")],
+            "doc_id long, text string",
+        )
+        out = {
+            r["term"]: (r["df_docs"], r["n_occurrences"], r["postings"])
+            for r in build_postings(df).collect()
+        }
+        assert out["x"] == (2, 4, "4:0 5:0,1,2")
+        assert out["y"] == (1, 2, "5:0,1")
+        for df_docs, _, postings in out.values():
+            docs = [int(e.split(":")[0]) for e in postings.split(" ")]
+            assert docs == sorted(set(docs)) and len(docs) == df_docs
+
 
 class TestPhraseViaPostings:
     """Round-5: the positional-postings phrase strategy must equal the

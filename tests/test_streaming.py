@@ -585,71 +585,9 @@ class TestQueueSink:
         assert spark.read.parquet(out_dir).count() == src.count()
 
 
-class TestTwsSessionize:
-    def test_matches_apply_in_pandas_path(self, spark, cfg, tmp_path):
-        """The Spark-4 transformWithStateInPandas sessionizer (RocksDB
-        state + explicit timers) must emit exactly the sessions the
-        applyInPandasWithState path emits for the same input + trigger
-        (shared kernel — this pins the plumbing, not just the math)."""
-        from spamscope_spark.streaming.tws_sessionize import (
-            ROCKSDB_PROVIDER,
-            tws_available,
-            tws_sessionize,
-        )
-
-        if not tws_available(spark):
-            pytest.skip("transformWithState / RocksDB state store unavailable")
-
-        q, base_sink = start_session_query(spark, cfg)
-        q.awaitTermination(300)
-
-        def session_key(sink):
-            return {
-                r["session_id"]: (
-                    r["session_start"], r["session_end"], r["n_turns"],
-                    r["n_user"], r["n_assistant"], r["n_tool"], r["n_system"],
-                    r["n_tool_calls"], r["max_phishing_score"],
-                    r["n_duplicate_turns"], r["n_neardup_turns"],
-                )
-                for r in sink.read_merged(spark).collect()
-            }
-
-        base = session_key(base_sink)
-        assert base  # baseline emitted something
-
-        from spamscope_spark.streaming.pipeline import _session_input
-
-        tws_cfg = PipelineConfig(
-            input_path=cfg.input_path, work_dir=str(tmp_path / "tws")
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        try:
-            df = tws_sessionize(
-                _session_input(spark, tws_cfg), gap_s=tws_cfg.gap_s
-            )
-            sink = IdempotentSink(
-                tws_cfg.output("sessions_tws"), keys=["conv_id", "session_id"]
-            )
-            q = (
-                df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", tws_cfg.checkpoint("sessions_tws"))
-                .outputMode("append")
-                .queryName("sessions_tws")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-        assert session_key(sink) == base
-
-
 class TestSessionKernel:
-    """Pure-pandas tests of the shared session state machine (no Spark)
-    — both stateful APIs are thin plumbing over this kernel."""
+    """Pure-pandas tests of the session state machine (no Spark) —
+    stateful_sessionize is thin GroupState plumbing over this kernel."""
 
     def _rows(self):
         import pandas as pd
@@ -1113,244 +1051,9 @@ class TestWindowedLinreg:
             assert exp[k] == v, k
 
 
-class TestTwsSilence:
-    """Round-5 (VERDICT item 6): the silence monitor's
-    transformWithStateInPandas twin. The pure kernel
-    (silence_kernel.extend) is pinned against the batch operator here
-    — it runs everywhere; the full TWS plumbing test is gated on
-    tws_available, as for TestTwsSessionize."""
-
-    BUCKET_US = 3600 * 1_000_000
-
-    def test_kernel_first_contact_and_gap(self):
-        from spamscope_spark.streaming import silence_kernel as slk
-
-        b = self.BUCKET_US
-        st = slk.new_state()
-        # first contact: two active windows, then a 2-bucket gap
-        rows, st = slk.extend(st, {0: 3, b: 2}, 3 * b, b)
-        assert rows == [
-            (0, 3, 0, False),
-            (b, 2, 0, False),
-            (2 * b, 0, 1, True),
-            (3 * b, 0, 2, True),
-        ]
-        # resumes exactly one past last_emitted; activity resets since
-        rows, st = slk.extend(st, {5 * b: 1}, 5 * b, b)
-        assert rows == [(4 * b, 0, 3, True), (5 * b, 1, 0, False)]
-        assert st == (5 * b, 5 * b)
-
-    def test_kernel_pending_beyond_bound_not_emitted(self):
-        from spamscope_spark.streaming import silence_kernel as slk
-
-        b = self.BUCKET_US
-        rows, st = slk.extend(slk.new_state(), {0: 1, 4 * b: 9}, 2 * b, b)
-        assert [r[0] for r in rows] == [0, b, 2 * b]
-        # the 4b window stays pending; a later bound picks it up
-        rows, st = slk.extend(st, {4 * b: 9}, 4 * b, b)
-        assert rows == [(3 * b, 0, 3, True), (4 * b, 9, 0, False)]
-
-    def test_kernel_matches_batch_operator(self, spark):
-        """For the same counts and the batch operator's bound (the
-        global max window), the kernel emits exactly the operator's
-        rows per key — the property that makes the foreachBatch and
-        TWS forms two plumbings of one monitor."""
-        import datetime as dt
-
-        from spamscope_spark.operators import cep
-        from spamscope_spark.streaming import silence_kernel as slk
-
-        t0 = dt.datetime(2026, 1, 1)
-        counts = {
-            ("a", 0): 5, ("a", 1): 2, ("a", 4): 1,
-            ("b", 2): 7, ("b", 3): 1,
-        }
-        rows = [
-            (t0 + dt.timedelta(hours=h), k, n)
-            for (k, h), n in counts.items()
-        ]
-        cnt = spark.createDataFrame(
-            rows, "window_start timestamp, key string, n bigint"
-        )
-        batch = {
-            (r["key"], r["window_start"]): (
-                r["n"], r["windows_since_seen"], r["is_silent"]
-            )
-            for r in cep.silence_windows(cnt, "key").collect()
-        }
-        b = self.BUCKET_US
-        t0_us = int(pd.Timestamp(t0).value // 1000)
-        gmax = t0_us + 4 * b
-        got = {}
-        for k in ("a", "b"):
-            arrived = {
-                t0_us + h * b: n
-                for (kk, h), n in counts.items()
-                if kk == k
-            }
-            out, _ = slk.extend(slk.new_state(), arrived, gmax, b)
-            for w, n, since, silent in out:
-                got[(k, pd.Timestamp(w, unit="us").to_pydatetime())] = (
-                    n, since, silent
-                )
-        assert got == batch
-
-    def test_tws_silence_end_to_end(self, spark, cfg):
-        from spamscope_spark.streaming.tws_sessionize import (
-            ROCKSDB_PROVIDER,
-            tws_available,
-        )
-
-        if not tws_available(spark):
-            pytest.skip("transformWithState / RocksDB state store unavailable")
-
-        from spamscope_spark.streaming.pipeline import read_turns_stream
-        from spamscope_spark.streaming.tws_silence import tws_silence
-
-        src = read_turns_stream(spark, cfg)
-        cnt = (
-            src.withWatermark("ts", cfg.watermark)
-            .groupBy(F.window("ts", "3600 seconds").alias("w"), F.col("role"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("w.start").alias("window_start"), "role", "n")
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        try:
-            df = tws_silence(cnt, key="role", bucket_s=3600)
-            sink = IdempotentSink(
-                cfg.output("silence_tws"), keys=["window_start", "key"]
-            )
-            q = (
-                df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", cfg.checkpoint("silence_tws"))
-                .outputMode("append")
-                .queryName("silence_tws")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        out = sink.read_merged(spark)
-        assert out.count() >= 0  # plumbing smoke; kernel parity above
-
-
-class TestTwsAnomaly:
-    """Round-5: the burst monitor's transformWithStateInPandas twin.
-    Kernel-vs-batch-operator parity runs everywhere; TWS plumbing is
-    gated on tws_available (as for sessionize/silence)."""
-
-    def test_kernel_matches_batch_operator(self, spark):
-        import datetime as dt
-
-        from spamscope_spark.operators import cep
-        from spamscope_spark.streaming import anomaly_kernel as ank
-
-        t0 = dt.datetime(2026, 2, 1)
-        counts = {
-            ("a", h): n
-            for h, n in enumerate([4, 6, 5, 7, 5, 6, 30, 5, 2, 40])
-        }
-        counts.update({("b", h): 5 for h in range(8)})  # zero variance
-        rows = [
-            (t0 + dt.timedelta(hours=h), k, n)
-            for (k, h), n in counts.items()
-        ]
-        cnt = spark.createDataFrame(
-            rows, "window_start timestamp, key string, n bigint"
-        )
-        batch = {
-            (r["key"], r["window_start"]): (
-                r["n"], r["n_prev"], r["mean_prev"], r["z_e4"],
-                bool(r["is_anomaly"]),
-            )
-            for r in cep.score_rate_windows(cnt, "key", 6)
-            .withColumn(
-                "is_anomaly",
-                F.coalesce(cep.anomaly_predicate(4, 2.0), F.lit(False)),
-            )
-            .collect()
-        }
-        b_us = 3600 * 1_000_000
-        t0_us = int(pd.Timestamp(t0).value // 1000)
-        got = {}
-        for k in ("a", "b"):
-            arrived = {
-                t0_us + h * b_us: n
-                for (kk, h), n in counts.items()
-                if kk == k
-            }
-            out, _ = ank.score_and_push(
-                ank.new_state(), arrived, 6, 4, 2.0
-            )
-            for w, n, m, mean_prev, z_e4, is_anom in out:
-                got[(k, pd.Timestamp(w, unit="us").to_pydatetime())] = (
-                    n, m, mean_prev, z_e4, is_anom
-                )
-        assert got == batch
-
-    def test_kernel_incremental_equals_oneshot_and_skips_replays(self):
-        from spamscope_spark.streaming import anomaly_kernel as ank
-
-        b = 3600 * 1_000_000
-        arrived = {h * b: n for h, n in enumerate([4, 6, 5, 7, 5, 6, 30])}
-        one, _ = ank.score_and_push(ank.new_state(), arrived, 6, 4, 2.0)
-        st = ank.new_state()
-        inc = []
-        for h in sorted(arrived):
-            out, st = ank.score_and_push(st, {h: arrived[h]}, 6, 4, 2.0)
-            inc.extend(out)
-        assert inc == one
-        # replaying an already-scored window emits nothing, state intact
-        out, st2 = ank.score_and_push(st, {0: 4}, 6, 4, 2.0)
-        assert out == [] and st2 == st
-
-    def test_tws_anomaly_end_to_end(self, spark, cfg):
-        from spamscope_spark.streaming.tws_sessionize import (
-            ROCKSDB_PROVIDER,
-            tws_available,
-        )
-
-        if not tws_available(spark):
-            pytest.skip("transformWithState / RocksDB state store unavailable")
-
-        from spamscope_spark.streaming.pipeline import read_turns_stream
-        from spamscope_spark.streaming.tws_anomaly import tws_anomaly
-
-        src = read_turns_stream(spark, cfg)
-        cnt = (
-            src.withWatermark("ts", cfg.watermark)
-            .groupBy(F.window("ts", "3600 seconds").alias("w"), F.col("role"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("w.start").alias("window_start"), "role", "n")
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        try:
-            df = tws_anomaly(cnt, key="role")
-            sink = IdempotentSink(
-                cfg.output("anomaly_tws"), keys=["window_start", "key"]
-            )
-            q = (
-                df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", cfg.checkpoint("anomaly_tws"))
-                .outputMode("append")
-                .queryName("anomaly_tws")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        assert sink.read_merged(spark).count() >= 0
-
-
 class TestDedupKernel:
-    """Round-5: the flag-dedup bucket kernel extracted for the TWS
-    twin — pure-pandas tests of ordering, cross-chunk first-occurrence,
+    """The flag-dedup bucket kernel behind flag_duplicates —
+    pure-pandas tests of ordering, cross-chunk first-occurrence,
     state carry, and eviction (the applyInPandasWithState path is
     pinned end-to-end by test_dedup_flag_state_spans_batches)."""
 
@@ -1394,41 +1097,3 @@ class TestDedupKernel:
 
         assert dk.evict(["a", "b", "c", "d"], 2) == ["c", "d"]
         assert dk.evict(["a"], 2) == ["a"]
-
-    def test_tws_dedup_end_to_end(self, spark, cfg):
-        from spamscope_spark.streaming.tws_sessionize import (
-            ROCKSDB_PROVIDER,
-            tws_available,
-        )
-
-        if not tws_available(spark):
-            pytest.skip("transformWithState / RocksDB state store unavailable")
-
-        from spamscope_spark.streaming.pipeline import read_turns_stream
-        from spamscope_spark.streaming.tws_dedup import tws_flag_duplicates
-        from spamscope_spark.operators.enrich import enrich_turns
-
-        src = enrich_turns(
-            read_turns_stream(spark, cfg).withWatermark("ts", cfg.watermark),
-            with_shingle=False,
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        try:
-            df = tws_flag_duplicates(src, key="sha1")
-            sink = IdempotentSink(
-                cfg.output("dedup_tws"), keys=["conv_id", "turn_idx"]
-            )
-            q = (
-                df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", cfg.checkpoint("dedup_tws"))
-                .outputMode("append")
-                .queryName("dedup_tws")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        finally:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        assert sink.read_merged(spark).count() >= 0
