@@ -31,17 +31,27 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 _M = 1_000_000
+_BIGINT_MAX = 2**63 - 1
 
 
 def round_ratio(p: Column, q: Column, digits: int = 6) -> Column:
     """round(p/q, digits) as DOUBLE, computed exactly from the
     rational. p >= 0, q > 0 integers (cast happens here); NULL in,
-    NULL out."""
+    NULL out.
+
+    The scaled numerator 2*p*10^digits + q must fit BIGINT. DuckDB's
+    twin raises when it does not, where non-ANSI Spark would wrap
+    silently; so this raises too, checked exactly in DECIMAL(38,0)."""
     m = 10 ** digits
     p64 = p.cast("bigint")
     q64 = q.cast("bigint")
-    scaled = F.floor((2 * p64 * m + q64) / (2 * q64)).cast("bigint")
-    return scaled.cast("double") / F.lit(float(m))
+    d38 = "decimal(38,0)"
+    overflow = p64.cast(d38) * F.lit(2 * m).cast(d38) + q64.cast(d38) > _BIGINT_MAX
+    # integral `div`, not `/`: a DOUBLE quotient is inexact once the
+    # numerator passes 2^53, long before the overflow bound
+    scaled = F.call_function("div", 2 * p64 * m + q64, 2 * q64)
+    error = F.raise_error(F.lit(f"round_ratio: 2*p*10^{digits} + q overflows BIGINT"))
+    return F.when(overflow, error).otherwise(scaled.cast("double") / F.lit(float(m)))
 
 
 def sql_round_ratio(p: str, q: str, digits: int = 6) -> str:

@@ -25,7 +25,8 @@ Scale notes (100 TB):
 
 Reference parity: the reference dedups by exact fuzzy-hash equality on
 a bounded LRU (src/bolts/tokenizer.py:176-196) — flag semantics live in
-streaming/dedup_state.py; these are the corpus-level batch forms a
+the per-epoch fold of streaming/dedup_state.py; these are the
+corpus-level batch forms a
 training pipeline runs over the accumulated store.
 """
 

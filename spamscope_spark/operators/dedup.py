@@ -5,8 +5,9 @@ embedding-cosine near-dup.
 All deterministic and engine-portable: hashing is md5-based (identical
 hex in Spark and DuckDB), so every operator here has an exact SQL twin
 for the oracle gate. The reference's dedup is a bounded-LRU *flag*
-filter (src/bolts/tokenizer.py:176-196); that streaming form lives in
-streaming/dedup_state.py — these are the corpus-level batch forms.
+filter (src/bolts/tokenizer.py:176-196); that streaming form is the
+per-epoch fold in streaming/dedup_state.py — these are the
+corpus-level batch forms.
 
 Scale notes (100 TB): every pairwise operator goes through an explode →
 hash-join on a short key (shingle / band bucket / simhash band), never

@@ -8,8 +8,9 @@ stream genuinely forces state (streaming layer).
 
 Works identically on batch DataFrames and streaming DataFrames except
 for the dedup flag: batch uses a window rank (deterministic first-seen
-by (ts, conv_id, turn_idx)); streaming uses keyed state
-(streaming/dedup_state.py) since window-over-unbounded isn't allowed.
+by (ts, conv_id, turn_idx)); a stream cannot rank over its unbounded
+input, so the enriched query applies the same rank per epoch in its
+foreachBatch against a seen-set snapshot (streaming/dedup_state.py).
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ evaluates, so streaming output rows equal the batch operator's rows for
 every end event at or below the final watermark (parity test in
 tests/test_streaming.py).
 
-Scale shape (same playbook as dedup_state.py / the session kernel):
+Scale shape (same playbook as the sessionizer, pipeline.py):
 state is keyed on pmod(xxhash64(key), n_buckets) — one Python
 invocation per BUCKET per batch, not per key — and rows are projected
 to (key, ts, id, cls) BEFORE the keyed shuffle, so only 4 short columns

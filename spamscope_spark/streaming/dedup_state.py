@@ -1,120 +1,137 @@
-"""Streaming flag-dedup with bounded keyed state.
+"""Streaming flag-dedup as a per-epoch fold inside foreachBatch.
 
 Reference semantics (src/bolts/tokenizer.py:81-97,176-196): a bounded
 LRU of seen fingerprints; a repeated text is NOT dropped — it is
-flagged `is_filtered=True` so downstream skips expensive work. State is
-persisted (the reference pickles deques each tick; Spark's state store
-checkpoints for free).
+flagged `is_filtered=True` so downstream skips expensive work.
 
-Implementation — scale-first: groupBy(BUCKET of fingerprint) +
-applyInPandasWithState, NOT groupBy(fingerprint). Keying state on the
-raw fingerprint means one Python invocation per distinct hash per
-batch (≈ one per row — mostly-unique crypto hashes), which serializes
-the whole stream through per-group overhead. Instead the key is
-`pmod(xxhash64(sha1), n_buckets)`: a fixed number of uniformly-loaded
-groups (crypto-hash input → no hot buckets), each processing its rows
-VECTORIZED (pandas isin/duplicated), with per-bucket seen-sets as the
-bounded-LRU state (the reference caps at 1e6 entries total; we cap
-per bucket at `max_per_bucket`, evicting oldest-first). An event-time
-TTL clears buckets idle past the watermark so availableNow/batch-drain
-runs terminate.
+The query stays stateless (no state store, no no-data batch, no Arrow
+round trip): the seen-set is a side sink with one snapshot per epoch,
+like the silence monitor's state sink. Epoch k reads the newest
+snapshot committed BELOW k, so a replay of k writes the same flags and
+snapshot. It drops rows at or behind the snapshot's watermark (Spark's
+late-row rule), flags a row whose sha1 is in the seen-set or is not
+the first of its sha1 in the epoch by (ts, conv_id, turn_idx) — the
+batch `with_dedup_flag` order — and builds the next snapshot from the
+written epoch's narrow columns.
 
-n_buckets trades parallelism against per-group overhead: it should be
-≥ shuffle parallelism (so all cores work) and ≪ distinct hashes per
-batch (so the vectorization pays). Measured (409k-turn fixture,
-local[1]): the applyInPandasWithState machinery costs ~12 ms per
-GROUP per batch regardless of group size, so 1024 buckets paid ~12 s
-of pure per-group overhead per batch where 256 pays a quarter of
-that; 256 × max_per_bucket(4096) ≈ 1.05M retained fingerprints, the
-reference's 1e6 cap almost exactly. Raise it for clusters with >256
-concurrently-scheduled state tasks. n_buckets is part of the
-CHECKPOINT CONTRACT: state keys are bucket ids, so changing it on a
-live checkpoint mis-routes lookups — pick per deployment, keep for
-the checkpoint's life.
+The seen-set is bounded per bucket `pmod(xxhash64(sha1), n_buckets)`:
+`max_per_bucket` entries, evicted oldest-first by (epoch, ts, conv_id,
+turn_idx) of the row that added them (256 × 4096 ≈ the reference's 1e6
+cap). A bucket that receives rows expires at max(its max ts + ttl,
+watermark + 1 s); a later epoch whose watermark has passed that drops
+the bucket before flagging. n_buckets is part of the snapshot contract.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+import os
+from collections.abc import Callable
 
-import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 
-from . import dedup_kernel as dk
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    StringType,
-    StructField,
-    StructType,
+from .sink import IdempotentSink
+
+_SEEN_SCHEMA = (
+    "bucket int, sha1 string, epoch long, ts timestamp, conv_id string, "
+    "turn_idx int, expires_ms long"
 )
+_SEEN_COLS = [c.split()[0] for c in _SEEN_SCHEMA.split(", ")]
 
-_BUCKET_COL = "_dedup_bucket"
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("seen", ArrayType(StringType())),
-    ]
+# the narrow columns of a written epoch the next snapshot is built from
+_WRITTEN_SCHEMA = (
+    "sha1 string, ts timestamp, conv_id string, turn_idx int, is_filtered boolean"
 )
+_FIRST = ["ts", "conv_id", "turn_idx"]
 
 
-def _out_schema(input_schema: StructType) -> StructType:
-    return StructType(
-        [f for f in input_schema.fields if f.name != _BUCKET_COL]
-        + [StructField("is_filtered", BooleanType())]
-    )
-
-
-def flag_duplicates(
-    df: DataFrame,
-    key: str = "sha1",
-    state_timeout_ms: int = 6 * 3600 * 1000,
+def dedup_fold(
+    sink: IdempotentSink,
+    seen_sink: IdempotentSink,
+    watermark: str,
+    ttl_ms: int,
+    prepare: Callable[[DataFrame], DataFrame] = lambda df: df,
     n_buckets: int = 256,
     max_per_bucket: int = 4096,
-) -> DataFrame:
-    """Streaming DataFrame → same rows + is_filtered flag. Requires an
-    upstream watermark on ts (for the event-time TTL).
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function that flags each epoch's rows and writes
+    them through `prepare` to `sink`, and the next seen-set snapshot to
+    `seen_sink`. `watermark` is the stream's delay ("4 hours"); rows
+    need sha1, ts, conv_id, turn_idx and may carry an is_filtered
+    placeholder, which is replaced. `prepare` must keep every column
+    (late rows are dropped after it)."""
+    bucket = F.pmod(F.xxhash64("sha1"), F.lit(n_buckets)).cast("int")
+    delayed_ms = F.unix_millis(F.col("ts") - F.expr(f"INTERVAL {watermark}"))
 
-    Within a microbatch, rows of one bucket are ordered by
-    (ts, conv_id, turn_idx); the globally-first occurrence of each
-    fingerprint keeps is_filtered=False — matching the batch
-    with_dedup_flag ordering. Total retained state ≈
-    n_buckets × max_per_bucket fingerprints (≈4M default, the
-    reference's 1e6-per-filter analog)."""
-    if "is_filtered" in df.columns:  # replace a placeholder flag column
-        df = df.drop("is_filtered")
-    out_schema = _out_schema(df.schema)
-    sort_cols = [c for c in ("ts", "conv_id", "turn_idx") if c in df.columns]
+    def process(batch_df: DataFrame, epoch: int) -> None:
+        spark = batch_df.sparkSession
+        entries = seen_sink.manifest_entries()
+        prior = max((e for e in entries if e < epoch), default=None)
+        if prior is None:  # Spark's first-batch watermark is 0 too
+            wm_ms, seen = 0, spark.createDataFrame([], _SEEN_SCHEMA)
+        else:
+            wm_ms = entries[prior]["watermark_ms"]
+            seen = spark.read.schema(_SEEN_SCHEMA).parquet(
+                os.path.join(seen_sink.data_dir, f"epoch={prior}")
+            ).where(F.col("expires_ms") >= wm_ms)
+        late = F.col("ts") <= F.timestamp_millis(F.lit(wm_ms))
 
-    def fn(
-        key_: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen: list[str] = list(state.get[0]) if state.exists else []
-        # vectorized kernel (dedup_kernel.py), testable without Spark
-        out, seen, max_ts_ms = dk.process_bucket(
-            seen, list(pdfs), key, sort_cols, drop_col=_BUCKET_COL
+        # Late rows ride along, ranked after every kept row of their
+        # sha1, to the last stage (after `prepare`, which may sort) and
+        # are observed and dropped there. Lower down, an all-late epoch
+        # lets AQE prune the observed stage once the shuffle above it
+        # comes out empty, and a sort's sampling job runs it twice.
+        rows = batch_df.drop("is_filtered")
+        first = Window.partitionBy("sha1").orderBy(late, *_FIRST)
+        late_obs, wm_obs = Observation(), Observation()
+        next_wm = F.greatest(F.max(delayed_ms), F.lit(wm_ms))
+        flagged = rows.join(
+            seen.select("sha1", F.lit(True).alias("_seen")), "sha1", "left"
+        ).select(
+            *rows.columns,
+            (F.col("_seen").isNotNull() | (F.row_number().over(first) > 1))
+            .alias("is_filtered"),
+            late.alias("_late"),
         )
-        if out is not None:
-            yield out
-        seen = dk.evict(seen, max_per_bucket)
-        state.update((seen,))
-        # event-time TTL: evict once the watermark passes last-seen + ttl
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(max_ts_ms + state_timeout_ms, wm + 1000))
+        out = (
+            prepare(flagged)
+            .observe(late_obs, F.count_if("_late").alias("late_rows"))
+            .observe(wm_obs, next_wm.alias("watermark_ms"))
+            .where(~F.col("_late"))
+            .drop("_late")
+        )
+        sink.observe_next(late_obs)
+        sink.process_batch(out, epoch)
 
-    bucketed = df.withColumn(
-        _BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-    )
-    return bucketed.groupBy(_BUCKET_COL).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+        # next snapshot, from the columns just written (not batch_df,
+        # whose plan would recompute the enrichment)
+        written = (
+            spark.read.schema(_WRITTEN_SCHEMA)
+            .parquet(os.path.join(sink.data_dir, f"epoch={epoch}"))
+            .withColumn("bucket", bucket)
+        )
+        expires = written.groupBy("bucket").agg(
+            F.greatest(
+                F.max(F.unix_millis("ts")) + F.lit(ttl_ms),
+                F.lit(wm_ms + 1000),
+            ).alias("_expires")
+        )
+        added = written.where(~F.col("is_filtered")).select(
+            "bucket", "sha1", F.lit(epoch).cast("long").alias("epoch"),
+            *_FIRST, F.lit(None).cast("long").alias("expires_ms"),
+        )
+        newest = Window.partitionBy("bucket").orderBy(
+            *[F.col(c).desc() for c in ("epoch", *_FIRST, "sha1")]
+        )
+        nxt = (
+            seen.unionByName(added)
+            .join(expires, "bucket", "left")
+            .withColumn("expires_ms", F.coalesce("_expires", "expires_ms"))
+            .withColumn("_age", F.row_number().over(newest))
+            .where(F.col("_age") <= max_per_bucket)
+            .select(*_SEEN_COLS)
+        )
+        # the output write has run, so wm_obs is complete
+        seen_sink.write_epoch(nxt, epoch, wm_obs)
+
+    return process

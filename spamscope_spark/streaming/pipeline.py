@@ -5,7 +5,8 @@
     → per-turn enrichment (URLs, keywords, bitmap score, fingerprints,
       shingle signature) — all vectorized, no per-row Python
     → watermark(ts)
-    → stateful flag-dedup on content fingerprint (bounded keyed state)
+    → flag-dedup on content fingerprint, folded per epoch in the sink's
+      foreachBatch against a bounded seen-set snapshot
     → session windows per conv_id (applyInPandasWithState sessionizer
       with event-time timeout — the reference's greedy buffers, bounded
       properly)
@@ -14,7 +15,8 @@
     → foreachBatch exactly-once sink (epoch-atomic parquet MERGE on
       (conv_id, turn_idx)), JSON-per-turn rows, per-partition lineage
 
-Every query checkpoints; a restart resumes from offsets + state.
+Every query checkpoints; a restart resumes from offsets + state (the
+enriched query's seen-set snapshots live beside its output).
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from pyspark.sql.types import (
 from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
 from ..schema import TURNS_SCHEMA
-from .dedup_state import flag_duplicates
+from .dedup_state import dedup_fold
 from .sink import IdempotentSink
 
 
@@ -68,7 +70,7 @@ class PipelineConfig:
     # Keyed-state backend: "hdfs" (default heap-HashMap provider — fine
     # while per-executor state fits the JVM heap) or "rocksdb"
     # (RocksDBStateStoreProvider + changelog checkpointing). At the
-    # 10^12-turn design point the dedup/session/join state exceeds
+    # 10^12-turn design point the session/join state exceeds
     # executor heap by orders of magnitude; RocksDB keeps it on local
     # SSD with bounded memory and checkpoints incrementally (changelog,
     # not full-snapshot — the knob that keeps commit time flat as state
@@ -154,7 +156,7 @@ def _session_input(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     stream in cascade mode, else enrichment derived from raw turns."""
     if cfg.enriched_source:
         return read_enriched_stream(spark, cfg)
-    return enriched_stream(spark, cfg, dedup_flag=False)
+    return enriched_stream(spark, cfg)
 
 
 def _sha1_turns(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
@@ -167,31 +169,13 @@ def _sha1_turns(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def enriched_stream(
-    spark: SparkSession, cfg: PipelineConfig, dedup_flag: bool = True
-) -> DataFrame:
-    """Stateful dedup flag FIRST (on the narrow raw turn), then
-    enrichment + lineage columns.
-
-    Flag-before-enrich is both the reference's dataflow (the tokenizer
-    flags duplicates so downstream bolts skip work, tokenizer.py:
-    176-196) and the scale-critical ordering: applyInPandasWithState
-    Arrow-serializes every byte of its input JVM→Python→JVM, so the
-    state op must see the ~200-byte raw turn + sha1, not the ~1.5 KB
-    enriched row (hashes, URL structs, json) — r2 profiling showed the
-    wide-row round-trip dominating the enriched stage's memory traffic.
-    The narrow map enrichment then runs downstream of the state op.
-
-    dedup_flag=False for consumers that add their own stateful operator
-    (Structured Streaming does not support chaining two
-    applyInPandasWithState ops in one query)."""
-    turns = _sha1_turns(spark, cfg)
-    if dedup_flag:
-        turns = flag_duplicates(
-            turns, key="sha1", state_timeout_ms=cfg.dedup_state_timeout_ms
-        )
+def enriched_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
+    """Watermarked raw turns → enrichment + lineage columns, stateless.
+    is_filtered is a False placeholder: the enriched query sets the
+    flag per epoch in its foreachBatch (start_enriched_query), and the
+    other consumers never read it."""
     enriched = enrich_turns(
-        turns,
+        _sha1_turns(spark, cfg),
         target_keys=cfg.target_keys,
         subject_keys=cfg.subject_keys,
         whitelist=cfg.whitelist,
@@ -208,10 +192,9 @@ def deduped_stream_builtin(spark: SparkSession, cfg: PipelineConfig) -> DataFram
     Semantics deviate from the reference's flag filter deliberately:
     duplicates are DROPPED (first arrival wins), not flagged — the
     right choice when downstream never wants duplicates at all (e.g. a
-    training-corpus sink), and the cheaper one: the flag path
-    (dedup_state.py) Arrow-ships every row through Python to preserve
-    the reference's flag-not-drop contract; this path keeps the whole
-    plan in whole-stage codegen. State eviction: a key older than the
+    training-corpus sink). The flag path (start_enriched_query) keeps
+    the reference's flag-not-drop contract with a seen-set snapshot it
+    folds per epoch. State eviction: a key older than the
     watermark is dropped from state, so re-arrivals beyond the
     watermark horizon are NOT deduped — same horizon contract as the
     stream-stream join."""
@@ -258,17 +241,18 @@ SESSION_OUT_SCHEMA = StructType(
 )
 
 # Per-BUCKET state: a pickled dict {conv_id: [12 counters, seen, sigs]}.
-# Keying state on a hash bucket of conv_id instead of conv_id itself is
-# the same scale move as dedup_state.py: one Python invocation + one
-# pandas column extraction per BUCKET per batch (amortized over its
-# conversations) instead of per conversation — measured ~12 ms of
-# applyInPandasWithState machinery per GROUP per batch regardless of
-# group size, which at 10^6+ live conversations would dominate the
-# stage. Buckets are uniform (hash of a high-cardinality key);
-# per-bucket state stays bounded by convs/bucket. Default 256 buckets
-# (see dedup_state.py for the measurement); like there, n_buckets is
-# part of the checkpoint contract — don't change it on a live
-# checkpoint.
+# Keying state on a hash bucket of conv_id instead of conv_id itself
+# means one Python invocation + one pandas column extraction per BUCKET
+# per batch (amortized over its conversations) instead of per
+# conversation. Measured (409k-turn fixture, local[1]): the
+# applyInPandasWithState machinery costs ~12 ms per GROUP per batch
+# regardless of group size, so 1024 groups paid ~12 s of pure per-group
+# overhead per batch where 256 pay a quarter of that; per conversation
+# it would dominate the stage at 10^6+ live conversations. Buckets are
+# uniform (hash of a high-cardinality key); per-bucket state stays
+# bounded by convs/bucket. n_buckets (default 256) should be ≥ the
+# shuffle parallelism and ≪ the groups per batch; it is part of the
+# checkpoint contract — don't change it on a live checkpoint.
 _SESSION_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 _SESS_BUCKET_COL = "_sess_bucket"
@@ -610,17 +594,31 @@ def _start(
 def start_enriched_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
-    """Primary output: enriched JSON-per-turn rows, exactly-once."""
-    df = with_json_row(enriched_stream(spark, cfg))
-    order = None
+    """Primary output: enriched JSON-per-turn rows, exactly-once, with
+    the duplicate flag folded per epoch in foreachBatch against the
+    seen-set snapshots of the `enriched_seen` side sink (dedup_fold).
+    The query itself is stateless: its checkpoint holds offsets only."""
+    df = enriched_stream(spark, cfg)
+    order = []
     if cfg.priority_order:
+        # PRIORITY-ORDERED INGESTION approximation (the reference spout's
+        # (priority, ctime) queue, src/spouts/files_mails.py:96-104):
+        # a range-partitioned sort orders rows within each epoch's part
+        # files, never across epochs (SURVEY §7 risk 6)
         pri = ["priority"] if "priority" in df.columns else []
         order = pri + ["ts", "conv_id", "turn_idx"]
-    sink = IdempotentSink(
-        cfg.output("enriched"), keys=["conv_id", "turn_idx"], order_by=order
+    sink = IdempotentSink(cfg.output("enriched"), keys=["conv_id", "turn_idx"])
+    seen_sink = IdempotentSink(cfg.output("enriched_seen"), keys=["sha1"])
+
+    def prepare(flagged: DataFrame) -> DataFrame:
+        out = with_json_row(flagged)
+        return out.orderBy(*order) if order else out
+
+    fold = dedup_fold(
+        sink, seen_sink, cfg.watermark, cfg.dedup_state_timeout_ms, prepare
     )
     return _start(
-        spark, cfg, df, "enriched", sink, available_now,
+        spark, cfg, df, "enriched", sink, available_now, batch_fn=fold,
         query_name="enriched_turns",
     )
 
@@ -650,7 +648,7 @@ def start_queue_query(
     from .queue_sink import QueueSink
 
     sink = QueueSink(cfg.output("queues"))
-    df = enriched_stream(spark, cfg, dedup_flag=False)
+    df = enriched_stream(spark, cfg)
     return _start(
         spark, cfg, df, "queues", sink, available_now,
         query_name="queue_sink",
@@ -683,7 +681,7 @@ def start_hot_enriched_query(
             target_keys=target_keys,
             subject_keys=subject_keys,
             whitelist=whitelist,
-            dedup_flag=False,  # keyed dedup state lives in the static query
+            dedup_flag=False,  # the static enriched query owns the flag
         )
         sink.process_batch(with_json_row(enriched), epoch)
 
@@ -772,7 +770,7 @@ def start_scd2_query(
     from .scd2_sink import Scd2DimSink, risk_tier
 
     sink = Scd2DimSink(cfg.output("scd2_dim"))
-    df = enriched_stream(spark, cfg, dedup_flag=False).select(
+    df = enriched_stream(spark, cfg).select(
         "conv_id",
         risk_tier().alias("risk_tier"),
         "ts",
@@ -1009,7 +1007,7 @@ def start_silence_query(
             )
         )
         untouched = st.join(extended.select(key), key, "left_anti")
-        state_sink.process_batch(extended.unionByName(untouched), epoch)
+        state_sink.write_epoch(extended.unionByName(untouched), epoch)
 
     return _start(
         spark, cfg, cnt, "silence", sink, available_now,

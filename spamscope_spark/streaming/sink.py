@@ -22,7 +22,7 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 
 def _parquet_num_rows(directory: str) -> int:
@@ -39,23 +39,14 @@ def _parquet_num_rows(directory: str) -> int:
 
 class IdempotentSink:
     """foreachBatch target writing epoch-atomic parquet with MERGE keys.
+    Rows are written in the order and partitioning they arrive in."""
 
-    `order_by` sorts each epoch's rows before writing — the
-    PRIORITY-ORDERED INGESTION approximation (the reference spout's
-    (priority, ctime) queue, src/spouts/files_mails.py:96-104).
-    Structured Streaming has no priority queue across batches
-    (documented gap, SURVEY §7 risk 6): ordering holds WITHIN each
-    microbatch (range-partitioned sort → part files in ascending
-    lexical order), not across batches."""
-
-    def __init__(
-        self, path: str, keys: list[str], order_by: list[str] | None = None
-    ):
+    def __init__(self, path: str, keys: list[str]):
         self.path = path
         self.keys = keys
-        self.order_by = order_by
         self.data_dir = os.path.join(path, "data")
         self.manifest = os.path.join(path, "_manifest.jsonl")
+        self._observation: Observation | None = None
         os.makedirs(self.data_dir, exist_ok=True)
         self._recover_interrupted_compaction()
 
@@ -95,22 +86,53 @@ class IdempotentSink:
 
     # -- commit log --------------------------------------------------------
 
-    def committed_epochs(self) -> set[int]:
-        if not os.path.exists(self.manifest):
-            return set()
-        with open(self.manifest) as f:
-            return {json.loads(line)["epoch"] for line in f if line.strip()}
+    def manifest_entries(self) -> dict[int, dict]:
+        """Manifest line per committed epoch (the last line wins when a
+        replayed epoch committed twice)."""
+        entries: dict[int, dict] = {}
+        if os.path.exists(self.manifest):
+            with open(self.manifest) as f:
+                for line in f:
+                    if line.strip():
+                        e = json.loads(line)
+                        entries[e["epoch"]] = e
+        return entries
 
-    def _commit(self, epoch: int, n_rows: int) -> None:
-        entry = json.dumps({"epoch": epoch, "rows": n_rows})
+    def committed_epochs(self) -> set[int]:
+        return set(self.manifest_entries())
+
+    def _commit(
+        self, epoch: int, n_rows: int, observation: Observation | None
+    ) -> None:
+        metrics = observation.get if observation is not None else {}
+        entry = json.dumps({"epoch": epoch, "rows": n_rows, **metrics})
         with open(self.manifest, "a") as f:
             f.write(entry + "\n")
 
     # -- foreachBatch ------------------------------------------------------
 
+    def observe_next(self, observation: Observation) -> None:
+        """Record `observation`'s metrics in the manifest line of the
+        next epoch `process_batch` commits. Attach the observation to
+        the DataFrame that epoch writes: `Observation.get` then returns
+        with the write's own job, so recording costs no extra job."""
+        self._observation = observation
+
     def process_batch(self, batch_df: DataFrame, epoch: int) -> None:
+        """foreachBatch target: `write_epoch`, with the metrics of an
+        `observe_next` observation in the manifest line."""
+        observation, self._observation = self._observation, None
+        self.write_epoch(batch_df, epoch, observation)
+
+    def write_epoch(
+        self, batch_df: DataFrame, epoch: int, observation: Observation | None = None
+    ) -> None:
         """Idempotent epoch write: ALWAYS overwrite the epoch directory,
-        then commit (manifest is last-wins per epoch).
+        then commit (manifest is last-wins per epoch). The manifest line
+        also holds the metrics of `observation`, read after the write.
+        State snapshots that a query writes beside its output call this
+        directly: `process_batch` is the per-query output write, the one
+        perfbench's sink layers count.
 
         Overwrite — not skip — is the correct exactly-once move: Spark
         re-delivers a batchId only when its own commit log lacks it, and
@@ -133,8 +155,6 @@ class IdempotentSink:
         for d in (staging, trash):
             if os.path.exists(d):
                 shutil.rmtree(d)
-        if self.order_by:
-            batch_df = batch_df.orderBy(*[F.col(c) for c in self.order_by])
         batch_df.write.mode("overwrite").parquet(staging)
         # row count for the manifest comes from the WRITTEN files'
         # parquet FOOTERS, read driver-side via pyarrow (~ms) — counting
@@ -148,7 +168,7 @@ class IdempotentSink:
         os.rename(staging, epoch_dir)
         if os.path.exists(trash):
             shutil.rmtree(trash)
-        self._commit(epoch, n)
+        self._commit(epoch, n, observation)
 
     def __call__(self, batch_df: DataFrame, epoch: int) -> None:
         self.process_batch(batch_df, epoch)
@@ -187,13 +207,7 @@ class IdempotentSink:
         and this raises ValueError rather than silently returning a
         partial view."""
         self._recover_interrupted_compaction()
-        entries: dict[int, dict] = {}
-        if os.path.exists(self.manifest):
-            with open(self.manifest) as f:
-                for line in f:
-                    if line.strip():
-                        e = json.loads(line)
-                        entries[e["epoch"]] = e
+        entries = self.manifest_entries()
         for e in entries.values():
             if e["epoch"] > epoch and e.get("compacted_min", e["epoch"]) <= epoch:
                 raise ValueError(
@@ -256,13 +270,7 @@ class IdempotentSink:
         for the compacted epoch recording `compacted_from`, tail
         entries preserved."""
         self._recover_interrupted_compaction()
-        entries: dict[int, dict] = {}
-        if os.path.exists(self.manifest):
-            with open(self.manifest) as f:
-                for line in f:
-                    if line.strip():
-                        e = json.loads(line)
-                        entries[e["epoch"]] = e  # last-wins per epoch
+        entries = self.manifest_entries()
         committed = sorted(entries)
         # keep_last >= len(committed) keeps everything (a negative slice
         # index would wrap around and compact epochs it was told to keep)

@@ -159,3 +159,45 @@ class TestUnitQuantizersCrossEngine:
         ]
         assert [h for h, _ in out] == [1_000_000] * 3
         assert len({f for _, f in out}) > 1  # floor DOES split here
+
+
+class TestRoundRatioOverflow:
+    """2*p*10^digits + q must fit BIGINT: DuckDB's twin raises past
+    that bound, and the Spark form must raise too, not wrap."""
+
+    Q = 7
+
+    def _bound(self, digits: int) -> int:
+        # largest p with 2*p*10^digits + Q <= 2^63 - 1
+        return (2**63 - 1 - self.Q) // (2 * 10**digits)
+
+    @pytest.mark.parametrize("digits", [4, 6])
+    def test_at_bound_matches_oracle_on_both_engines(self, spark, digits):
+        p = self._bound(digits)
+        df = spark.createDataFrame([(p, self.Q)], "p long, q long")
+        got = df.select(
+            exact.round_ratio(F.col("p"), F.col("q"), digits)
+        ).first()[0]
+        duck = duckdb.execute(
+            f"SELECT {exact.sql_round_ratio(str(p), str(self.Q), digits)}"
+        ).fetchone()[0]
+        m = 10**digits
+        assert got == duck == float((2 * p * m + self.Q) // (2 * self.Q)) / m
+
+    @pytest.mark.parametrize("digits", [4, 6])
+    def test_past_bound_raises_on_both_engines(self, spark, digits):
+        p = self._bound(digits) + 1
+        df = spark.createDataFrame([(p, self.Q)], "p long, q long")
+        with pytest.raises(Exception, match="overflows BIGINT"):
+            df.select(
+                exact.round_ratio(F.col("p"), F.col("q"), digits)
+            ).collect()
+        with pytest.raises(duckdb.OutOfRangeException):
+            duckdb.execute(
+                f"SELECT {exact.sql_round_ratio(str(p), str(self.Q), digits)}"
+            ).fetchone()
+
+    def test_null_in_null_out(self, spark):
+        df = spark.createDataFrame([(None, 3), (4, None)], "p long, q long")
+        got = df.select(exact.round_ratio(F.col("p"), F.col("q"))).collect()
+        assert [r[0] for r in got] == [None, None]

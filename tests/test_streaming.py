@@ -175,6 +175,71 @@ class TestEnrichedStream:
         query4, sink4 = start_enriched_query(spark, cfg)
         query4.awaitTermination(300)
         assert sink4.read_merged(spark).count() == n1 + n_extra
+        # ... and the drop is counted in that epoch's manifest line
+        last = max(sink4.committed_epochs())
+        assert sink4.manifest_entries()[last]["late_rows"] == stale.count() > 0
+
+    def test_dedup_flag_matches_batch_oracle(self, spark, cfg):
+        """One-epoch drain: the streaming flag equals the batch
+        with_dedup_flag window rank on every (conv_id, turn_idx)."""
+        from spamscope_spark.operators.enrich import with_dedup_flag
+
+        query, sink = start_enriched_query(spark, cfg)
+        query.awaitTermination(300)
+        assert sink.committed_epochs() == {0}
+        got = {
+            (r["conv_id"], r["turn_idx"]): r["is_filtered"]
+            for r in sink.read_merged(spark).collect()
+        }
+        raw = spark.read.parquet(cfg.input_path).withColumn(
+            "sha1", F.sha1(F.coalesce(F.col("text"), F.lit("")))
+        )
+        exp = {
+            (r["conv_id"], r["turn_idx"]): r["is_filtered"]
+            for r in with_dedup_flag(raw).collect()
+        }
+        assert got == exp and any(exp.values())
+
+    def test_query_is_stateless_with_no_empty_batch(self, spark, cfg):
+        """The flag is folded in foreachBatch: the enriched query has no
+        state operator and runs no no-data batch."""
+        cfg.max_files_per_trigger = 1  # several data batches
+        query, _sink = start_enriched_query(spark, cfg)
+        query.awaitTermination(300)
+        progress = query.recentProgress
+        assert len(progress) == 2
+        assert all(p.stateOperators == [] for p in progress)
+        assert all(p.numInputRows > 0 for p in progress)
+
+    def test_late_row_boundary_is_the_watermark(self, spark, turns_input, tmp_path):
+        """Rows at the carried watermark (max ts - delay) are dropped as
+        late; a row one second past it is kept."""
+        import shutil
+
+        inp = str(tmp_path / "in")
+        shutil.copytree(turns_input, inp)
+        cfg = PipelineConfig(input_path=inp, work_dir=str(tmp_path / "w"))
+        query, sink = start_enriched_query(spark, cfg)
+        query.awaitTermination(300)
+        raw = spark.read.parquet(inp)
+        wm = raw.agg(F.max("ts")).first()[0] - pd.Timedelta(hours=4)
+        edge = (
+            raw.limit(3)
+            .withColumn("conv_id", F.lit("edge"))
+            .withColumn("turn_idx", F.monotonically_increasing_id().cast("int"))
+            .withColumn(
+                "ts",
+                F.when(F.col("turn_idx") == 0, F.lit(wm))
+                .when(F.col("turn_idx") == 1, F.lit(wm + pd.Timedelta(seconds=1)))
+                .otherwise(F.lit(wm - pd.Timedelta(seconds=1))),
+            )
+        )
+        assert sorted(r["turn_idx"] for r in edge.collect()) == [0, 1, 2]
+        edge.coalesce(1).write.mode("append").parquet(inp)
+        query, sink = start_enriched_query(spark, cfg)
+        query.awaitTermination(300)
+        kept = sink.read_merged(spark).where(F.col("conv_id") == "edge")
+        assert [r["turn_idx"] for r in kept.collect()] == [1]
 
     def test_dedup_flag_state_spans_batches(self, spark, cfg):
         cfg.max_files_per_trigger = 1  # force multiple microbatches
@@ -710,7 +775,9 @@ class TestRocksDBStateStore:
 
     def test_rocksdb_checkpoint_resume_is_incremental(self, spark, turns_input, tmp_path):
         """A restart over a RocksDB checkpoint must resume (not recount):
-        appending new input and re-running adds only the new rows."""
+        appending new input and re-running adds only the new rows. The
+        tool-pair join keeps keyed state on both sides, so the restart
+        reloads a RocksDB state store."""
         cfg = PipelineConfig(
             input_path=str(tmp_path / "in"),
             work_dir=str(tmp_path / "wd"),
@@ -718,21 +785,29 @@ class TestRocksDBStateStore:
         )
         first = spark.read.parquet(turns_input)
         first.coalesce(1).write.mode("append").parquet(cfg.input_path)
-        q, sink = start_enriched_query(spark, cfg)
+        q, sink = start_join_query(spark, cfg)
         q.awaitTermination(300)
         n1 = sink.read_merged(spark).count()
+        assert n1 > 0
         # event times AHEAD of the checkpointed watermark (behind-the-
         # watermark rows are dropped as late by design — see
-        # test_restart_resumes_and_new_rows_append)
+        # test_exactly_once_on_restart_and_incremental): the same
+        # conversations shifted 30 days, so exactly n1 new pairs
         extra = (
-            first.limit(40)
-            .withColumn("conv_id", F.concat(F.lit("late_"), F.col("conv_id")))
+            first.withColumn("conv_id", F.concat(F.lit("late_"), F.col("conv_id")))
             .withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
         )
         extra.coalesce(1).write.mode("append").parquet(cfg.input_path)
-        q, sink = start_enriched_query(spark, cfg)
+        q, sink = start_join_query(spark, cfg)
         q.awaitTermination(300)
-        assert sink.read_merged(spark).count() == n1 + 40
+        assert sink.read_merged(spark).count() == 2 * n1
+        # the restart read only the appended file (the self-join scans
+        # the one turns source once per side, and both scans count)
+        assert sum(p.numInputRows for p in q.recentProgress) == 2 * extra.count()
+        ops = [s for p in q.recentProgress for s in p.stateOperators]
+        assert ops and all(
+            any(k.startswith("rocksdb") for k in s.customMetrics) for s in ops
+        )
 
 
 class TestDedupBuiltin:
@@ -1051,49 +1126,132 @@ class TestWindowedLinreg:
             assert exp[k] == v, k
 
 
-class TestDedupKernel:
-    """The flag-dedup bucket kernel behind flag_duplicates —
-    pure-pandas tests of ordering, cross-chunk first-occurrence,
-    state carry, and eviction (the applyInPandasWithState path is
-    pinned end-to-end by test_dedup_flag_state_spans_batches)."""
+class TestDedupFold:
+    """The enriched query's per-epoch dedup fold (dedup_state.dedup_fold)
+    called directly on static DataFrames, one call per epoch, with the
+    output and seen-set sinks under tmp_path."""
 
-    def _pdf(self, rows):
-        return pd.DataFrame(rows, columns=["ts", "conv_id", "turn_idx", "sha1"])
+    T0 = pd.Timestamp("2026-03-01 00:00:00")
 
-    def test_first_occurrence_across_chunks_and_state(self):
-        from spamscope_spark.streaming import dedup_kernel as dk
+    def _fold(self, tmp_path, watermark="4 hours", ttl_ms=6 * 3600 * 1000, **kw):
+        from spamscope_spark.streaming.dedup_state import dedup_fold
 
-        t = pd.Timestamp("2026-03-01")
-        c1 = self._pdf([(t, "a", 0, "h1"), (t, "a", 1, "h2")])
-        c2 = self._pdf([(t, "a", 2, "h1"), (t, "b", 0, "h3")])
-        out, seen, _ = dk.process_bucket([], [c1, c2], "sha1",
-                                         ["ts", "conv_id", "turn_idx"])
-        got = dict(zip(out["sha1"] + out["turn_idx"].astype(str),
-                       out["is_filtered"]))
-        assert got == {"h10": False, "h21": False, "h12": True, "h30": False}
-        assert seen == ["h1", "h2", "h3"]
-        # state carries: h1 in a later batch is flagged immediately
-        out2, seen2, _ = dk.process_bucket(
-            seen, [self._pdf([(t, "c", 0, "h1"), (t, "c", 1, "h4")])],
-            "sha1", ["ts", "conv_id", "turn_idx"],
+        sink = IdempotentSink(str(tmp_path / "out"), keys=["conv_id", "turn_idx"])
+        seen = IdempotentSink(str(tmp_path / "seen"), keys=["sha1"])
+        return dedup_fold(sink, seen, watermark, ttl_ms, **kw), sink, seen
+
+    def _batch(self, spark, rows):
+        """rows: (conv_id, turn_idx, hours after T0, sha1)"""
+        return spark.createDataFrame(
+            [
+                (c, i, (self.T0 + pd.Timedelta(hours=h)).to_pydatetime(), s, False)
+                for c, i, h, s in rows
+            ],
+            "conv_id string, turn_idx int, ts timestamp, sha1 string, "
+            "is_filtered boolean",
         )
-        assert list(out2["is_filtered"]) == [True, False]
-        assert seen2 == ["h1", "h2", "h3", "h4"]
 
-    def test_sort_order_decides_the_unflagged_copy(self):
-        from spamscope_spark.streaming import dedup_kernel as dk
+    def _flags(self, spark, sink, epoch):
+        df = spark.read.parquet(os.path.join(sink.data_dir, f"epoch={epoch}"))
+        return {(r["conv_id"], r["turn_idx"]): r["is_filtered"] for r in df.collect()}
 
-        t0 = pd.Timestamp("2026-03-01")
-        t1 = pd.Timestamp("2026-03-02")
-        # later row delivered first in the chunk; the EARLIER ts must win
-        pdf = self._pdf([(t1, "a", 0, "h"), (t0, "b", 0, "h")])
-        out, _, _ = dk.process_bucket([], [pdf], "sha1",
-                                      ["ts", "conv_id", "turn_idx"])
-        by_conv = dict(zip(out["conv_id"], out["is_filtered"]))
-        assert by_conv == {"b": False, "a": True}
+    def _snapshot(self, spark, seen, epoch):
+        df = spark.read.parquet(os.path.join(seen.data_dir, f"epoch={epoch}"))
+        return sorted(tuple(r) for r in df.collect())
 
-    def test_eviction_oldest_first(self):
-        from spamscope_spark.streaming import dedup_kernel as dk
+    def test_first_occurrence_in_epoch_by_event_order(self, spark, tmp_path):
+        fold, sink, _ = self._fold(tmp_path)
+        # the later "h" is delivered first: the EARLIER ts keeps the
+        # flag clear; equal ts falls back to conv_id, then turn_idx
+        fold(self._batch(spark, [
+            ("a", 0, 2, "h"), ("b", 0, 1, "h"), ("a", 1, 1, "g"),
+            ("c", 1, 3, "k"), ("c", 0, 3, "k"), ("d", 0, 3, "k"),
+        ]), 0)
+        assert self._flags(spark, sink, 0) == {
+            ("a", 0): True, ("b", 0): False, ("a", 1): False,
+            ("c", 0): False, ("c", 1): True, ("d", 0): True,
+        }
 
-        assert dk.evict(["a", "b", "c", "d"], 2) == ["c", "d"]
-        assert dk.evict(["a"], 2) == ["a"]
+    def test_seen_set_carries_to_later_epoch(self, spark, tmp_path):
+        fold, sink, seen = self._fold(tmp_path)
+        fold(self._batch(spark, [("a", 0, 0, "h1"), ("a", 1, 1, "h2")]), 0)
+        fold(self._batch(spark, [("b", 0, 2, "h1"), ("b", 1, 2, "h3")]), 1)
+        assert self._flags(spark, sink, 1) == {("b", 0): True, ("b", 1): False}
+        # h1 keeps the row that added it (epoch 0), h3 joins at epoch 1
+        snap = {r[1]: (r[2], r[4], r[5]) for r in self._snapshot(spark, seen, 1)}
+        assert snap == {"h1": (0, "a", 0), "h2": (0, "a", 1), "h3": (1, "b", 1)}
+
+    def test_replayed_epoch_gives_same_flags_and_snapshot(self, spark, tmp_path):
+        fold, sink, seen = self._fold(tmp_path)
+        b0 = self._batch(spark, [("a", 0, 0, "h1"), ("a", 1, 1, "h2")])
+        b1 = self._batch(spark, [("b", 0, 2, "h1"), ("b", 1, 2, "h3"),
+                                 ("b", 2, 3, "h3")])
+        fold(b0, 0)
+        fold(b1, 1)
+        flags, snap = self._flags(spark, sink, 1), self._snapshot(spark, seen, 1)
+        manifests = (sink.manifest_entries(), seen.manifest_entries())
+        # a replay of epoch 1 must fold into snapshot 0, not its own
+        # snapshot 1 (which already holds h3)
+        fold(b1, 1)
+        assert self._flags(spark, sink, 1) == flags == {
+            ("b", 0): True, ("b", 1): False, ("b", 2): True,
+        }
+        assert self._snapshot(spark, seen, 1) == snap
+        assert (sink.manifest_entries(), seen.manifest_entries()) == manifests
+
+    def test_bucket_cap_evicts_oldest_first(self, spark, tmp_path):
+        fold, sink, seen = self._fold(tmp_path, n_buckets=1, max_per_bucket=2)
+        # epoch 0 adds hb (older ts) and ha; epoch 1 adds hc, which
+        # evicts the oldest entry by (epoch, ts): hb
+        fold(self._batch(spark, [("a", 0, 2, "ha"), ("b", 0, 1, "hb")]), 0)
+        fold(self._batch(spark, [("c", 0, 3, "hc")]), 1)
+        assert [r[1] for r in self._snapshot(spark, seen, 1)] == ["ha", "hc"]
+        fold(self._batch(spark, [("d", 0, 4, "hb"), ("d", 1, 4, "ha")]), 2)
+        assert self._flags(spark, sink, 2) == {("d", 0): False, ("d", 1): True}
+
+    def test_bucket_ttl_expires_idle_bucket(self, spark, tmp_path):
+        buckets = {
+            r["b"]: r["s"]
+            for r in spark.range(20)
+            .select(F.concat(F.lit("h"), F.col("id").cast("string")).alias("s"))
+            .select("s", F.pmod(F.xxhash64("s"), F.lit(2)).alias("b"))
+            .collect()
+        }
+        idle, busy = buckets[0], buckets[1]
+        fold, sink, _ = self._fold(
+            tmp_path, watermark="1 hour", ttl_ms=3600 * 1000, n_buckets=2
+        )
+        # idle's bucket expires at T0+1h; busy's is refreshed at T0+5h
+        # (to T0+6h). Epoch 2 runs at watermark T0+4h.
+        fold(self._batch(spark, [("a", 0, 0, idle)]), 0)
+        fold(self._batch(spark, [("b", 0, 5, busy)]), 1)
+        fold(self._batch(spark, [("c", 0, 5, idle), ("c", 1, 5, busy)]), 2)
+        assert self._flags(spark, sink, 2) == {("c", 0): False, ("c", 1): True}
+
+    def test_late_rows_dropped_and_counted(self, spark, tmp_path):
+        fold, sink, seen = self._fold(tmp_path, watermark="4 hours")
+        fold(self._batch(spark, [("a", 0, 10, "h1")]), 0)
+        assert seen.manifest_entries()[0]["watermark_ms"] == int(
+            (self.T0 + pd.Timedelta(hours=6)).timestamp() * 1000
+        )
+        # at the watermark (T0+6h) is late, one second past it is not
+        fold(self._batch(spark, [
+            ("b", 0, 6, "h2"), ("b", 1, 6 + 1 / 3600, "h3"), ("b", 2, 1, "h1"),
+        ]), 1)
+        assert self._flags(spark, sink, 1) == {("b", 1): False}
+        assert sink.manifest_entries()[1]["late_rows"] == 2
+        # an all-late epoch writes nothing and still counts its drops
+        fold(self._batch(spark, [("c", 0, 1, "h4"), ("c", 1, 2, "h5")]), 2)
+        assert self._flags(spark, sink, 2) == {}
+        assert sink.manifest_entries()[2]["late_rows"] == 2
+
+    def test_late_rows_counted_once_when_prepare_sorts(self, spark, tmp_path):
+        # a global sort samples its input in a job of its own
+        fold, sink, _ = self._fold(tmp_path, prepare=lambda df: df.orderBy("ts"))
+        fold(self._batch(spark, [("a", i, 10 + i, f"h{i}") for i in range(3)]), 0)
+        fold(self._batch(spark, [("b", i, i, f"h{i}") for i in range(5)]
+                         + [("c", 0, 20, "h9")]), 1)
+        assert self._flags(spark, sink, 1) == {("c", 0): False}
+        assert sink.manifest_entries()[1]["late_rows"] == 5
+
+
