@@ -24,7 +24,6 @@ the bucket before flagging. n_buckets is part of the snapshot contract.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -65,15 +64,15 @@ def dedup_fold(
 
     def process(batch_df: DataFrame, epoch: int) -> None:
         spark = batch_df.sparkSession
-        entries = seen_sink.manifest_entries()
-        prior = max((e for e in entries if e < epoch), default=None)
+        prior = seen_sink.last_committed(before=epoch)
         if prior is None:  # Spark's first-batch watermark is 0 too
             wm_ms, seen = 0, spark.createDataFrame([], _SEEN_SCHEMA)
         else:
-            wm_ms = entries[prior]["watermark_ms"]
-            seen = spark.read.schema(_SEEN_SCHEMA).parquet(
-                os.path.join(seen_sink.data_dir, f"epoch={prior}")
-            ).where(F.col("expires_ms") >= wm_ms)
+            k, entry = prior
+            wm_ms = entry["watermark_ms"]
+            seen = seen_sink.read_epoch(spark, k, _SEEN_SCHEMA).where(
+                F.col("expires_ms") >= wm_ms
+            )
         late = F.col("ts") <= F.timestamp_millis(F.lit(wm_ms))
 
         # Late rows ride along, ranked after every kept row of their
@@ -105,10 +104,8 @@ def dedup_fold(
 
         # next snapshot, from the columns just written (not batch_df,
         # whose plan would recompute the enrichment)
-        written = (
-            spark.read.schema(_WRITTEN_SCHEMA)
-            .parquet(os.path.join(sink.data_dir, f"epoch={epoch}"))
-            .withColumn("bucket", bucket)
+        written = sink.read_epoch(spark, epoch, _WRITTEN_SCHEMA).withColumn(
+            "bucket", bucket
         )
         expires = written.groupBy("bucket").agg(
             F.greatest(

@@ -23,8 +23,8 @@ class MetricsListener(StreamingQueryListener):
     records them elsewhere: the enriched query (`enriched_turns`) drops
     them in its foreachBatch dedup fold and writes the count as
     `late_rows` in each epoch's line of its sink manifest
-    (`out/enriched/_manifest.jsonl`); its `late_rows_dropped` here
-    stays 0."""
+    (`IdempotentSink.manifest_entries()` of `out/enriched`); its
+    `late_rows_dropped` here stays 0."""
 
     def __init__(self):
         self.progress: dict[str, list[dict]] = defaultdict(list)

@@ -44,7 +44,7 @@ from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
 from ..schema import TURNS_SCHEMA
 from .dedup_state import dedup_fold
-from .sink import IdempotentSink
+from .sink import IdempotentSink, epochs_glob
 
 
 @dataclass
@@ -143,10 +143,9 @@ def read_enriched_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     from ..config import ensure_py_files
 
     ensure_py_files(spark)
-    path = os.path.join(cfg.enriched_source, "data", "epoch=*")
     return (
         spark.readStream.schema(_ENRICHED_MIN_SCHEMA)
-        .parquet(path)
+        .parquet(epochs_glob(cfg.enriched_source))
         .withWatermark("ts", cfg.watermark)
     )
 
@@ -643,8 +642,8 @@ def start_queue_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
     """OutputRedis-analog sink: enriched rows RPUSH'd (epoch-atomic
-    JSONL segments) to the turns queue, tool invocations promoted to
-    the tool_calls queue (streaming/queue_sink.py)."""
+    JSON-message segments) to the turns queue, tool invocations
+    promoted to the tool_calls queue (streaming/queue_sink.py)."""
     from .queue_sink import QueueSink
 
     sink = QueueSink(cfg.output("queues"))
@@ -892,13 +891,12 @@ def start_silence_query(
     (src/spouts/files_mails.py:72-79), a per-item timeout this
     operator generalizes to per-key timeline gaps.
 
-    BOUNDED STATE (r4): extending a key's timeline needs only
+    BOUNDED STATE: extending a key's timeline needs only
     (last_active, last_emitted) per key — not the sink's full history.
-    Each epoch persists one |keys|-row state snapshot beside the
-    output; per-batch cost is O(|keys| + new windows), constant in
-    stream lifetime (the r3 form re-read the whole sink and
-    re-densified every key's full timeline each epoch — O(T^2)
-    cumulative over a long-lived monitor)."""
+    Each epoch persists one complete |keys|-row state snapshot beside
+    the output (untouched keys pass through), and the next epoch reads
+    only the newest one (`last_committed` + `read_epoch`), so per-batch
+    cost is O(|keys| + new windows), constant in stream lifetime."""
     sink = IdempotentSink(cfg.output("silence"), keys=["window_start", key])
     state_sink = IdempotentSink(cfg.output("silence_state"), keys=[key])
     cnt = _key_window_counts(spark, cfg, key, bucket_s)
@@ -906,17 +904,17 @@ def start_silence_query(
 
     def process(batch_df: DataFrame, epoch: int) -> None:
         fresh = batch_df.select("window_start", key, "n")
-        # State comes from epochs STRICTLY BEFORE this one (read_asof):
-        # on a crash-replay of epoch E the state sink may already hold
-        # E's own snapshot, and resuming from it would start the
-        # timeline after the replayed windows. Excluding E makes the
-        # replay recompute the identical rows (the extension is
-        # deterministic over closed windows) and overwrite E with the
-        # same content — exactly-once by convergence, the same property
+        # State is the newest snapshot STRICTLY BEFORE this epoch: on a
+        # crash-replay of epoch E the state sink may already hold E's
+        # own snapshot, and resuming from it would start the timeline
+        # after the replayed windows. Excluding E makes the replay
+        # recompute the identical rows (the extension is deterministic
+        # over closed windows) and overwrite E with the same content —
+        # exactly-once by convergence, the same property
         # process_batch's always-overwrite contract assumes.
-        prior = sorted(e for e in state_sink.committed_epochs() if e < epoch)
+        prior = state_sink.last_committed(before=epoch)
         if prior:
-            st = state_sink.read_asof(spark, prior[-1]).select(
+            st = state_sink.read_epoch(spark, prior[0]).select(
                 key, "last_active", "last_emitted"
             )
         else:

@@ -7,51 +7,47 @@ src/modules/utils.py:269-372: attachment records are promoted to their
 own queue entries carrying the parent mail's ids), flushing every
 `flush_size` docs or tick.
 
-Engine recast: a foreachBatch sink appending epoch-atomic JSONL
-segments to named queue directories — the microbatch IS the flush
-batch; a consumer drains committed epochs in order (the queue
-contract); a replayed epoch overwrites its own segment (exactly-once,
-same protocol as IdempotentSink). The split: every enriched turn goes
-to the `turns` queue; tool-invocation rows are PROMOTED to a
-`tool_calls` queue entry keyed by the parent (conv_id, turn_idx) — the
-mail/attachment split. No driver-side collect: segments are written by
-executors (`df.write.text`), only the rename + manifest append run on
-the driver.
+Engine recast: a foreachBatch sink appending one epoch-atomic segment
+per queue and microbatch — the microbatch IS the flush batch; a
+consumer drains committed epochs in order (the queue contract); a
+replayed epoch overwrites its own segment (exactly-once). Each queue is
+an `IdempotentSink` whose rows are the messages: parquet with one
+`value` string column, the JSON message byte for byte, so segment row
+counts come from the parquet footers. The split: every enriched turn
+goes to the `turns` queue as its canonical `json` row (`with_json_row`,
+the enriched sink's serialization); tool-invocation rows are PROMOTED
+to a `tool_calls` queue entry keyed by the parent (conv_id, turn_idx)
+— the mail/attachment split. No driver-side collect: segments are
+written by executors, only the rename + manifest append run on the
+driver.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .pipeline import with_json_row
+from .sink import IdempotentSink, epochs_glob
+
 
 class QueueSink:
-    """foreachBatch target: JSON-lines queues with epoch-atomic segments."""
+    """foreachBatch target: JSON-message queues, one `IdempotentSink`
+    of epoch-atomic segments per queue."""
 
     def __init__(self, path: str, queues: tuple[str, ...] = ("turns", "tool_calls")):
         self.path = path
         self.queues = queues
-        for q in queues:
-            os.makedirs(os.path.join(path, q), exist_ok=True)
-        self.manifest = os.path.join(path, "_manifest.jsonl")
-
-    def committed_epochs(self) -> set[int]:
-        if not os.path.exists(self.manifest):
-            return set()
-        with open(self.manifest) as f:
-            return {json.loads(line)["epoch"] for line in f if line.strip()}
+        self._sinks = {
+            q: IdempotentSink(os.path.join(path, q), keys=["value"]) for q in queues
+        }
 
     def _split(self, batch_df: DataFrame) -> dict[str, DataFrame]:
         """reformat_output analog: full rows → turns queue; tool
         invocations promoted with parent keys → tool_calls queue."""
-        cols = [c for c in batch_df.columns if not c.startswith("_")]
-        turns = batch_df.select(
-            F.to_json(F.struct(*[F.col(c) for c in sorted(cols)])).alias("value")
-        )
+        turns = with_json_row(batch_df).select(F.col("json").alias("value"))
         promoted = batch_df.where(F.col("tool").isNotNull()).select(
             F.to_json(
                 F.struct(
@@ -67,26 +63,8 @@ class QueueSink:
 
     def process_batch(self, batch_df: DataFrame, epoch: int) -> None:
         parts = self._split(batch_df)
-        n_rows: dict[str, int] = {}
-        for q in self.queues:
-            df = parts[q]
-            seg = os.path.join(self.path, q, f"epoch={epoch}")
-            staging = os.path.join(self.path, q, f"_staging_{epoch}")
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            df.write.mode("overwrite").text(staging)
-            n_rows[q] = df.sparkSession.read.text(staging).count()
-            if os.path.exists(seg):  # replay: swap atomically
-                trash = os.path.join(self.path, q, f"_trash_{epoch}")
-                if os.path.exists(trash):
-                    shutil.rmtree(trash)
-                os.rename(seg, trash)
-                os.rename(staging, seg)
-                shutil.rmtree(trash)
-            else:
-                os.rename(staging, seg)
-        with open(self.manifest, "a") as f:
-            f.write(json.dumps({"epoch": epoch, "rows": n_rows}) + "\n")
+        for q, sink in self._sinks.items():
+            sink.process_batch(parts[q], epoch)
 
     def __call__(self, batch_df: DataFrame, epoch: int) -> None:
         self.process_batch(batch_df, epoch)
@@ -94,10 +72,7 @@ class QueueSink:
     def read_queue(self, spark: SparkSession, queue: str) -> DataFrame:
         """Committed entries, one JSON string per row (the consumer's
         LRANGE view); epoch column for drain ordering."""
-        return (
-            spark.read.option("basePath", os.path.join(self.path, queue))
-            .text(os.path.join(self.path, queue, "epoch=*"))
-        )
+        return self._sinks[queue].read_raw(spark)
 
 
 TOOL_CALLS_SCHEMA = (
@@ -130,7 +105,7 @@ def read_queue_stream(
     raw = spark.readStream
     if max_files_per_trigger is not None:
         raw = raw.option("maxFilesPerTrigger", max_files_per_trigger)
-    out = raw.text(os.path.join(path, queue, "epoch=*"))
+    out = raw.schema("value string").parquet(epochs_glob(os.path.join(path, queue)))
     if schema is None:
         return out
     return out.select(

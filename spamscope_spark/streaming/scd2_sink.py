@@ -8,14 +8,15 @@ ever rebuilding from the raw stream. The demo dimension tracks each
 conversation's phishing risk tier — the CEP output a security consumer
 would page on transitions of.
 
-Exactly-once without a transactional store: one immutable snapshot
-directory per epoch (staging + rename, same discipline as
-IdempotentSink). A replayed epoch k rebuilds from snapshot k-1 — which
-still exists — so the replay is deterministic and overwrites snapshot
-k with identical content; `scd2_apply` itself is idempotent for
-re-delivered duplicate change rows (a duplicate is run-collapsed away,
-asserted in tests). Restart resumes from the latest committed
-snapshot.
+Exactly-once without a transactional store: one complete dimension
+snapshot per epoch, written through an `IdempotentSink` (`write_epoch`,
+the same staging + rename + manifest commit as every other epoch
+output). Epoch k folds into the newest snapshot committed below k, so
+a replayed epoch k rebuilds from snapshot k-1 — which still exists —
+and overwrites snapshot k with identical content; `scd2_apply` itself
+is idempotent for re-delivered duplicate change rows (a duplicate is
+run-collapsed away, asserted in tests). Restart resumes from the latest
+committed snapshot.
 
 Scale: per batch, only TOUCHED entities re-enter a window
 (`scd2_apply` anti-joins the untouched majority straight through), and
@@ -26,14 +27,11 @@ the snapshot write is the dimension's size, not the stream's. At
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.scd import init_scd2_dim, scd2_apply
+from .sink import IdempotentSink
 
 
 def risk_tier(score_col: str = "phishing_score") -> F.Column:
@@ -62,66 +60,39 @@ class Scd2DimSink:
         self.path = path
         self.entity_col, self.attr_col = entity_col, attr_col
         self.ts_col, self.seq_col = ts_col, seq_col
-        os.makedirs(path, exist_ok=True)
-        self.manifest = os.path.join(path, "_manifest.jsonl")
-
-    # -- snapshot bookkeeping ----------------------------------------------
+        self._snapshots = IdempotentSink(path, keys=[entity_col, "version"])
 
     def committed_epochs(self) -> set[int]:
-        if not os.path.exists(self.manifest):
-            return set()
-        with open(self.manifest) as f:
-            return {json.loads(line)["epoch"] for line in f if line.strip()}
-
-    def _snap_dir(self, epoch: int) -> str:
-        return os.path.join(self.path, f"snapshot={epoch}")
-
-    def _latest_before(self, epoch: int) -> int | None:
-        prior = [e for e in self.committed_epochs() if e < epoch]
-        return max(prior) if prior else None
+        return self._snapshots.committed_epochs()
 
     def read_dim(self, spark: SparkSession, epoch: int | None = None) -> DataFrame | None:
         """The dimension as of `epoch` (default: latest committed)."""
-        eps = self.committed_epochs()
         if epoch is None:
-            epoch = max(eps) if eps else None
-        if epoch is None:
-            return None
-        return spark.read.parquet(self._snap_dir(epoch))
+            last = self._snapshots.last_committed()
+            if last is None:
+                return None
+            epoch = last[0]
+        return self._snapshots.read_epoch(spark, epoch)
 
     # -- foreachBatch --------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, epoch: int) -> None:
-        spark = batch_df.sparkSession
         changes = batch_df.select(
             self.entity_col, self.attr_col, self.ts_col, self.seq_col
         )
-        prev_epoch = self._latest_before(epoch)
         kw = dict(
             entity_col=self.entity_col,
             attr_col=self.attr_col,
             ts_col=self.ts_col,
             seq_col=self.seq_col,
         )
-        if prev_epoch is None:
+        prev = self._snapshots.last_committed(before=epoch)
+        if prev is None:
             dim = init_scd2_dim(changes, **kw)
         else:
-            dim = scd2_apply(spark.read.parquet(self._snap_dir(prev_epoch)), changes, **kw)
-        staging = os.path.join(self.path, f"_staging_snap_{epoch}")
-        trash = os.path.join(self.path, f"_trash_snap_{epoch}")
-        for d in (staging, trash):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        dim.write.mode("overwrite").parquet(staging)
-        snap = self._snap_dir(epoch)
-        if os.path.exists(snap):  # replayed epoch: swap atomically
-            os.rename(snap, trash)
-        os.rename(staging, snap)
-        if os.path.exists(trash):
-            shutil.rmtree(trash)
-        if epoch not in self.committed_epochs():
-            with open(self.manifest, "a") as f:
-                f.write(json.dumps({"epoch": epoch}) + "\n")
+            dim_prev = self._snapshots.read_epoch(batch_df.sparkSession, prev[0])
+            dim = scd2_apply(dim_prev, changes, **kw)
+        self._snapshots.write_epoch(dim, epoch)
 
     def __call__(self, batch_df: DataFrame, epoch: int) -> None:
         self.process_batch(batch_df, epoch)

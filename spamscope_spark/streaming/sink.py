@@ -10,6 +10,14 @@ directory and re-commits the same manifest entry, so output is
 byte-identical under replay (exactly-once), and keyed MERGE semantics
 come from last-writer-wins dedup at read (`read_merged`).
 
+This module is the one place that knows the epoch layout
+(`data/epoch=k`, the staging and trash dirs, `_manifest.jsonl`) and
+how a fold finds its previous state (`last_committed` + `read_epoch`).
+Every other epoch-committed output goes through `IdempotentSink`: the
+queue segments (queue_sink), the SCD2 dimension snapshots (scd2_sink)
+and the per-epoch state snapshots of the dedup fold and the silence
+monitor.
+
 Scale: the manifest holds one line per epoch (not per row); data files
 are partitioned however the batch is partitioned; nothing here is
 driver-bound except the manifest append.
@@ -23,6 +31,12 @@ import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
+
+
+def epochs_glob(path: str) -> str:
+    """Glob over the epoch directories of the sink at `path`: the
+    source path of a stream that tails its committed epochs."""
+    return os.path.join(path, "data", "epoch=*")
 
 
 def _parquet_num_rows(directory: str) -> int:
@@ -50,6 +64,9 @@ class IdempotentSink:
         os.makedirs(self.data_dir, exist_ok=True)
         self._recover_interrupted_compaction()
 
+    def _epoch_dir(self, epoch: int) -> str:
+        return os.path.join(self.data_dir, f"epoch={epoch}")
+
     def _recover_interrupted_compaction(self) -> None:
         """Finish or roll back a compaction that crashed mid-swap.
 
@@ -75,7 +92,7 @@ class IdempotentSink:
             k = name.rsplit("_", 1)[-1]
             staging = os.path.join(self.path, f"_staging_compact_{k}")
             trash = os.path.join(self.path, f"_trash_compact_{k}")
-            epoch_dir = os.path.join(self.data_dir, f"epoch={k}")
+            epoch_dir = self._epoch_dir(k)
             if not os.path.exists(epoch_dir):
                 if os.path.exists(os.path.join(staging, "_SUCCESS")):
                     os.rename(staging, epoch_dir)
@@ -100,6 +117,19 @@ class IdempotentSink:
 
     def committed_epochs(self) -> set[int]:
         return set(self.manifest_entries())
+
+    def last_committed(self, before: int | None = None) -> tuple[int, dict] | None:
+        """The newest committed epoch, below `before` when given, with
+        its manifest line; None when there is none. A per-epoch fold
+        reads its previous state from the epoch below the one it
+        writes, so a replay of epoch k folds from the same state as the
+        first attempt even when k's own snapshot already committed."""
+        entries = self.manifest_entries()
+        prior = [e for e in entries if before is None or e < before]
+        if not prior:
+            return None
+        k = max(prior)
+        return k, entries[k]
 
     def _commit(
         self, epoch: int, n_rows: int, observation: Observation | None
@@ -140,35 +170,39 @@ class IdempotentSink:
         first attempt (e.g. FileStreamSource reconstructs an unpersisted
         file-list offset by re-listing, picking up files that arrived in
         between). Skipping on "already committed" would silently drop
-        those rows; overwriting converges to the re-delivered batch.
+        those rows; overwriting converges to the re-delivered batch."""
+        self._commit(epoch, self._swap_in(batch_df, epoch, "epoch"), observation)
 
-        The epoch directory appears ATOMICALLY: the batch is written to
-        a staging dir (leading "_", so parquet listings ignore it) and
-        renamed into place — a concurrent reader (the cascade stream
-        tails epoch=* dirs) never lists a half-written epoch, and on a
-        replay the old dir is swapped out in two renames (µs window)
-        instead of an rmtree + full rewrite with new part names under
-        the reader's feet."""
-        epoch_dir = os.path.join(self.data_dir, f"epoch={epoch}")
-        staging = os.path.join(self.path, f"_staging_epoch_{epoch}")
-        trash = os.path.join(self.path, f"_trash_epoch_{epoch}")
+    def _swap_in(self, df: DataFrame, epoch: int, kind: str) -> int:
+        """Write `df` to a staging dir and rename it over `epoch`'s
+        directory; return the row count. `kind` names the staging and
+        trash dirs (`_staging_{kind}_{epoch}`), which keeps a
+        compaction's leftovers apart from an epoch write's.
+
+        The epoch directory appears ATOMICALLY: staging has a leading
+        "_", so parquet listings ignore it, and a concurrent reader (the
+        cascade stream tails epoch=* dirs) never lists a half-written
+        epoch. A replaced directory is swapped out in two renames (µs
+        window) instead of an rmtree + full rewrite under the reader's
+        feet. A write killed between the two renames leaves staging and
+        trash behind; the next write of the epoch deletes both first.
+
+        The row count comes from the WRITTEN files' parquet FOOTERS,
+        read driver-side via pyarrow (~ms): counting `df` first would
+        compute the whole upstream plan twice, and a Spark read-back
+        count() costs a full job's scheduling per epoch per query."""
+        staging = os.path.join(self.path, f"_staging_{kind}_{epoch}")
+        trash = os.path.join(self.path, f"_trash_{kind}_{epoch}")
         for d in (staging, trash):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        batch_df.write.mode("overwrite").parquet(staging)
-        # row count for the manifest comes from the WRITTEN files'
-        # parquet FOOTERS, read driver-side via pyarrow (~ms) — counting
-        # batch_df first would compute the whole upstream plan twice,
-        # and a Spark read-back count() costs a full job's scheduling
-        # per epoch per query (a fixed, non-scaling term measured at
-        # 1-2s/stage in BENCH r2 profiling).
+            shutil.rmtree(d, ignore_errors=True)
+        df.write.mode("overwrite").parquet(staging)
         n = _parquet_num_rows(staging)
-        if os.path.exists(epoch_dir):  # crashed/previous attempt
+        epoch_dir = self._epoch_dir(epoch)
+        if os.path.exists(epoch_dir):  # replay, or the compacted epoch
             os.rename(epoch_dir, trash)
         os.rename(staging, epoch_dir)
-        if os.path.exists(trash):
-            shutil.rmtree(trash)
-        self._commit(epoch, n, observation)
+        shutil.rmtree(trash, ignore_errors=True)
+        return n
 
     def __call__(self, batch_df: DataFrame, epoch: int) -> None:
         self.process_batch(batch_df, epoch)
@@ -178,20 +212,39 @@ class IdempotentSink:
     def read_raw(self, spark: SparkSession) -> DataFrame:
         self._recover_interrupted_compaction()
         return spark.read.option("basePath", self.data_dir).parquet(
-            os.path.join(self.data_dir, "epoch=*")
+            epochs_glob(self.path)
         )
 
-    def read_merged(self, spark: SparkSession) -> DataFrame:
-        """Last-writer-wins by key across epochs — MERGE INTO semantics.
-        (With upstream exactly-once a key appears in one epoch only;
-        this also absorbs intentional key-level upserts.)"""
-        df = self.read_raw(spark)
+    def read_epoch(
+        self, spark: SparkSession, epoch: int, schema: str | None = None
+    ) -> DataFrame:
+        """One epoch directory as written, without an epoch column. A
+        state snapshot carries every key (untouched ones pass through),
+        so the newest one (`last_committed`) is the whole state."""
+        self._recover_interrupted_compaction()
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._epoch_dir(epoch))
+
+    def _read_epochs(self, spark: SparkSession, epochs: list[int]) -> DataFrame:
+        return spark.read.option("basePath", self.data_dir).parquet(
+            *[self._epoch_dir(e) for e in epochs]
+        )
+
+    def _latest_per_key(self, df: DataFrame) -> DataFrame:
+        """Each key's row from its highest epoch, without the epoch
+        column: the last-writer-wins MERGE."""
         w = Window.partitionBy(*self.keys).orderBy(F.col("epoch").desc())
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn", "epoch")
         )
+
+    def read_merged(self, spark: SparkSession) -> DataFrame:
+        """Last-writer-wins by key across epochs — MERGE INTO semantics.
+        (With upstream exactly-once a key appears in one epoch only;
+        this also absorbs intentional key-level upserts.)"""
+        return self._latest_per_key(self.read_raw(spark))
 
     def read_asof(self, spark: SparkSession, epoch: int) -> DataFrame:
         """Time-travel read: the merged (last-writer-wins) view exactly
@@ -217,15 +270,7 @@ class IdempotentSink:
         eps = sorted(k for k in entries if k <= epoch)
         if not eps:
             return self.read_raw(spark).drop("epoch").limit(0)
-        df = spark.read.option("basePath", self.data_dir).parquet(
-            *[os.path.join(self.data_dir, f"epoch={e}") for e in eps]
-        )
-        w = Window.partitionBy(*self.keys).orderBy(F.col("epoch").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "epoch")
-        )
+        return self._latest_per_key(self._read_epochs(spark, eps))
 
     def read_since(self, spark: SparkSession, after_epoch: int) -> DataFrame:
         """Incremental (CDC-style) consumer: rows committed in epochs
@@ -242,9 +287,7 @@ class IdempotentSink:
             return spark.read.option("basePath", self.data_dir).parquet(
                 self.data_dir
             ).limit(0)
-        return spark.read.option("basePath", self.data_dir).parquet(
-            *[os.path.join(self.data_dir, f"epoch={e}") for e in new]
-        )
+        return self._read_epochs(spark, new)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -282,31 +325,10 @@ class IdempotentSink:
         if len(target) < 2:
             return {"compacted_epochs": 0}
         k = target[-1]
-        merged_src = spark.read.option("basePath", self.data_dir).parquet(
-            *[os.path.join(self.data_dir, f"epoch={e}") for e in target]
-        )
-        w = Window.partitionBy(*self.keys).orderBy(F.col("epoch").desc())
-        merged = (
-            merged_src.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "epoch")
-        )
-        staging = os.path.join(self.path, f"_staging_compact_{k}")
-        trash = os.path.join(self.path, f"_trash_compact_{k}")
-        for d in (staging, trash):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        merged.write.mode("overwrite").parquet(staging)
-        n = _parquet_num_rows(staging)
-        epoch_dir = os.path.join(self.data_dir, f"epoch={k}")
-        if os.path.exists(epoch_dir):
-            os.rename(epoch_dir, trash)
-        os.rename(staging, epoch_dir)
-        shutil.rmtree(trash, ignore_errors=True)
+        merged = self._latest_per_key(self._read_epochs(spark, target))
+        n = self._swap_in(merged, k, "compact")
         for e in target[:-1]:
-            shutil.rmtree(
-                os.path.join(self.data_dir, f"epoch={e}"), ignore_errors=True
-            )
+            shutil.rmtree(self._epoch_dir(e), ignore_errors=True)
         new_entries = [
             {
                 "epoch": k,

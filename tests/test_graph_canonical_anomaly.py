@@ -385,3 +385,53 @@ class TestSilenceBoundedState:
         )
         le = {r["last_emitted"] for r in last.collect()}
         assert le == {out_max}
+
+    def test_restart_reads_only_the_newest_snapshot(self, spark, tmp_path):
+        """Each state snapshot is complete (untouched keys pass
+        through), so a restart needs only the newest one: with every
+        older silence_state epoch deleted, the resumed run's output
+        equals an uninterrupted run's over the same input."""
+        import glob as globmod
+        import shutil
+
+        from spamscope_spark.streaming.pipeline import start_silence_query
+
+        path = str(tmp_path / "turns_in")
+        t = generate_turns(spark, n_convs=12, turns_per_conv=24)
+        lo, hi = t.agg(F.min("ts"), F.max("ts")).first()
+        cuts = [None] + [lo + (hi - lo) * i / 4 for i in (1, 2, 3)] + [None]
+
+        def append_part(i):
+            part = t
+            if cuts[i] is not None:
+                part = part.where(F.col("ts") >= F.lit(cuts[i]))
+            if cuts[i + 1] is not None:
+                part = part.where(F.col("ts") < F.lit(cuts[i + 1]))
+            part.coalesce(1).write.mode("append").parquet(path)
+
+        def run(work):
+            cfg = PipelineConfig(
+                input_path=path,
+                work_dir=str(tmp_path / work),
+                max_files_per_trigger=1,
+            )
+            q, sink = start_silence_query(
+                spark, cfg, key=self.KEY, bucket_s=self.BUCKET_S
+            )
+            q.awaitTermination(300)
+            rows = sink.read_merged(spark).collect()
+            return cfg, sorted(map(tuple, rows))
+
+        for i in range(3):
+            append_part(i)
+        cfg, _ = run("resumed")
+        state_dirs = globmod.glob(f"{cfg.output('silence_state')}/data/epoch=*")
+        newest = max(state_dirs, key=lambda d: int(d.rsplit("=", 1)[1]))
+        assert len(state_dirs) >= 3, "expected multiple epochs"
+        for d in state_dirs:
+            if d != newest:
+                shutil.rmtree(d)
+        append_part(3)
+        _, resumed = run("resumed")
+        _, whole = run("whole")
+        assert resumed and resumed == whole

@@ -261,27 +261,33 @@ class TestEnrichedStream:
 
 
 class TestStatefulSessions:
+    COLS = (
+        "n_turns", "n_user", "n_assistant", "n_tool", "n_system",
+        "n_tool_calls", "max_phishing_score",
+    )
+
     def test_sessions_match_batch_closed_sessions(self, spark, cfg):
         query, sink = start_session_query(spark, cfg)
         query.awaitTermination(300)
         got = {
-            r["session_id"]: (r["n_turns"], r["n_user"], r["n_assistant"], r["n_tool"])
+            r["session_id"]: tuple(r[c] for c in self.COLS)
             for r in sink.read_merged(spark).collect()
         }
         assert len(got) > 0
-        # batch oracle: session_features over the same input; streaming
-        # emits only *closed* sessions (a later session exists in the
-        # same conv), so compare that subset
+        # batch oracle: session_features over the same enriched input;
+        # streaming emits only *closed* sessions (a later session exists
+        # in the same conv), so compare that subset
         from spamscope_spark.operators.sessionize import session_features
 
         batch = session_features(
-            spark.read.parquet(cfg.input_path), gap_s=cfg.gap_s
+            enrich_turns(spark.read.parquet(cfg.input_path), dedup_flag=False),
+            gap_s=cfg.gap_s,
         ).collect()
         last_seq = {}
         for r in batch:
             last_seq[r["conv_id"]] = max(last_seq.get(r["conv_id"], -1), r["session_seq"])
         exp = {
-            r["session_id"]: (r["n_turns"], r["n_user"], r["n_assistant"], r["n_tool"])
+            r["session_id"]: tuple(r[c] for c in self.COLS)
             for r in batch
             if r["session_seq"] < last_seq[r["conv_id"]]
         }
@@ -291,12 +297,49 @@ class TestStatefulSessions:
         assert set(got) <= {r["session_id"] for r in batch}
 
     def test_within_conv_dup_counting(self, spark, cfg):
+        """n_duplicate_turns is the session's rows minus its distinct
+        texts (sha1): exact while a session holds fewer than MAX_SEEN
+        distinct texts, which every session here does."""
+        from spamscope_spark.operators.sessionize import with_session_ids
+        from spamscope_spark.streaming.session_kernel import MAX_SEEN
+
+        # repeat conv_000003's texts 1 s after each of its turns, inside
+        # the same session
+        src = spark.read.parquet(cfg.input_path)
+        rep = src.where(F.col("conv_id") == "conv_000003").select(
+            "conv_id",
+            (F.col("turn_idx") + 1000).alias("turn_idx"),
+            "role",
+            "text",
+            "tool",
+            (F.col("ts") + F.expr("INTERVAL 1 SECOND")).alias("ts"),
+        )
+        cfg.input_path = os.path.join(cfg.work_dir, "turns_with_repeats")
+        src.unionByName(rep).write.parquet(cfg.input_path)
+
         query, sink = start_session_query(spark, cfg)
         query.awaitTermination(300)
-        total_dups = (
-            sink.read_merged(spark).agg(F.sum("n_duplicate_turns")).first()[0]
+        got = {
+            r["session_id"]: r["n_duplicate_turns"]
+            for r in sink.read_merged(spark).collect()
+        }
+        assert got
+        sessions = with_session_ids(
+            enrich_turns(spark.read.parquet(cfg.input_path), dedup_flag=False),
+            gap_s=cfg.gap_s,
         )
-        assert total_dups is not None and total_dups >= 0
+        exp = {
+            r["session_id"]: (r["n"] - r["n_sha1"], r["n_sha1"])
+            for r in sessions.groupBy("session_id")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("sha1").alias("n_sha1"),
+            )
+            .collect()
+        }
+        assert all(exp[sid][1] < MAX_SEEN for sid in got)
+        assert {sid: exp[sid][0] for sid in got} == got
+        assert any(got.values())
 
     def test_cascade_source_matches_direct(self, spark, cfg, tmp_path):
         """Sessions computed FROM the enriched sink stream (cascade
@@ -407,16 +450,14 @@ class TestStreamStreamJoin:
     def test_pairs_match_batch_join(self, spark, cfg):
         query, sink = start_join_query(spark, cfg)
         query.awaitTermination(300)
+        cols = ("conv_id", "turn_idx", "resp_turn_idx", "resp_ts", "resp_text")
         got = {
-            (r["conv_id"], r["turn_idx"], r["resp_turn_idx"])
-            for r in sink.read_merged(spark).collect()
+            tuple(r[c] for c in cols) for r in sink.read_merged(spark).collect()
         }
         batch = tool_response_join(
             spark.read.parquet(cfg.input_path), band_s=cfg.band_s
         ).where(F.col("resp_turn_idx").isNotNull())
-        exp = {
-            (r["conv_id"], r["turn_idx"], r["resp_turn_idx"]) for r in batch.collect()
-        }
+        exp = {tuple(r[c] for c in cols) for r in batch.collect()}
         assert got == exp
         # replay idempotence
         query2, sink2 = start_join_query(spark, cfg)
@@ -598,6 +639,29 @@ class TestQueueSink:
         assert n_calls == src.where(F.col("tool").isNotNull()).count()
         rec = _json.loads(calls_q.select("value").first()["value"])
         assert {"parent_conv_id", "parent_turn_idx", "tool", "ts", "role"} <= set(rec)
+        # a turns message is the enriched sink's json for the same
+        # (conv_id, turn_idx), byte for byte, up to the duplicate flag:
+        # the queue query carries enriched_stream's is_filtered
+        # placeholder (false), the enriched query folds the real flag
+        qe, esink = start_enriched_query(spark, cfg)
+        qe.awaitTermination(300)
+        msgs = turns_q.select(
+            F.from_json("value", "conv_id string, turn_idx int").alias("k"), "value"
+        )
+        got = {
+            (r["k"]["conv_id"], r["k"]["turn_idx"]): r["value"]
+            for r in msgs.collect()
+        }
+        enriched = {
+            (r["conv_id"], r["turn_idx"]): (r["json"], r["is_filtered"])
+            for r in esink.read_merged(spark).collect()
+        }
+        assert got.keys() == enriched.keys()
+        assert any(flag for _, flag in enriched.values())
+        for k, (js, flag) in enriched.items():
+            if flag:
+                js = js.replace('"is_filtered":true', '"is_filtered":false')
+            assert got[k] == js, k
         # replay with same checkpoint: no new entries
         q2, sink2 = start_queue_query(spark, cfg)
         q2.awaitTermination(300)
@@ -648,6 +712,112 @@ class TestQueueSink:
          .option("path", out_dir).option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start().awaitTermination(300))
         assert spark.read.parquet(out_dir).count() == src.count()
+
+
+class TestCrashBetweenRenames:
+    """A write killed between its two renames leaves the old epoch
+    directory in trash and the new one in staging. Replaying the epoch
+    must give the uncrashed reads and leave no staging or trash dir."""
+
+    @staticmethod
+    def _crash_then_replay(monkeypatch, path, write):
+        real = os.rename
+
+        def rename(src, dst):
+            if os.path.basename(src).startswith("_staging"):
+                raise OSError("killed between renames")
+            real(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", rename)
+            with pytest.raises(OSError, match="killed between renames"):
+                write()
+        assert any(
+            d.startswith("_trash") for _, dirs, _ in os.walk(path) for d in dirs
+        )
+        write()
+        left = [
+            os.path.join(root, d)
+            for root, dirs, _ in os.walk(path)
+            for d in dirs
+            if d.startswith(("_staging", "_trash"))
+        ]
+        assert not left, left
+
+    def test_idempotent_sink(self, spark, tmp_path, monkeypatch):
+        sink = IdempotentSink(str(tmp_path / "s"), keys=["k"])
+        b1 = spark.createDataFrame([(1, "b"), (3, "c")], "k int, v string")
+        sink.process_batch(spark.createDataFrame([(1, "a"), (2, "x")], "k int, v string"), 0)
+        sink.process_batch(b1, 1)
+        before = sorted(sink.read_merged(spark).collect())
+        self._crash_then_replay(
+            monkeypatch, sink.path, lambda: sink.process_batch(b1, 1)
+        )
+        assert sorted(sink.read_merged(spark).collect()) == before
+        assert sink.committed_epochs() == {0, 1}
+
+    def test_scd2_dim_sink(self, spark, tmp_path, monkeypatch):
+        import datetime as dt
+
+        from spamscope_spark.streaming.scd2_sink import Scd2DimSink
+
+        sink = Scd2DimSink(str(tmp_path / "dim"))
+        schema = "conv_id string, risk_tier string, ts timestamp, seq long"
+        t = lambda s: dt.datetime(2026, 1, 1, 0, 0, s)  # noqa: E731
+        b1 = spark.createDataFrame([("c1", "high", t(5), 1)], schema)
+        sink.process_batch(
+            spark.createDataFrame([("c1", "low", t(0), 0), ("c2", "low", t(1), 0)], schema), 0
+        )
+        sink.process_batch(b1, 1)
+        before = sorted(sink.read_dim(spark).collect())
+        self._crash_then_replay(
+            monkeypatch, sink.path, lambda: sink.process_batch(b1, 1)
+        )
+        assert sorted(sink.read_dim(spark).collect()) == before
+        assert sink.committed_epochs() == {0, 1}
+
+    def test_queue_sink(self, spark, tmp_path, monkeypatch):
+        from spamscope_spark.streaming.queue_sink import QueueSink
+
+        sink = QueueSink(str(tmp_path / "queues"))
+        turns = generate_turns(spark, n_convs=2, turns_per_conv=8)
+        b1 = turns.where(F.col("conv_id") == "conv_000001")
+        sink.process_batch(turns.where(F.col("conv_id") == "conv_000000"), 0)
+        sink.process_batch(b1, 1)
+
+        def read():
+            return {
+                q: sorted(sink.read_queue(spark, q).collect()) for q in sink.queues
+            }
+
+        before = read()
+        assert all(before.values())
+        self._crash_then_replay(
+            monkeypatch, sink.path, lambda: sink.process_batch(b1, 1)
+        )
+        assert read() == before
+
+
+def test_epoch_commit_protocol_lives_in_sink_module():
+    """Only streaming/sink.py renames or deletes directories and names
+    the manifest: every epoch-committed output goes through it."""
+    import spamscope_spark
+
+    root = os.path.dirname(spamscope_spark.__file__)
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                text = f.read()
+            found += [
+                (os.path.relpath(path, root), needle)
+                for needle in ("os.rename(", "shutil.rmtree(", "_manifest.jsonl")
+                if needle in text
+            ]
+    assert {rel for rel, _ in found} == {os.path.join("streaming", "sink.py")}, found
 
 
 class TestSessionKernel:
