@@ -12,39 +12,27 @@ evaluates, so streaming output rows equal the batch operator's rows for
 every end event at or below the final watermark (parity test in
 tests/test_streaming.py).
 
-Scale shape (same playbook as the sessionizer, pipeline.py):
-state is keyed on pmod(xxhash64(key), n_buckets) — one Python
-invocation per BUCKET per batch, not per key — and rows are projected
+Scale shape: keyed_state drives the matcher (hash-bucketed state, one
+Python call per BUCKET per batch, not per key), and rows are projected
 to (key, ts, id, cls) BEFORE the keyed shuffle, so only 4 short columns
 cross the exchange and the Arrow boundary. Per-key state is O(rows
 inside the watermark delay) plus five scalars of matcher state; rows at
-or below the watermark are processed and dropped immediately, so state
-never grows past delay × per-key rate — the same horizon contract as
-Spark's own stream-stream joins. n_buckets is part of the checkpoint
-contract (state keys are bucket ids): pick per deployment, keep for the
-checkpoint's life.
+or below the watermark are processed and dropped immediately, and a key
+with nothing buffered is evicted once its chain cannot extend a match
+(no open START, or the watermark passed START + within; the bucket's
+timer covers that moment too). So state never grows past delay ×
+per-key rate — the same horizon contract as Spark's own stream-stream
+joins.
 """
 
 from __future__ import annotations
 
-import pickle
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-_BUCKET_COL = "_cep_bucket"
-_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
+from .keyed_state import apply_bucketed_state
 
 # per-key matcher state list slots
 _BUF = 0        # [(ts_us, id, cls), ...] rows still above the watermark
@@ -103,10 +91,14 @@ def advance_key(ks: list, wm_us: int, within_us: int) -> list[tuple]:
     return out
 
 
-def min_buffered_us(states: dict) -> int:
+def next_due_us(states: dict, within_us: int) -> int:
+    """Earliest event time at which some key needs the matcher again:
+    its oldest buffered row, or — for a key with nothing buffered, which
+    only stays in state while its START can still open a match — the
+    point where the watermark passes START + within and it is evicted."""
     return min(
-        (ks[_BUF][0][0] for ks in states.values() if ks[_BUF]),
-        default=1 << 62,
+        ks[_BUF][0][0] if ks[_BUF] else ks[_START_TS] + within_us
+        for ks in states.values()
     )
 
 
@@ -119,7 +111,6 @@ def match_sequence_stream(
     mid_pred: Column,
     end_pred: Column,
     within_s: int,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Streaming DataFrame (must already carry ``withWatermark(ts, …)``)
     → append stream of (key, start_id, end_id, n_mid, duration_ms),
@@ -146,15 +137,9 @@ def match_sequence_stream(
         .when(mid_pred, F.lit("M"))
         .otherwise(F.lit("X"))
     )
-    narrow = df.select(
-        F.col(key),
-        F.col(ts),
-        F.col(id_col),
-        cls.alias("_cls"),
-        F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).alias(_BUCKET_COL),
-    )
+    narrow = df.select(F.col(key), F.col(ts), F.col(id_col), cls.alias("_cls"))
 
-    def _drain(states: dict, wm_us: int) -> list[dict]:
+    def drain(states: dict, wm_us: int) -> list[dict]:
         rows: list[dict] = []
         dead = []
         for k, ks in states.items():
@@ -180,49 +165,29 @@ def match_sequence_stream(
             del states[k]
         return rows
 
-    def _rearm(state: GroupState, states: dict) -> None:
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(min_buffered_us(states) // 1000, wm + 1000))
+    def buffer_and_drain(states: dict, pdf: pd.DataFrame, wm_us: int) -> list[dict]:
+        keys = pdf[key].values
+        ts_us = pdf[ts].values.astype("datetime64[us]").astype("int64")
+        ids = pdf[id_col].values
+        clss = pdf["_cls"].values
+        for i in range(len(pdf)):
+            t = int(ts_us[i])
+            if t <= wm_us:
+                # late beyond the watermark: already processed past
+                # this point — dropping keeps streaming positions
+                # identical to an on-time run
+                continue
+            ks = states.get(keys[i])
+            if ks is None:
+                states[keys[i]] = ks = _new_key_state()
+            ks[_BUF].append((t, ids[i].item(), clss[i]))
+        return drain(states, wm_us)
 
-    def fn(
-        _key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        states: dict = pickle.loads(state.get[0]) if state.exists else {}
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                keys = pdf[key].values
-                ts_us = (
-                    pdf[ts].values.astype("datetime64[us]").astype("int64")
-                )
-                ids = pdf[id_col].values
-                clss = pdf["_cls"].values
-                for i in range(len(pdf)):
-                    t = int(ts_us[i])
-                    if t <= wm_us:
-                        # late beyond the watermark: already processed
-                        # past this point — dropping keeps streaming
-                        # positions identical to an on-time run
-                        continue
-                    ks = states.get(keys[i])
-                    if ks is None:
-                        states[keys[i]] = ks = _new_key_state()
-                    ks[_BUF].append((t, ids[i].item(), clss[i]))
-        rows = _drain(states, wm_us)
-        if states:
-            state.update((pickle.dumps(states, protocol=4),))
-            _rearm(state, states)
-        elif state.exists:
-            state.remove()
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return narrow.groupBy(_BUCKET_COL).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_bucketed_state(
+        narrow,
+        key,
+        out_schema,
+        on_rows=buffer_and_drain,
+        on_timeout=drain,
+        due_us=lambda states: next_due_us(states, within_us),
     )

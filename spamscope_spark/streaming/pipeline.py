@@ -7,9 +7,9 @@
     → watermark(ts)
     → flag-dedup on content fingerprint, folded per epoch in the sink's
       foreachBatch against a bounded seen-set snapshot
-    → session windows per conv_id (applyInPandasWithState sessionizer
-      with event-time timeout — the reference's greedy buffers, bounded
-      properly)
+    → session windows per conv_id (hash-bucketed keyed-state
+      sessionizer with event-time timeout — the reference's greedy
+      buffers, bounded properly)
     → stream-stream join: tool-invocation ⋈ tool-response under
       watermark + time band (dialect analog)
     → foreachBatch exactly-once sink (epoch-atomic parquet MERGE on
@@ -22,16 +22,11 @@ enriched query's seen-set snapshots live beside its output).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 from dataclasses import dataclass, field
-from typing import Any
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -43,7 +38,9 @@ from pyspark.sql.types import (
 from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
 from ..schema import TURNS_SCHEMA
+from . import session_kernel as sk
 from .dedup_state import dedup_fold
+from .keyed_state import apply_bucketed_state
 from .sink import IdempotentSink, epochs_glob
 
 
@@ -217,7 +214,7 @@ def with_json_row(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# custom stateful sessionizer (applyInPandasWithState, event-time timeout)
+# custom stateful sessionizer (keyed_state, event-time timeout)
 # ---------------------------------------------------------------------------
 
 SESSION_OUT_SCHEMA = StructType(
@@ -239,30 +236,8 @@ SESSION_OUT_SCHEMA = StructType(
     ]
 )
 
-# Per-BUCKET state: a pickled dict {conv_id: [12 counters, seen, sigs]}.
-# Keying state on a hash bucket of conv_id instead of conv_id itself
-# means one Python invocation + one pandas column extraction per BUCKET
-# per batch (amortized over its conversations) instead of per
-# conversation. Measured (409k-turn fixture, local[1]): the
-# applyInPandasWithState machinery costs ~12 ms per GROUP per batch
-# regardless of group size, so 1024 groups paid ~12 s of pure per-group
-# overhead per batch where 256 pay a quarter of that; per conversation
-# it would dominate the stage at 10^6+ live conversations. Buckets are
-# uniform (hash of a high-cardinality key); per-bucket state stays
-# bounded by convs/bucket. n_buckets (default 256) should be ≥ the
-# shuffle parallelism and ≪ the groups per batch; it is part of the
-# checkpoint contract — don't change it on a live checkpoint.
-_SESSION_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
-_SESS_BUCKET_COL = "_sess_bucket"
-
-# Session state-machine bounds live in session_kernel (MAX_SEEN /
-# MAX_SIGS / NEARDUP_SIM).
-
-
-def stateful_sessionize(
-    df: DataFrame, gap_s: int = 30 * 60, n_buckets: int = 256
-) -> DataFrame:
+def stateful_sessionize(df: DataFrame, gap_s: int = 30 * 60) -> DataFrame:
     """Per-conv_id session windows with a gap timeout, held in keyed
     state and closed by event-time timeout when the watermark passes
     session_end + gap — the bounded version of the reference's
@@ -271,84 +246,32 @@ def stateful_sessionize(
     Per-session state also carries a bounded seen-fingerprint set
     (exact within-conversation dup count — the dedup-filter analog,
     tokenizer.py:176-186) and the last few shingle signatures for
-    near-dup turn detection.
+    near-dup turn detection. The state machine is session_kernel; its
+    bounds are session_kernel's MAX_SEEN / MAX_SIGS / NEARDUP_SIM.
 
-    State is keyed on pmod(xxhash64(conv_id), n_buckets); each bucket
-    carries a dict of its conversations' open sessions and a single
-    event-time timer at min(session_end)+gap (expired conversations are
-    closed whenever the timer fires, the timer re-arms for the rest) —
-    per-conversation semantics are unchanged.
+    State is hash-bucketed on conv_id (keyed_state); each bucket's timer
+    sits at min(session_end) + gap, and a firing closes every expired
+    conversation of the bucket — per-conversation semantics are
+    unchanged.
 
     Emits one SESSION_OUT_SCHEMA row per *closed* session."""
-    # Project to the 8 columns the state function reads BEFORE the
-    # keyed shuffle: the enriched row is wide (text, 4 hashes, URL
-    # structs, json) and every byte of it would otherwise be shuffled
-    # AND Arrow-serialized into Python per batch. Column pruning does
-    # not cross applyInPandasWithState on its own.
+    # Project to the 8 columns the kernel reads BEFORE the keyed
+    # shuffle: the enriched row is wide (text, 4 hashes, URL structs,
+    # json) and every byte of it would otherwise be shuffled AND
+    # Arrow-serialized into Python per batch.
     needed = [
         "conv_id", "turn_idx", "ts", "role", "tool",
         "phishing_score", "sha1", "shingle_sig",
     ]
     df = df.select(*[c for c in needed if c in df.columns])
     gap_us = gap_s * 1_000_000
-
-    import pickle
-
-    from . import session_kernel as sk
-
-    def _rearm(state: GroupState, states: dict) -> None:
-        """One event-time timer per bucket at min(session_end)+gap,
-        clamped above the watermark (Spark rejects timestamps <= wm)."""
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max((sk.min_end_us(states) + gap_us) // 1000, wm + 1000)
-        )
-
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # The session state machine itself lives in session_kernel —
-        # this wrapper is only GroupState plumbing + timers.
-        if state.hasTimedOut:
-            states: dict = pickle.loads(state.get[0])
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            closed, remaining = sk.close_expired(states, wm_us, gap_us)
-            if remaining:
-                state.update((pickle.dumps(remaining, protocol=4),))
-                _rearm(state, remaining)
-            else:
-                state.remove()
-            if closed:
-                yield pd.DataFrame(closed)
-            return
-
-        states = pickle.loads(state.get[0]) if state.exists else {}
-        closed = []
-        # Concat Arrow chunks before the lexsort: a bucket bigger than
-        # maxRecordsPerBatch arrives as several chunks, and per-chunk
-        # sorting would mis-order turns across the chunk boundary
-        # (gap/session logic depends on global (conv, ts, turn) order).
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-            closed = sk.apply_rows(states, pdf, gap_us)
-        if states:
-            state.update((pickle.dumps(states, protocol=4),))
-            _rearm(state, states)
-        elif state.exists:
-            state.remove()
-        if closed:
-            yield pd.DataFrame(closed)
-
-    bucketed = df.withColumn(
-        _SESS_BUCKET_COL, F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets))
-    )
-    return bucketed.groupBy(_SESS_BUCKET_COL).applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_bucketed_state(
+        df,
+        "conv_id",
+        SESSION_OUT_SCHEMA,
+        on_rows=lambda states, pdf, _wm_us: sk.apply_rows(states, pdf, gap_us),
+        on_timeout=lambda states, wm_us: sk.close_expired(states, wm_us, gap_us),
+        due_us=lambda states: sk.min_end_us(states) + gap_us,
     )
 
 

@@ -1,8 +1,9 @@
 """Per-bucket sessionization kernel.
 
 The pure-Python/pandas core of pipeline.stateful_sessionize: that
-function is only `applyInPandasWithState` state plumbing and timers
-around it, so the state machine is testable without Spark
+function is only a projection plus the three callbacks keyed_state
+drives (apply_rows on new rows, close_expired on a timer, min_end_us +
+gap as the next timer), so the state machine is testable without Spark
 (tests/test_streaming.py::TestSessionKernel).
 
 Semantics (reference parity): per-conv_id session windows with a gap
@@ -141,17 +142,11 @@ def apply_rows(states: dict, pdf: pd.DataFrame, gap_us: int) -> list[dict]:
     return closed
 
 
-def close_expired(states: dict, wm_us: int, gap_us: int) -> tuple[list[dict], dict]:
-    """Sessions whose gap elapsed before the watermark → closed rows;
-    returns (closed, remaining_states)."""
-    closed: list[dict] = []
-    remaining: dict = {}
-    for cid, (s, seen, sigs) in states.items():
-        if s[2] + gap_us <= wm_us:
-            closed.append(sess_row(cid, s))
-        else:
-            remaining[cid] = (s, seen, sigs)
-    return closed, remaining
+def close_expired(states: dict, wm_us: int, gap_us: int) -> list[dict]:
+    """Close the sessions whose gap elapsed before the watermark: drops
+    them from `states` in place and returns them as closed rows."""
+    expired = [cid for cid, st in states.items() if st[0][2] + gap_us <= wm_us]
+    return [sess_row(cid, states.pop(cid)[0]) for cid in expired]
 
 
 def min_end_us(states: dict) -> int:

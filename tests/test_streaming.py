@@ -260,23 +260,51 @@ class TestEnrichedStream:
         assert any(r["n"] > 1 for r in agg)  # fixture has cross-batch dups
 
 
+def _neardup_counts(turns) -> dict:
+    """Per session, in (ts, turn_idx) order: a turn that is not an exact
+    sha1 repeat of an earlier turn of its session counts as a near-dup
+    when its signature's bigram Jaccard is >= NEARDUP_SIM against any of
+    the session's last MAX_SIGS signatures. A plain restatement of the
+    rule, independent of session_kernel's state machine."""
+    from spamscope_spark.streaming.session_kernel import MAX_SIGS, NEARDUP_SIM
+
+    def grams(sig):
+        return {sig[i : i + 2] for i in range(max(1, len(sig) - 1))}
+
+    by_session: dict = {}
+    for r in turns:
+        by_session.setdefault(r["session_id"], []).append(r)
+    counts = {}
+    for sid, rows in by_session.items():
+        seen, sigs, n = set(), [], 0
+        for r in sorted(rows, key=lambda r: (r["ts"], r["turn_idx"])):
+            repeat = bool(r["sha1"]) and r["sha1"] in seen
+            if r["sha1"]:
+                seen.add(r["sha1"])
+            sig = r["shingle_sig"]
+            if sig:
+                g = grams(sig)
+                if not repeat and any(
+                    len(g & grams(p)) / len(g | grams(p)) >= NEARDUP_SIM
+                    for p in sigs[-MAX_SIGS:]
+                ):
+                    n += 1
+                sigs.append(sig)
+        counts[sid] = n
+    return counts
+
+
 class TestStatefulSessions:
     COLS = (
-        "n_turns", "n_user", "n_assistant", "n_tool", "n_system",
-        "n_tool_calls", "max_phishing_score",
+        "session_start", "session_end", "n_turns", "n_user", "n_assistant",
+        "n_tool", "n_system", "n_tool_calls", "max_phishing_score",
     )
 
-    def test_sessions_match_batch_closed_sessions(self, spark, cfg):
-        query, sink = start_session_query(spark, cfg)
-        query.awaitTermination(300)
-        got = {
-            r["session_id"]: tuple(r[c] for c in self.COLS)
-            for r in sink.read_merged(spark).collect()
-        }
-        assert len(got) > 0
-        # batch oracle: session_features over the same enriched input;
-        # streaming emits only *closed* sessions (a later session exists
-        # in the same conv), so compare that subset
+    def _closed_batch_sessions(self, spark, cfg):
+        """Batch oracle: session_features over the same enriched input.
+        Streaming emits only *closed* sessions (a later session exists
+        in the same conv), so return that subset, and every batch
+        session id."""
         from spamscope_spark.operators.sessionize import session_features
 
         batch = session_features(
@@ -286,15 +314,118 @@ class TestStatefulSessions:
         last_seq = {}
         for r in batch:
             last_seq[r["conv_id"]] = max(last_seq.get(r["conv_id"], -1), r["session_seq"])
-        exp = {
+        closed = {
             r["session_id"]: tuple(r[c] for c in self.COLS)
             for r in batch
             if r["session_seq"] < last_seq[r["conv_id"]]
         }
+        return closed, {r["session_id"] for r in batch}
+
+    def test_sessions_match_batch_closed_sessions(self, spark, cfg):
+        from spamscope_spark.operators.sessionize import with_session_ids
+
+        # the fixture's 8-word texts are too short for near-dup
+        # signatures: give conv_000003 a tripled copy of each turn 1 s
+        # later and that copy plus " ok" 2 s later, in the same session
+        src = spark.read.parquet(cfg.input_path)
+        conv3 = src.where(F.col("conv_id") == "conv_000003")
+        tripled = F.concat_ws(" ", "text", "text", "text")
+        extra = [
+            conv3.select(
+                "conv_id",
+                (F.col("turn_idx") + 1000 * k).alias("turn_idx"),
+                "role",
+                F.concat(tripled, F.lit(suffix)).alias("text"),
+                "tool",
+                (F.col("ts") + F.expr(f"INTERVAL {k} SECONDS")).alias("ts"),
+            )
+            for k, suffix in ((1, ""), (2, " ok"))
+        ]
+        cfg.input_path = os.path.join(cfg.work_dir, "turns_with_neardups")
+        src.unionByName(extra[0]).unionByName(extra[1]).write.parquet(cfg.input_path)
+
+        query, sink = start_session_query(spark, cfg)
+        query.awaitTermination(300)
+        rows = sink.read_merged(spark).collect()
+        got = {r["session_id"]: tuple(r[c] for c in self.COLS) for r in rows}
+        assert len(got) > 0
+        exp, batch_ids = self._closed_batch_sessions(spark, cfg)
         for sid, vals in exp.items():
             assert got.get(sid) == vals, sid
         # streaming may additionally contain nothing beyond batch's sessions
-        assert set(got) <= {r["session_id"] for r in batch}
+        assert set(got) <= batch_ids
+
+        turns = with_session_ids(
+            enrich_turns(spark.read.parquet(cfg.input_path), dedup_flag=False),
+            gap_s=cfg.gap_s,
+        ).select("session_id", "ts", "turn_idx", "sha1", "shingle_sig")
+        want = _neardup_counts(turns.collect())
+        got_neardup = {r["session_id"]: r["n_neardup_turns"] for r in rows}
+        assert got_neardup == {sid: want[sid] for sid in got_neardup}
+        assert any(got_neardup.values())
+
+    def test_sessions_span_epochs_and_a_restart(self, spark, turns_input, tmp_path):
+        """The fixture split by ts into 4 chronological files, one file
+        per batch: state carries across epochs and across a restart from
+        the same checkpoint. Each split point falls inside a session of
+        a hot conversation, so sessions straddle every epoch boundary."""
+        src = spark.read.parquet(turns_input)
+        hot = sorted(
+            (r["turn_idx"], r["ts"])
+            for r in src.where(F.col("conv_id") == "conv_000000").collect()
+        )
+        cuts = [hot[8 * k + 4][1] for k in (2, 40, 80)]
+        bounds = [None, *cuts, None]
+        parts = []
+        for lo, hi in zip(bounds, bounds[1:]):
+            part = src
+            if lo is not None:
+                part = part.where(F.col("ts") >= F.lit(lo))
+            if hi is not None:
+                part = part.where(F.col("ts") < F.lit(hi))
+            parts.append(part)
+
+        def drain(c):
+            q, sink = start_session_query(spark, c)
+            q.awaitTermination(300)
+            return q, sink
+
+        resumed = PipelineConfig(
+            input_path=str(tmp_path / "in"),
+            work_dir=str(tmp_path / "resumed"),
+            max_files_per_trigger=1,
+        )
+        for part in parts[:2]:
+            part.coalesce(1).write.mode("append").parquet(resumed.input_path)
+        q, _ = drain(resumed)
+        assert sum(p.numInputRows > 0 for p in q.recentProgress) == 2
+        for part in parts[2:]:
+            part.coalesce(1).write.mode("append").parquet(resumed.input_path)
+        q, resumed_sink = drain(resumed)
+        # the restart read only the appended files, one batch each
+        assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [
+            part.count() for part in parts[2:]
+        ]
+
+        whole = PipelineConfig(
+            input_path=resumed.input_path,
+            work_dir=str(tmp_path / "whole"),
+            max_files_per_trigger=1,
+        )
+        _, whole_sink = drain(whole)
+
+        def by_id(sink):
+            return {r["session_id"]: r.asDict() for r in sink.read_merged(spark).collect()}
+
+        got = by_id(resumed_sink)
+        assert got and got == by_id(whole_sink)
+        for cut in cuts:
+            assert any(
+                r["session_start"] < cut <= r["session_end"] for r in got.values()
+            ), cut
+        exp, batch_ids = self._closed_batch_sessions(spark, resumed)
+        assert {sid: tuple(got[sid][c] for c in self.COLS) for sid in exp} == exp
+        assert set(got) <= batch_ids
 
     def test_within_conv_dup_counting(self, spark, cfg):
         """n_duplicate_turns is the session's rows minus its distinct
@@ -820,9 +951,35 @@ def test_epoch_commit_protocol_lives_in_sink_module():
     assert {rel for rel, _ in found} == {os.path.join("streaming", "sink.py")}, found
 
 
+def test_python_keyed_state_lives_in_keyed_state_module():
+    """Only streaming/keyed_state.py runs applyInPandasWithState, touches
+    GroupState and pickles state: every Python stateful operator keeps
+    its state through it."""
+    import spamscope_spark
+
+    root = os.path.dirname(spamscope_spark.__file__)
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                text = f.read()
+            found += [
+                (os.path.relpath(path, root), needle)
+                for needle in (".applyInPandasWithState(", "GroupState", "pickle.")
+                if needle in text
+            ]
+    assert {rel for rel, _ in found} == {
+        os.path.join("streaming", "keyed_state.py")
+    }, found
+
+
 class TestSessionKernel:
     """Pure-pandas tests of the session state machine (no Spark) —
-    stateful_sessionize is thin GroupState plumbing over this kernel."""
+    stateful_sessionize is a projection plus keyed_state callbacks over
+    this kernel."""
 
     def _rows(self):
         import pandas as pd
@@ -868,25 +1025,26 @@ class TestSessionKernel:
         states: dict = {}
         sk.apply_rows(states, self._rows(), gap_us)
         wm_us = int(pd.Timestamp("2024-01-01 00:10:00").value // 1000)
-        closed, remaining = sk.close_expired(states, wm_us, gap_us)
+        closed = sk.close_expired(states, wm_us, gap_us)
         assert {(c["conv_id"], c["session_seq"]) for c in closed} == {
             ("a", 1), ("b", 0)
         }
-        assert remaining == {}
+        assert states == {}
 
 
 class TestBuiltinDropDuplicates:
     def test_drop_duplicates_within_watermark_matches_custom_state(
         self, spark, cfg, tmp_path
     ):
-        """Spark's built-in dropDuplicatesWithinWatermark as a parity
-        path to streaming/dedup_state.py: DROP semantics (vs our
-        flag-not-drop) — the set of surviving fingerprints must equal
-        the custom operator's unflagged set on the same input. The
-        built-in bounds state by watermark (fingerprints older than the
-        delay are evicted — the bounded-LRU analog of the reference's
-        `check_list`), where our flag operator keeps keys indefinitely;
-        the fixture fits inside the watermark so both agree."""
+        """Spark's built-in dropDuplicatesWithinWatermark across
+        microbatches: DROP semantics (vs the enriched query's
+        flag-not-drop) — the surviving fingerprints must equal the
+        batch `distinct` fingerprints of the same input. The built-in
+        bounds state by watermark (fingerprints older than the delay
+        are evicted — the bounded-LRU analog of the reference's
+        `check_list`), as the flag fold bounds its seen-set by a
+        per-bucket cap and TTL; the fixture fits inside the watermark,
+        so nothing is evicted here."""
         from spamscope_spark.streaming.pipeline import read_turns_stream
 
         cfg.max_files_per_trigger = 1  # dedup must span microbatches
@@ -1110,6 +1268,65 @@ class TestCepStream:
         }
         assert len(exp) > 0
         assert got == exp
+
+    def test_open_start_is_evicted_past_the_horizon(self, spark, tmp_path):
+        """A key whose last event is a START leaves state once the
+        watermark passes START + within, even when no later row reaches
+        its bucket: the bucket's timer covers open chains."""
+        from spamscope_spark.streaming import cep_state
+        from spamscope_spark.streaming.keyed_state import N_BUCKETS
+
+        # three keys in three different buckets
+        cands = [f"u{i}" for i in range(16)]
+        buckets = spark.createDataFrame([(k,) for k in cands], "k string").select(
+            "k", F.pmod(F.xxhash64("k"), F.lit(N_BUCKETS)).alias("b")
+        ).collect()
+        first = {}
+        for r in buckets:
+            first.setdefault(r["b"], r["k"])
+        a, b, c = list(first.values())[:3]
+
+        t0 = pd.Timestamp("2024-01-01").to_pydatetime()
+        hours = lambda n: pd.Timedelta(hours=n).to_pytimedelta()  # noqa: E731
+        within = hours(self.WITHIN_S // 3600)
+        # a: one START; b and c: other-class events that move the
+        # watermark (delay 1 h) past a's START (after b's batch), then
+        # past a's START + within (after c's batch). The last file only
+        # carries the watermark past c: it is filtered out above the
+        # watermark, as any row that entered state would sit above it.
+        files = [
+            (a, 1, "purchase", t0),
+            (b, 2, "login", t0 + hours(2)),
+            (c, 3, "login", t0 + within + hours(3)),
+            ("tick", 4, "login", t0 + within + hours(5)),
+        ]
+        inp = str(tmp_path / "ev_in")
+        schema = "user_id string, event_id long, event_type string, ts timestamp"
+        for row in files:
+            spark.createDataFrame([row], schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(inp)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
+            .withWatermark("ts", self.DELAY)
+            .where(F.col("ts") < F.lit(files[-1][3]))
+        )
+        out = cep_state.match_sequence_stream(
+            stream, key="user_id", ts="ts", id_col="event_id",
+            within_s=self.WITHIN_S, **self._preds(),
+        )
+        q = (
+            out.writeStream.format("parquet")
+            .option("path", str(tmp_path / "cep_out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert sum(p.numInputRows for p in q.recentProgress) == len(files)
+        assert q.recentProgress[-1].stateOperators[0].numRowsTotal == 0
 
     def test_kernel_positions_persist_across_batches(self):
         from spamscope_spark.streaming.cep_state import (
