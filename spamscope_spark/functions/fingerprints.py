@@ -184,15 +184,20 @@ def shingle_similarity_py(a: str, b: str) -> float:
     return inter / union if union else 0.0
 
 
-def shingle_similarity(a: Column, b: Column) -> Column:
-    """Column form of signature similarity: Jaccard over 2-gram sets,
-    computed JVM-side with higher-order functions (no Python)."""
+def shingle_grams(c: Column) -> Column:
+    """A signature's distinct 2-grams as an array column."""
+    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - 1, F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(2))))
 
-    def grams(c: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.length(c) - 1, F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(2))))
 
-    ga, gb = grams(a), grams(b)
+def gram_similarity(ga: Column, gb: Column) -> Column:
+    """Jaccard of two shingle_grams arrays in [0,1]."""
     inter = F.size(F.array_intersect(ga, gb))
     union = F.size(F.array_union(ga, gb))
     return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+
+
+def shingle_similarity(a: Column, b: Column) -> Column:
+    """Column form of signature similarity: Jaccard over 2-gram sets,
+    computed JVM-side with higher-order functions (no Python)."""
+    return gram_similarity(shingle_grams(a), shingle_grams(b))

@@ -4,7 +4,8 @@ The graft's replacement for per-mail tokenization (BASELINE.json
 north_star): turns are grouped into sessions per conv_id by a gap
 timeout on ts. Batch path = window functions (lag + cumulative sum of
 session starts) — one shuffle on the key, fully JVM-side. Streaming
-path = stateful_sessionize (streaming/pipeline.py) on keyed state.
+path = streaming/session_state.session_fold: the same rule per epoch,
+continued from a snapshot of the open sessions.
 
 The gap timeout is the analog of the reference's `fail.after.seconds`
 lease (src/spouts/files_mails.py:62,72-79).

@@ -64,15 +64,10 @@ def dedup_fold(
 
     def process(batch_df: DataFrame, epoch: int) -> None:
         spark = batch_df.sparkSession
-        prior = seen_sink.last_committed(before=epoch)
-        if prior is None:  # Spark's first-batch watermark is 0 too
-            wm_ms, seen = 0, spark.createDataFrame([], _SEEN_SCHEMA)
-        else:
-            k, entry = prior
-            wm_ms = entry["watermark_ms"]
-            seen = seen_sink.read_epoch(spark, k, _SEEN_SCHEMA).where(
-                F.col("expires_ms") >= wm_ms
-            )
+        entry, seen = seen_sink.read_prior(spark, epoch, _SEEN_SCHEMA)
+        # Spark's first-batch watermark is 0 too
+        wm_ms = entry["watermark_ms"] if entry else 0
+        seen = seen.where(F.col("expires_ms") >= wm_ms)
         late = F.col("ts") <= F.timestamp_millis(F.lit(wm_ms))
 
         # Late rows ride along, ranked after every kept row of their

@@ -1,8 +1,9 @@
 """Hash-bucketed keyed state for the Python stateful operators.
 
 The only module that knows how a Python stateful operator keeps its
-state (the sessionizer in pipeline.py, the CEP matcher in
-cep_state.py). An operator supplies three pure callbacks over a dict
+state; the CEP sequence matcher (cep_state.py) is its one user. The
+sessionizer folds per epoch in the JVM instead (session_state.py). An
+operator supplies three pure callbacks over a dict
 ``{key: per-key state}``, all mutating it in place:
 
 - ``on_rows(states, pdf, wm_us) -> rows``: a bucket's new rows arrived;

@@ -7,16 +7,18 @@
     → watermark(ts)
     → flag-dedup on content fingerprint, folded per epoch in the sink's
       foreachBatch against a bounded seen-set snapshot
-    → session windows per conv_id (hash-bucketed keyed-state
-      sessionizer with event-time timeout — the reference's greedy
-      buffers, bounded properly)
+    → session windows per conv_id, folded per epoch in the sessions
+      query's foreachBatch against a snapshot of the open sessions
+      (closed by the next watermark — the reference's greedy buffers,
+      bounded properly)
     → stream-stream join: tool-invocation ⋈ tool-response under
       watermark + time band (dialect analog)
     → foreachBatch exactly-once sink (epoch-atomic parquet MERGE on
       (conv_id, turn_idx)), JSON-per-turn rows, per-partition lineage
 
 Every query checkpoints; a restart resumes from offsets + state (the
-enriched query's seen-set snapshots live beside its output).
+enriched query's seen-set snapshots and the sessions query's open
+sessions live beside their outputs).
 """
 
 from __future__ import annotations
@@ -28,7 +30,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import (
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -38,9 +39,8 @@ from pyspark.sql.types import (
 from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
 from ..schema import TURNS_SCHEMA
-from . import session_kernel as sk
 from .dedup_state import dedup_fold
-from .keyed_state import apply_bucketed_state
+from .session_state import session_fold
 from .sink import IdempotentSink, epochs_glob
 
 
@@ -211,68 +211,6 @@ def with_json_row(df: DataFrame) -> DataFrame:
     golden-output comparison is plain text equality."""
     cols = [c for c in df.columns if not c.startswith("_")]
     return df.withColumn("json", F.to_json(F.struct(*[F.col(c) for c in sorted(cols)])))
-
-
-# ---------------------------------------------------------------------------
-# custom stateful sessionizer (keyed_state, event-time timeout)
-# ---------------------------------------------------------------------------
-
-SESSION_OUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("session_seq", LongType()),
-        StructField("session_id", StringType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_turns", LongType()),
-        StructField("n_user", LongType()),
-        StructField("n_assistant", LongType()),
-        StructField("n_tool", LongType()),
-        StructField("n_system", LongType()),
-        StructField("n_tool_calls", LongType()),
-        StructField("max_phishing_score", IntegerType()),
-        StructField("n_duplicate_turns", LongType()),
-        StructField("n_neardup_turns", LongType()),
-    ]
-)
-
-
-def stateful_sessionize(df: DataFrame, gap_s: int = 30 * 60) -> DataFrame:
-    """Per-conv_id session windows with a gap timeout, held in keyed
-    state and closed by event-time timeout when the watermark passes
-    session_end + gap — the bounded version of the reference's
-    wait-forever greedy buffers (json_maker.py:82-88).
-
-    Per-session state also carries a bounded seen-fingerprint set
-    (exact within-conversation dup count — the dedup-filter analog,
-    tokenizer.py:176-186) and the last few shingle signatures for
-    near-dup turn detection. The state machine is session_kernel; its
-    bounds are session_kernel's MAX_SEEN / MAX_SIGS / NEARDUP_SIM.
-
-    State is hash-bucketed on conv_id (keyed_state); each bucket's timer
-    sits at min(session_end) + gap, and a firing closes every expired
-    conversation of the bucket — per-conversation semantics are
-    unchanged.
-
-    Emits one SESSION_OUT_SCHEMA row per *closed* session."""
-    # Project to the 8 columns the kernel reads BEFORE the keyed
-    # shuffle: the enriched row is wide (text, 4 hashes, URL structs,
-    # json) and every byte of it would otherwise be shuffled AND
-    # Arrow-serialized into Python per batch.
-    needed = [
-        "conv_id", "turn_idx", "ts", "role", "tool",
-        "phishing_score", "sha1", "shingle_sig",
-    ]
-    df = df.select(*[c for c in needed if c in df.columns])
-    gap_us = gap_s * 1_000_000
-    return apply_bucketed_state(
-        df,
-        "conv_id",
-        SESSION_OUT_SCHEMA,
-        on_rows=lambda states, pdf, _wm_us: sk.apply_rows(states, pdf, gap_us),
-        on_timeout=lambda states, wm_us: sk.close_expired(states, wm_us, gap_us),
-        due_us=lambda states: sk.min_end_us(states) + gap_us,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -616,10 +554,17 @@ def start_hot_enriched_query(
 def start_session_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
-    """Per-session feature vectors from the custom stateful sessionizer."""
+    """Per-session feature vectors, exactly-once: each epoch's turns are
+    folded into the open sessions of the `sessions_open` side sink in
+    foreachBatch (session_fold), and the closed sessions are written.
+    The query itself is stateless: its checkpoint holds offsets only."""
     sink = IdempotentSink(cfg.output("sessions"), keys=["conv_id", "session_id"])
-    df = stateful_sessionize(_session_input(spark, cfg), gap_s=cfg.gap_s)
-    return _start(spark, cfg, df, "sessions", sink, available_now)
+    open_sink = IdempotentSink(cfg.output("sessions_open"), keys=["conv_id"])
+    fold = session_fold(sink, open_sink, cfg.watermark, cfg.gap_s)
+    return _start(
+        spark, cfg, _session_input(spark, cfg), "sessions", sink, available_now,
+        batch_fn=fold,
+    )
 
 
 def start_window_query(
@@ -835,14 +780,9 @@ def start_silence_query(
         # over closed windows) and overwrite E with the same content —
         # exactly-once by convergence, the same property
         # process_batch's always-overwrite contract assumes.
-        prior = state_sink.last_committed(before=epoch)
-        if prior:
-            st = state_sink.read_epoch(spark, prior[0]).select(
-                key, "last_active", "last_emitted"
-            )
-        else:
-            schema = f"{key} string, last_active timestamp, last_emitted timestamp"
-            st = spark.createDataFrame([], schema)
+        _, st = state_sink.read_prior(
+            spark, epoch, f"{key} string, last_active timestamp, last_emitted timestamp"
+        )
         # Per-key summary of the newly closed windows. Append mode
         # delivers a (window, key) row exactly once, when the watermark
         # passes the window end; window closure is GLOBAL (one

@@ -12,7 +12,7 @@ come from last-writer-wins dedup at read (`read_merged`).
 
 This module is the one place that knows the epoch layout
 (`data/epoch=k`, the staging and trash dirs, `_manifest.jsonl`) and
-how a fold finds its previous state (`last_committed` + `read_epoch`).
+how a fold finds its previous state (`read_prior`).
 Every other epoch-committed output goes through `IdempotentSink`: the
 queue segments (queue_sink), the SCD2 dimension snapshots (scd2_sink)
 and the per-epoch state snapshots of the dedup fold and the silence
@@ -31,6 +31,7 @@ import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql.types import StructType
 
 
 def epochs_glob(path: str) -> str:
@@ -130,6 +131,23 @@ class IdempotentSink:
             return None
         k = max(prior)
         return k, entries[k]
+
+    def read_prior(
+        self, spark: SparkSession, epoch: int, schema: str
+    ) -> tuple[dict | None, DataFrame]:
+        """The state a per-epoch fold starts epoch `epoch` from: the
+        manifest line and `schema` rows of the newest snapshot committed
+        below it, or (None, no rows) before the first. The empty frame
+        is planned in the JVM: an empty `createDataFrame([])` is a
+        Python-side RDD, and every job that scans it runs Python tasks."""
+        prior = self.last_committed(before=epoch)
+        if prior is None:
+            fields = StructType.fromDDL(schema).fields
+            return None, spark.range(0).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+            )
+        k, entry = prior
+        return entry, self.read_epoch(spark, k, schema)
 
     def _commit(
         self, epoch: int, n_rows: int, observation: Observation | None

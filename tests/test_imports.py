@@ -23,7 +23,7 @@ MODULES = sorted(
 
 def test_walk_finds_the_streaming_layer():
     assert "spamscope_spark.streaming.pipeline" in MODULES
-    assert "spamscope_spark.streaming.session_kernel" in MODULES
+    assert "spamscope_spark.streaming.session_state" in MODULES
 
 
 @pytest.mark.parametrize("name", MODULES)

@@ -5,6 +5,7 @@ stream-stream join — the north-rule requirements.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pandas as pd
@@ -15,6 +16,7 @@ from pyspark.sql import Window
 from spamscope_spark.datagen import generate_turns
 from spamscope_spark.operators.enrich import enrich_turns
 from spamscope_spark.operators.joins import tool_response_join
+from spamscope_spark.schema import TURNS_SCHEMA
 from spamscope_spark.streaming.pipeline import (
     PipelineConfig,
     start_enriched_query,
@@ -265,8 +267,8 @@ def _neardup_counts(turns) -> dict:
     sha1 repeat of an earlier turn of its session counts as a near-dup
     when its signature's bigram Jaccard is >= NEARDUP_SIM against any of
     the session's last MAX_SIGS signatures. A plain restatement of the
-    rule, independent of session_kernel's state machine."""
-    from spamscope_spark.streaming.session_kernel import MAX_SIGS, NEARDUP_SIM
+    rule, independent of session_state's fold."""
+    from spamscope_spark.streaming.session_state import MAX_SIGS, NEARDUP_SIM
 
     def grams(sig):
         return {sig[i : i + 2] for i in range(max(1, len(sig) - 1))}
@@ -432,7 +434,7 @@ class TestStatefulSessions:
         texts (sha1): exact while a session holds fewer than MAX_SEEN
         distinct texts, which every session here does."""
         from spamscope_spark.operators.sessionize import with_session_ids
-        from spamscope_spark.streaming.session_kernel import MAX_SEEN
+        from spamscope_spark.streaming.session_state import MAX_SEEN
 
         # repeat conv_000003's texts 1 s after each of its turns, inside
         # the same session
@@ -471,6 +473,83 @@ class TestStatefulSessions:
         assert all(exp[sid][1] < MAX_SEEN for sid in got)
         assert {sid: exp[sid][0] for sid in got} == got
         assert any(got.values())
+
+    def test_query_is_stateless_with_no_empty_batch(self, spark, cfg):
+        """The sessions are folded in foreachBatch: the sessions query
+        has no state operator and runs no no-data batch."""
+        cfg.max_files_per_trigger = 1  # several data batches
+        query, _sink = start_session_query(spark, cfg)
+        query.awaitTermination(300)
+        progress = query.recentProgress
+        assert len(progress) == 2
+        assert all(p.stateOperators == [] for p in progress)
+        assert all(p.numInputRows > 0 for p in progress)
+
+    @staticmethod
+    def _drain_epochs(spark, tmp_path, epochs):
+        """Drain one input file per epoch, each a list of user turns
+        (conv_id, turn_idx, text, ts); returns the sessions sink."""
+        cfg = PipelineConfig(
+            input_path=str(tmp_path / "in"),
+            work_dir=str(tmp_path / "w"),
+            max_files_per_trigger=1,
+        )
+        for rows in epochs:
+            spark.createDataFrame(
+                [(c, i, "user", text, None, ts) for c, i, text, ts in rows],
+                TURNS_SCHEMA,
+            ).coalesce(1).write.mode("append").parquet(cfg.input_path)
+        q, sink = start_session_query(spark, cfg)
+        q.awaitTermination(300)
+        assert len(q.recentProgress) == len(epochs)
+        return sink
+
+    def test_close_boundary_is_the_next_watermark(self, spark, tmp_path):
+        """A session with session_end + gap == the epoch's next watermark
+        (max ts - delay) is emitted in that epoch; one ending 1 µs later
+        stays open."""
+        gap = dt.timedelta(seconds=PipelineConfig("", "").gap_s)
+        t0 = dt.datetime(2024, 1, 1)
+        sink = self._drain_epochs(spark, tmp_path, [
+            [("a", 0, "x", t0), ("b", 0, "y", t0 + dt.timedelta(microseconds=1))],
+            [("z", 0, "z", t0 + gap + dt.timedelta(hours=4))],
+        ])
+        assert [sink.manifest_entries()[e]["rows"] for e in (0, 1)] == [0, 1]
+        assert [r["session_id"] for r in sink.read_merged(spark).collect()] == ["a#0"]
+
+    def test_duplicates_past_max_seen(self, spark, tmp_path):
+        """One session crosses MAX_SEEN distinct texts in its first epoch
+        and repeats old and new texts in its second. The count follows
+        session_state's rule: exact within an epoch, and across epochs
+        against the session's MAX_SEEN newest distinct texts."""
+        from spamscope_spark.streaming.session_state import MAX_SEEN
+
+        n = MAX_SEEN + 88
+        first = [f"text {i}" for i in range(n)] + ["text 0"]
+        second = ["text 0", f"text {n - 1}", "text 100", "text 50", "text 0"]
+
+        def expected(epochs):
+            carried, dups = [], 0
+            for texts in epochs:
+                known, firsts = set(carried), []
+                for t in texts:
+                    if t in known:
+                        dups += 1
+                    else:
+                        known.add(t)
+                        firsts.append(t)
+                carried = (carried + firsts)[-MAX_SEEN:]
+            return dups
+
+        t0 = dt.datetime(2024, 1, 1)
+        texts = first + second
+        rows = [("c", i, t, t0 + dt.timedelta(seconds=i)) for i, t in enumerate(texts)]
+        # a turn a day later opens a second session, closing the first
+        rows.append(("c", len(texts), "later", t0 + dt.timedelta(days=1)))
+        sink = self._drain_epochs(spark, tmp_path, [rows[: len(first)], rows[len(first) :]])
+        (got,) = sink.read_merged(spark).collect()
+        assert (got["session_seq"], got["n_turns"]) == (0, len(texts))
+        assert got["n_duplicate_turns"] == expected([first, second]) == 4
 
     def test_cascade_source_matches_direct(self, spark, cfg, tmp_path):
         """Sessions computed FROM the enriched sink stream (cascade
@@ -976,62 +1055,6 @@ def test_python_keyed_state_lives_in_keyed_state_module():
     }, found
 
 
-class TestSessionKernel:
-    """Pure-pandas tests of the session state machine (no Spark) —
-    stateful_sessionize is a projection plus keyed_state callbacks over
-    this kernel."""
-
-    def _rows(self):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "conv_id": ["a", "a", "a", "a", "b"],
-                "turn_idx": [0, 1, 2, 3, 0],
-                "ts": pd.to_datetime(
-                    [
-                        "2024-01-01 00:00:00", "2024-01-01 00:00:30",
-                        "2024-01-01 00:05:00", "2024-01-01 00:05:10",
-                        "2024-01-01 00:00:00",
-                    ]
-                ),
-                "role": ["user", "assistant", "user", "tool", "user"],
-                "tool": [None, "search", None, "search", None],
-                "phishing_score": [0, 5, None, 2, 1],
-                "sha1": ["x", "y", "x", "z", "w"],
-                "shingle_sig": ["abcd", "abce", "abcd", "zzzz", "qqqq"],
-            }
-        )
-
-    def test_gap_closes_and_counters(self):
-        from spamscope_spark.streaming import session_kernel as sk
-
-        gap_us = 60 * 1_000_000
-        states: dict = {}
-        closed = sk.apply_rows(states, self._rows(), gap_us)
-        assert [(c["conv_id"], c["session_seq"], c["n_turns"],
-                 c["max_phishing_score"], c["n_tool_calls"]) for c in closed] == [
-            ("a", 0, 2, 5, 1)
-        ]
-        assert set(states) == {"a", "b"}
-        assert states["a"][0][0] == 1  # open session_seq advanced
-
-    def test_close_expired_by_watermark(self):
-        import pandas as pd
-
-        from spamscope_spark.streaming import session_kernel as sk
-
-        gap_us = 60 * 1_000_000
-        states: dict = {}
-        sk.apply_rows(states, self._rows(), gap_us)
-        wm_us = int(pd.Timestamp("2024-01-01 00:10:00").value // 1000)
-        closed = sk.close_expired(states, wm_us, gap_us)
-        assert {(c["conv_id"], c["session_seq"]) for c in closed} == {
-            ("a", 1), ("b", 0)
-        }
-        assert states == {}
-
-
 class TestBuiltinDropDuplicates:
     def test_drop_duplicates_within_watermark_matches_custom_state(
         self, spark, cfg, tmp_path
@@ -1080,23 +1103,24 @@ class TestBuiltinDropDuplicates:
 
 
 class TestRocksDBStateStore:
-    def test_rocksdb_sessions_match_default_provider(self, spark, turns_input, tmp_path):
+    def test_rocksdb_join_matches_default_provider(self, spark, turns_input, tmp_path):
         """state_store="rocksdb" (the 10^12-turn backend: state on local
         disk, changelog checkpointing) must be a pure backend swap —
-        byte-identical session rows vs the default heap provider."""
+        byte-identical tool-pair rows vs the default heap provider. The
+        join keeps keyed state on both sides."""
         base = PipelineConfig(
             input_path=turns_input, work_dir=str(tmp_path / "heap")
         )
-        q, heap_sink = start_session_query(spark, base)
+        q, heap_sink = start_join_query(spark, base)
         q.awaitTermination(300)
         rocks = PipelineConfig(
             input_path=turns_input,
             work_dir=str(tmp_path / "rocks"),
             state_store="rocksdb",
         )
-        q, rocks_sink = start_session_query(spark, rocks)
+        q, rocks_sink = start_join_query(spark, rocks)
         q.awaitTermination(300)
-        key = lambda r: (r["conv_id"], r["session_id"])
+        key = lambda r: (r["conv_id"], r["turn_idx"])
         a = {key(r): r for r in heap_sink.read_merged(spark).collect()}
         b = {key(r): r for r in rocks_sink.read_merged(spark).collect()}
         assert a and a == b
