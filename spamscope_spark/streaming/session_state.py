@@ -151,7 +151,9 @@ def _fold_sessions(open_df: DataFrame, rows: DataFrame, gap_us: int) -> DataFram
         allrows = allrows.unionByName(part, allowMissingColumns=True)
 
     # session_seq: the lag/cumulative-sum rule over the open session's
-    # end and the turns (the running max is the kernel's session end)
+    # end and the turns. A turn's previous end is the running max of the
+    # earlier ends, not the lag: this epoch's first turns may lie before
+    # the open session's end.
     turn = F.col("_kind") == _TURN
     conv = Window.partitionBy("conv_id").orderBy(*_ORDER)
     whole_conv = Window.partitionBy("conv_id")
