@@ -103,7 +103,7 @@ def generate_turns(
 
     # Tool: set on the invocation turn (pattern slot 1, role=assistant) and
     # its response turn (slot 2, role=tool); same tool name on both so the
-    # stream-stream join has an equality key besides conv_id.
+    # tool-call band join has an equality key besides conv_id.
     tool_name = F.element_at(
         F.array(*[F.lit(t) for t in TOOLS]),
         F.pmod(F.col("conv_num") + F.floor(F.col("turn_idx") / 8), 4).cast("int") + 1,

@@ -603,8 +603,8 @@ _SQL_TOOL_TIMEOUTS = f"""
 @query("q_tool_timeouts", _SQL_TOOL_TIMEOUTS)
 def q_tool_timeouts(spark, sf_dir):
     """Unanswered tool invocations (no response within the band) — the
-    batch twin of the streaming leftOuter join's timeout emission
-    (streaming/pipeline.py::unanswered_tool_calls, new r3). The
+    batch twin of the streaming timeout emission (the tool-pair fold's
+    timeouts, streaming/pipeline.py::start_timeout_query). The
     reference never surfaces this: a JsonMaker branch that never
     arrives just buffers forever (json_maker.py:82-88)."""
     turns = generate_turns(spark, n_convs=60, turns_per_conv=24)

@@ -20,11 +20,13 @@ class MetricsListener(StreamingQueryListener):
     `late_rows_dropped` in `summary()` sums the state operators'
     numRowsDroppedByWatermark, so it counts only queries that have a
     state operator. A stateless query that drops late rows itself
-    records them elsewhere: the enriched query (`enriched_turns`) drops
-    them in its foreachBatch dedup fold and writes the count as
-    `late_rows` in each epoch's line of its sink manifest
-    (`IdempotentSink.manifest_entries()` of `out/enriched`); its
-    `late_rows_dropped` here stays 0."""
+    records them elsewhere: the enriched (`enriched_turns`), `sessions`
+    and `tool_pairs` queries drop them in their foreachBatch
+    folds (dedup, session and tool-pair) and write the count as
+    `late_rows` in each epoch's line of their sink manifest
+    (`IdempotentSink.manifest_entries()` of `out/enriched`,
+    `out/sessions` and `out/tool_pairs`); their `late_rows_dropped` here
+    stays 0."""
 
     def __init__(self):
         self.progress: dict[str, list[dict]] = defaultdict(list)

@@ -11,14 +11,17 @@
       query's foreachBatch against a snapshot of the open sessions
       (closed by the next watermark — the reference's greedy buffers,
       bounded properly)
-    → stream-stream join: tool-invocation ⋈ tool-response under
-      watermark + time band (dialect analog)
+    → tool-invocation ⋈ tool-response in a time band (dialect analog),
+      folded per epoch in the tool-pairs query's foreachBatch against a
+      snapshot of the pending invocations and responses (earliest
+      answer wins; an invocation the watermark passes unanswered is a
+      timeout)
     → foreachBatch exactly-once sink (epoch-atomic parquet MERGE on
       (conv_id, turn_idx)), JSON-per-turn rows, per-partition lineage
 
 Every query checkpoints; a restart resumes from offsets + state (the
-enriched query's seen-set snapshots and the sessions query's open
-sessions live beside their outputs).
+enriched query's seen-set snapshots, the sessions query's open sessions
+and the tool-pairs query's pending rows live beside their outputs).
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
 from ..schema import TURNS_SCHEMA
 from .dedup_state import dedup_fold
+from .pair_state import tool_pair_fold
 from .session_state import session_fold
 from .sink import IdempotentSink, epochs_glob
 
@@ -67,7 +71,8 @@ class PipelineConfig:
     # Keyed-state backend: "hdfs" (default heap-HashMap provider — fine
     # while per-executor state fits the JVM heap) or "rocksdb"
     # (RocksDBStateStoreProvider + changelog checkpointing). At the
-    # 10^12-turn design point the session/join state exceeds
+    # 10^12-turn design point the keyed state (windows, built-in
+    # dedup, CEP matcher) exceeds
     # executor heap by orders of magnitude; RocksDB keeps it on local
     # SSD with bounded memory and checkpoints incrementally (changelog,
     # not full-snapshot — the knob that keeps commit time flat as state
@@ -193,7 +198,7 @@ def deduped_stream_builtin(spark: SparkSession, cfg: PipelineConfig) -> DataFram
     folds per epoch. State eviction: a key older than the
     watermark is dropped from state, so re-arrivals beyond the
     watermark horizon are NOT deduped — same horizon contract as the
-    stream-stream join."""
+    tool-pair fold's pending rows."""
     deduped = _sha1_turns(spark, cfg).dropDuplicatesWithinWatermark(["sha1"])
     enriched = enrich_turns(
         deduped,
@@ -211,79 +216,6 @@ def with_json_row(df: DataFrame) -> DataFrame:
     golden-output comparison is plain text equality."""
     cols = [c for c in df.columns if not c.startswith("_")]
     return df.withColumn("json", F.to_json(F.struct(*[F.col(c) for c in sorted(cols)])))
-
-
-# ---------------------------------------------------------------------------
-# stream-stream join (dialect analog) under watermark
-# ---------------------------------------------------------------------------
-
-
-def tool_response_stream_join(
-    spark: SparkSession, cfg: PipelineConfig, how: str = "inner"
-) -> DataFrame:
-    """Tool-invocation ⋈ tool-response as a watermarked stream-stream
-    join: equality on (conv_id, tool) + response within (ts, ts + band].
-    Both sides carry watermarks, so join state is bounded — the fix for
-    the reference's unbounded JsonMaker buffers.
-
-    `how="leftOuter"` additionally emits each UNMATCHED invocation once
-    the watermark passes ts + band (null resp_* columns) — outer-join
-    state eviction is the emission trigger, so 'no response arrived' is
-    itself an event. The reference has no analog: a JsonMaker branch
-    that never arrives buffers forever (json_maker.py:82-88) and is
-    never reported."""
-    turns = read_turns_stream(spark, cfg)
-    inv = (
-        turns.where((F.col("role") == "assistant") & F.col("tool").isNotNull())
-        .select(
-            F.col("conv_id").alias("i_conv_id"),
-            F.col("tool").alias("i_tool"),
-            F.col("turn_idx").alias("i_turn_idx"),
-            F.col("ts").alias("i_ts"),
-            F.col("text").alias("i_text"),
-        )
-        .withWatermark("i_ts", cfg.watermark)
-    )
-    resp = (
-        turns.where((F.col("role") == "tool") & F.col("tool").isNotNull())
-        .select(
-            F.col("conv_id").alias("r_conv_id"),
-            F.col("tool").alias("r_tool"),
-            F.col("turn_idx").alias("r_turn_idx"),
-            F.col("ts").alias("r_ts"),
-            F.col("text").alias("r_text"),
-        )
-        .withWatermark("r_ts", cfg.watermark)
-    )
-    cond = (
-        (F.col("i_conv_id") == F.col("r_conv_id"))
-        & (F.col("i_tool") == F.col("r_tool"))
-        & (F.col("r_ts") > F.col("i_ts"))
-        & (F.col("r_ts") <= F.col("i_ts") + F.expr(f"INTERVAL {cfg.band_s} SECONDS"))
-        & (F.col("r_turn_idx") > F.col("i_turn_idx"))
-    )
-    return inv.join(resp, on=cond, how=how).select(
-        F.col("i_conv_id").alias("conv_id"),
-        F.col("i_tool").alias("tool"),
-        F.col("i_turn_idx").alias("turn_idx"),
-        F.col("i_ts").alias("ts"),
-        F.col("r_turn_idx").alias("resp_turn_idx"),
-        F.col("r_ts").alias("resp_ts"),
-        F.col("r_text").alias("resp_text"),
-    )
-
-
-def unanswered_tool_calls(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Tool invocations with NO response inside (ts, ts + band] — the
-    timeout/dead-letter stream. A row is emitted exactly once, when the
-    watermark passes ts + band and the outer join evicts the unmatched
-    invocation from state; until then Spark cannot know a response
-    won't still arrive. Late responses beyond the watermark are dropped
-    by the join, so a timeout verdict is final."""
-    j = tool_response_stream_join(spark, cfg, how="leftOuter")
-    return j.where(F.col("resp_turn_idx").isNull()).select(
-        "conv_id", "tool", "turn_idx", "ts"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -584,19 +516,36 @@ def start_window_query(
 def start_join_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
-    """Tool-call correlation pairs, exactly-once."""
-    sink = IdempotentSink(cfg.output("tool_pairs"), keys=["conv_id", "turn_idx"])
-    df = tool_response_stream_join(spark, cfg)
-    return _start(spark, cfg, df, "tool_pairs", sink, available_now)
+    """Tool-call correlation pairs, exactly-once: each epoch's turns are
+    folded into the pending invocations and responses of the
+    `tool_pairs_open` side sink in foreachBatch (tool_pair_fold), and an
+    invocation's earliest answer in its band is written. The query
+    itself is stateless: its checkpoint holds offsets only."""
+    return _start_pair_fold(spark, cfg, "tool_pairs", available_now, timeouts=False)
 
 
 def start_timeout_query(
     spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
 ):
-    """Unanswered-tool-call timeouts (outer-join eviction), exactly-once."""
-    sink = IdempotentSink(cfg.output("tool_timeouts"), keys=["conv_id", "turn_idx"])
-    df = unanswered_tool_calls(spark, cfg)
-    return _start(spark, cfg, df, "tool_timeouts", sink, available_now)
+    """Unanswered-tool-call timeouts, exactly-once: the same fold as
+    start_join_query, writing each invocation that leaves its
+    `tool_timeouts_open` snapshot with no answer in its band (once the
+    watermark passes ts + band). A late response beyond the watermark
+    is dropped, so a timeout verdict is final."""
+    return _start_pair_fold(spark, cfg, "tool_timeouts", available_now, timeouts=True)
+
+
+def _start_pair_fold(
+    spark: SparkSession, cfg: PipelineConfig, name: str, available_now: bool,
+    timeouts: bool,
+):
+    sink = IdempotentSink(cfg.output(name), keys=["conv_id", "turn_idx"])
+    open_sink = IdempotentSink(cfg.output(f"{name}_open"), keys=["conv_id", "turn_idx"])
+    fold = tool_pair_fold(sink, open_sink, cfg.watermark, cfg.band_s, timeouts)
+    return _start(
+        spark, cfg, read_turns_stream(spark, cfg), name, sink, available_now,
+        batch_fn=fold,
+    )
 
 
 def start_cm_sketch_query(

@@ -15,8 +15,8 @@ This module is the one place that knows the epoch layout
 how a fold finds its previous state (`read_prior`).
 Every other epoch-committed output goes through `IdempotentSink`: the
 queue segments (queue_sink), the SCD2 dimension snapshots (scd2_sink)
-and the per-epoch state snapshots of the dedup fold and the silence
-monitor.
+and the per-epoch state snapshots of the dedup, session and tool-pair
+folds and the silence monitor.
 
 Scale: the manifest holds one line per epoch (not per row); data files
 are partitioned however the batch is partitioned; nothing here is

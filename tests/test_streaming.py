@@ -1,6 +1,6 @@
 """Streaming-layer tests: exactly-once idempotent sink, checkpoint
 resume, stateful dedup flag, stateful sessionization, watermarked
-stream-stream join — the north-rule requirements.
+tool-call band join — the north-rule requirements.
 """
 
 from __future__ import annotations
@@ -201,17 +201,6 @@ class TestEnrichedStream:
             for r in with_dedup_flag(raw).collect()
         }
         assert got == exp and any(exp.values())
-
-    def test_query_is_stateless_with_no_empty_batch(self, spark, cfg):
-        """The flag is folded in foreachBatch: the enriched query has no
-        state operator and runs no no-data batch."""
-        cfg.max_files_per_trigger = 1  # several data batches
-        query, _sink = start_enriched_query(spark, cfg)
-        query.awaitTermination(300)
-        progress = query.recentProgress
-        assert len(progress) == 2
-        assert all(p.stateOperators == [] for p in progress)
-        assert all(p.numInputRows > 0 for p in progress)
 
     def test_late_row_boundary_is_the_watermark(self, spark, turns_input, tmp_path):
         """Rows at the carried watermark (max ts - delay) are dropped as
@@ -474,17 +463,6 @@ class TestStatefulSessions:
         assert {sid: exp[sid][0] for sid in got} == got
         assert any(got.values())
 
-    def test_query_is_stateless_with_no_empty_batch(self, spark, cfg):
-        """The sessions are folded in foreachBatch: the sessions query
-        has no state operator and runs no no-data batch."""
-        cfg.max_files_per_trigger = 1  # several data batches
-        query, _sink = start_session_query(spark, cfg)
-        query.awaitTermination(300)
-        progress = query.recentProgress
-        assert len(progress) == 2
-        assert all(p.stateOperators == [] for p in progress)
-        assert all(p.numInputRows > 0 for p in progress)
-
     @staticmethod
     def _drain_epochs(spark, tmp_path, epochs):
         """Drain one input file per epoch, each a list of user turns
@@ -675,12 +653,45 @@ class TestStreamStreamJoin:
         assert len(got) == sink2.read_merged(spark).count()
 
 
+    @pytest.mark.parametrize(
+        "epochs",
+        [[[0, 1], [2]], [[0, 1, 2]], [[0, 2], [1]]],
+        ids=["earlier_first", "one_epoch", "later_first"],
+    )
+    def test_two_answers_keep_the_earliest(self, spark, tmp_path, epochs):
+        """One invocation answered twice inside its band (turn 1 at +60 s,
+        turn 2 at +120 s), delivered one input file per epoch: the merged
+        sink holds the earliest answer, as the batch join does."""
+        t0 = dt.datetime(2024, 1, 1)
+        turns = {
+            0: ("c", 0, "assistant", "call", "search", t0),
+            1: ("c", 1, "tool", "first", "search", t0 + dt.timedelta(seconds=60)),
+            2: ("c", 2, "tool", "second", "search", t0 + dt.timedelta(seconds=120)),
+        }
+        cfg = PipelineConfig(
+            input_path=str(tmp_path / "in"),
+            work_dir=str(tmp_path / "w"),
+            max_files_per_trigger=1,
+        )
+        for idxs in epochs:
+            spark.createDataFrame([turns[i] for i in idxs], TURNS_SCHEMA).coalesce(
+                1
+            ).write.mode("append").parquet(cfg.input_path)
+        query, sink = start_join_query(spark, cfg)
+        query.awaitTermination(300)
+        cols = ("conv_id", "turn_idx", "resp_turn_idx", "resp_ts", "resp_text")
+        got = [tuple(r[c] for c in cols) for r in sink.read_merged(spark).collect()]
+        batch = tool_response_join(spark.read.parquet(cfg.input_path), band_s=cfg.band_s)
+        exp = [tuple(r[c] for c in cols) for r in batch.collect()]
+        assert got == exp == [("c", 0, 1, turns[1][5], "first")]
+
+
 class TestToolTimeoutJoin:
     def test_unanswered_calls_emitted_after_watermark(self, spark, cfg):
-        """leftOuter stream-stream join: an invocation with no response
-        in (ts, ts+band] is emitted with null resp_* once the watermark
-        passes ts + band — 'no response' becomes an event instead of a
-        leaked buffer (the reference's JsonMaker failure mode)."""
+        """Timeouts of the tool-pair fold: an invocation with no response
+        in (ts, ts+band] is emitted once the watermark passes ts + band
+        — 'no response' becomes an event instead of a leaked buffer (the
+        reference's JsonMaker failure mode)."""
         import datetime as dt
 
         from spamscope_spark.streaming.pipeline import start_timeout_query
@@ -731,6 +742,191 @@ class TestToolTimeoutJoin:
             (r["conv_id"], r["turn_idx"])
             for r in sink2.read_merged(spark).collect()
         } == got
+
+
+class TestToolPairFold:
+    """The tool-pair fold (pair_state.tool_pair_fold) behind the join and
+    timeout queries."""
+
+    T0 = pd.Timestamp("2026-03-01 00:00:00")
+
+    def test_pairs_and_timeouts_span_epochs_and_a_restart(
+        self, spark, turns_input, tmp_path
+    ):
+        """The fixture split by ts into 4 chronological files, one file
+        per batch. Each cut falls between a hot conversation's invocation
+        and its response, so pairs straddle every epoch boundary. Pairs
+        and timeouts drained in two runs from one checkpoint equal an
+        uninterrupted drain and the batch join."""
+        from spamscope_spark.streaming.pipeline import start_timeout_query
+
+        src = spark.read.parquet(turns_input)
+        hot = sorted(
+            (r["turn_idx"], r["ts"])
+            for r in src.where(F.col("conv_id") == "conv_000000").collect()
+        )
+        # turn 8k+1 invokes a tool, turn 8k+2 answers it 30 s later
+        cuts = [hot[8 * k + 2][1] for k in (2, 40, 80)]
+        bounds = [None, *cuts, None]
+        parts = []
+        for lo, hi in zip(bounds, bounds[1:]):
+            part = src
+            if lo is not None:
+                part = part.where(F.col("ts") >= F.lit(lo))
+            if hi is not None:
+                part = part.where(F.col("ts") < F.lit(hi))
+            parts.append(part)
+
+        def drain(c):
+            out = []
+            for start in (start_join_query, start_timeout_query):
+                q, sink = start(spark, c)
+                q.awaitTermination(300)
+                out.append((q, sink))
+            return out
+
+        resumed = PipelineConfig(
+            input_path=str(tmp_path / "in"),
+            work_dir=str(tmp_path / "resumed"),
+            max_files_per_trigger=1,
+        )
+        for part in parts[:2]:
+            part.coalesce(1).write.mode("append").parquet(resumed.input_path)
+        for q, _ in drain(resumed):
+            assert [p.numInputRows > 0 for p in q.recentProgress] == [True, True]
+        for part in parts[2:]:
+            part.coalesce(1).write.mode("append").parquet(resumed.input_path)
+        (qp, pairs), (qt, timeouts) = drain(resumed)
+        # the restart read only the appended files, one batch each
+        for q in (qp, qt):
+            assert [p.numInputRows for p in q.recentProgress] == [
+                part.count() for part in parts[2:]
+            ]
+
+        whole = PipelineConfig(
+            input_path=resumed.input_path,
+            work_dir=str(tmp_path / "whole"),
+            max_files_per_trigger=1,
+        )
+        (_, whole_pairs), (_, whole_timeouts) = drain(whole)
+
+        def rows(sink):
+            return {tuple(r) for r in sink.read_merged(spark).collect()}
+
+        got_pairs, got_timeouts = rows(pairs), rows(timeouts)
+        assert got_pairs == rows(whole_pairs)
+        assert got_timeouts == rows(whole_timeouts)
+
+        raw = spark.read.parquet(resumed.input_path)
+        batch = tool_response_join(raw, band_s=resumed.band_s)
+        pair_cols = [
+            "conv_id", "tool", "turn_idx", "ts", "resp_turn_idx", "resp_ts", "resp_text",
+        ]
+        exp_pairs = {
+            tuple(r)
+            for r in batch.where(F.col("resp_turn_idx").isNotNull())
+            .select(*pair_cols).collect()
+        }
+        assert got_pairs == exp_pairs
+        for cut in cuts:
+            assert any(r[3] < cut <= r[5] for r in got_pairs), cut
+        # timed out: unanswered, and ts + band at or below the final
+        # watermark (max ts - delay)
+        final_wm = raw.agg(F.max("ts")).first()[0] - dt.timedelta(hours=4)
+        exp_timeouts = {
+            tuple(r)
+            for r in batch.where(
+                F.col("resp_turn_idx").isNull()
+                & (F.col("ts") <= F.lit(final_wm - dt.timedelta(seconds=resumed.band_s)))
+            )
+            .select("conv_id", "tool", "turn_idx", "ts").collect()
+        }
+        assert exp_timeouts and got_timeouts == exp_timeouts
+
+    def _fold(self, tmp_path, timeouts=False):
+        from spamscope_spark.streaming.pair_state import tool_pair_fold
+
+        name = "timeouts" if timeouts else "pairs"
+        sink = IdempotentSink(str(tmp_path / name), keys=["conv_id", "turn_idx"])
+        open_sink = IdempotentSink(
+            str(tmp_path / f"{name}_open"), keys=["conv_id", "turn_idx"]
+        )
+        fold = tool_pair_fold(sink, open_sink, "4 hours", 600, timeouts)
+        return fold, sink, open_sink
+
+    def _batch(self, spark, rows):
+        """rows: (conv_id, turn_idx, role, offset after T0 as a Timedelta)"""
+        return spark.createDataFrame(
+            [
+                (c, i, role, f"{c}{i}", None if role == "user" else "t",
+                 (self.T0 + off).to_pydatetime())
+                for c, i, role, off in rows
+            ],
+            TURNS_SCHEMA,
+        )
+
+    @staticmethod
+    def _keys(spark, sink, epoch, *cols):
+        df = spark.read.parquet(os.path.join(sink.data_dir, f"epoch={epoch}"))
+        return sorted(tuple(r[c] for c in ("conv_id", "turn_idx", *cols))
+                      for r in df.collect())
+
+    def test_late_row_boundary_is_the_watermark(self, spark, tmp_path):
+        """A row at the snapshot's watermark is dropped and counted once
+        in late_rows; a row 1 s past it is kept."""
+        h, s = pd.Timedelta(hours=1), pd.Timedelta(seconds=1)
+        fold, sink, open_sink = self._fold(tmp_path)
+        fold(self._batch(spark, [("a", 0, "user", 10 * h)]), 0)
+        wm = self.T0 + 6 * h
+        assert open_sink.manifest_entries()[0]["watermark_ms"] == int(
+            wm.timestamp() * 1000
+        )
+        # b's invocation sits at the watermark, c's one second past it
+        fold(self._batch(spark, [
+            ("b", 0, "assistant", 6 * h), ("b", 1, "tool", 6 * h + 30 * s),
+            ("c", 0, "assistant", 6 * h + s), ("c", 1, "tool", 6 * h + 31 * s),
+        ]), 1)
+        assert self._keys(spark, sink, 1, "resp_turn_idx") == [("c", 0, 1)]
+        assert sink.manifest_entries()[1]["late_rows"] == 1
+
+    def test_empty_epoch_before_the_first_snapshot(self, spark, tmp_path):
+        """An epoch with no rows and no snapshot below it (an empty first
+        input file) commits an empty epoch and the 0 watermark; the next
+        epoch folds from it."""
+        fold, sink, open_sink = self._fold(tmp_path)
+        fold(self._batch(spark, []), 0)
+        assert sink.manifest_entries()[0] == {"epoch": 0, "rows": 0, "late_rows": 0}
+        assert open_sink.manifest_entries()[0]["watermark_ms"] == 0
+        s = pd.Timedelta(seconds=1)
+        fold(self._batch(spark, [("a", 0, "assistant", s), ("a", 1, "tool", 2 * s)]), 1)
+        assert self._keys(spark, sink, 1, "resp_turn_idx") == [("a", 0, 1)]
+
+    def test_snapshot_bounds(self, spark, tmp_path):
+        """With the next watermark at T0 + band, an invocation at T0
+        (ts + band == watermark) leaves the snapshot and, unanswered,
+        times out; one at T0 + 1 µs stays and is answered in the next
+        epoch. A response at the watermark leaves, one 1 µs past it
+        stays."""
+        us, band = pd.Timedelta(microseconds=1), pd.Timedelta(seconds=600)
+        epoch0 = self._batch(spark, [
+            ("i", 0, "assistant", pd.Timedelta(0)),
+            ("j", 0, "assistant", us),
+            ("r", 1, "tool", band),
+            ("s", 1, "tool", band + us),
+            ("z", 0, "user", band + pd.Timedelta(hours=4)),
+        ])
+        epoch1 = self._batch(spark, [("j", 1, "tool", band + us)])
+        fold, sink, open_sink = self._fold(tmp_path)
+        tfold, tsink, _ = self._fold(tmp_path, timeouts=True)
+        for f in (fold, tfold):
+            f(epoch0, 0)
+        assert self._keys(spark, open_sink, 0) == [("j", 0), ("s", 1)]
+        assert self._keys(spark, sink, 0) == []
+        assert self._keys(spark, tsink, 0) == [("i", 0)]
+        for f in (fold, tfold):
+            f(epoch1, 1)
+        assert self._keys(spark, sink, 1, "resp_turn_idx") == [("j", 0, 1)]
+        assert self._keys(spark, tsink, 1) == []
 
 
 class TestIcebergSinkPath:
@@ -1008,6 +1204,24 @@ class TestCrashBetweenRenames:
         assert read() == before
 
 
+@pytest.mark.parametrize(
+    "start",
+    [start_enriched_query, start_session_query, start_join_query],
+    ids=["enriched", "sessions", "tool_pairs"],
+)
+def test_query_is_stateless_with_no_empty_batch(spark, cfg, start):
+    """The three queries app.py drains fold their state per epoch in
+    foreachBatch (dedup, session and tool-pair folds): none has a state
+    operator or runs a no-data batch."""
+    cfg.max_files_per_trigger = 1  # several data batches
+    query, _sink = start(spark, cfg)
+    query.awaitTermination(300)
+    progress = query.recentProgress
+    assert len(progress) == 2
+    assert all(p.stateOperators == [] for p in progress)
+    assert all(p.numInputRows > 0 for p in progress)
+
+
 def test_epoch_commit_protocol_lives_in_sink_module():
     """Only streaming/sink.py renames or deletes directories and names
     the manifest: every epoch-committed output goes through it."""
@@ -1103,24 +1317,26 @@ class TestBuiltinDropDuplicates:
 
 
 class TestRocksDBStateStore:
-    def test_rocksdb_join_matches_default_provider(self, spark, turns_input, tmp_path):
+    def test_rocksdb_windows_match_default_provider(self, spark, turns_input, tmp_path):
         """state_store="rocksdb" (the 10^12-turn backend: state on local
         disk, changelog checkpointing) must be a pure backend swap —
-        byte-identical tool-pair rows vs the default heap provider. The
-        join keeps keyed state on both sides."""
+        byte-identical window rows vs the default heap provider. The
+        windowed-rates aggregate keeps its open windows in keyed state."""
+        from spamscope_spark.streaming.pipeline import start_window_query
+
         base = PipelineConfig(
             input_path=turns_input, work_dir=str(tmp_path / "heap")
         )
-        q, heap_sink = start_join_query(spark, base)
+        q, heap_sink = start_window_query(spark, base)
         q.awaitTermination(300)
         rocks = PipelineConfig(
             input_path=turns_input,
             work_dir=str(tmp_path / "rocks"),
             state_store="rocksdb",
         )
-        q, rocks_sink = start_join_query(spark, rocks)
+        q, rocks_sink = start_window_query(spark, rocks)
         q.awaitTermination(300)
-        key = lambda r: (r["conv_id"], r["turn_idx"])
+        key = lambda r: (r["window_start"], r["conv_id"])
         a = {key(r): r for r in heap_sink.read_merged(spark).collect()}
         b = {key(r): r for r in rocks_sink.read_merged(spark).collect()}
         assert a and a == b
@@ -1128,8 +1344,10 @@ class TestRocksDBStateStore:
     def test_rocksdb_checkpoint_resume_is_incremental(self, spark, turns_input, tmp_path):
         """A restart over a RocksDB checkpoint must resume (not recount):
         appending new input and re-running adds only the new rows. The
-        tool-pair join keeps keyed state on both sides, so the restart
-        reloads a RocksDB state store."""
+        built-in dedup keeps the seen sha1s in keyed state, so the
+        restart reloads a RocksDB state store."""
+        from spamscope_spark.streaming.pipeline import start_dedup_builtin_query
+
         cfg = PipelineConfig(
             input_path=str(tmp_path / "in"),
             work_dir=str(tmp_path / "wd"),
@@ -1137,25 +1355,31 @@ class TestRocksDBStateStore:
         )
         first = spark.read.parquet(turns_input)
         first.coalesce(1).write.mode("append").parquet(cfg.input_path)
-        q, sink = start_join_query(spark, cfg)
+        q, sink = start_dedup_builtin_query(spark, cfg)
         q.awaitTermination(300)
         n1 = sink.read_merged(spark).count()
         assert n1 > 0
         # event times AHEAD of the checkpointed watermark (behind-the-
         # watermark rows are dropped as late by design — see
         # test_exactly_once_on_restart_and_incremental): the same
-        # conversations shifted 30 days, so exactly n1 new pairs
+        # conversations shifted 30 days, each text given a suffix, so
+        # exactly n1 new distinct texts
         extra = (
             first.withColumn("conv_id", F.concat(F.lit("late_"), F.col("conv_id")))
             .withColumn("ts", F.col("ts") + F.expr("INTERVAL 30 DAYS"))
+            .withColumn(
+                "text", F.concat(F.coalesce("text", F.lit("")), F.lit(" later"))
+            )
         )
+        sha1 = F.sha1(F.coalesce(F.col("text"), F.lit("")))
+        assert first.select(sha1).intersect(extra.select(sha1)).count() == 0
         extra.coalesce(1).write.mode("append").parquet(cfg.input_path)
-        q, sink = start_join_query(spark, cfg)
+        q, sink = start_dedup_builtin_query(spark, cfg)
         q.awaitTermination(300)
         assert sink.read_merged(spark).count() == 2 * n1
-        # the restart read only the appended file (the self-join scans
-        # the one turns source once per side, and both scans count)
-        assert sum(p.numInputRows for p in q.recentProgress) == 2 * extra.count()
+        # the restart read only the appended file (one scan of the
+        # turns source)
+        assert sum(p.numInputRows for p in q.recentProgress) == extra.count()
         ops = [s for p in q.recentProgress for s in p.stateOperators]
         assert ops and all(
             any(k.startswith("rocksdb") for k in s.customMetrics) for s in ops
