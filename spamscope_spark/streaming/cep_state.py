@@ -1,109 +1,46 @@
-"""Streaming CEP sequence-pattern matching — the stateful counterpart
-of operators/cep.py's batch `match_sequence` (``PATTERN (A M* Z)``
-within T seconds, per key).
+"""Streaming CEP sequence-pattern matching as a per-epoch snapshot fold
+(fold.py) — the streaming counterpart of operators/cep.py's batch
+`match_sequence` (``PATTERN (A M* Z)`` within T seconds, per key).
 
 Where the reference hard-wires its one pattern into the topology DAG
 (tokenizer → phishing → output per mail), this operator evaluates a
 declarative pattern continuously over an unbounded keyed stream with
-event-time correctness: rows buffer in keyed state until the watermark
-passes their timestamp, then feed — in exact (ts, id) order — the same
-most-recent-start/chain-break state machine the batch window plan
-evaluates, so streaming output rows equal the batch operator's rows for
-every end event at or below the final watermark (parity test in
+event-time correctness: a row waits in the snapshot until the
+watermark passes its timestamp, then feeds, in exact (ts, id) order,
+the same most-recent-start/chain-break rule the batch window plan
+evaluates. So the streaming output rows equal the batch operator's rows
+for every end event at or below the final watermark (parity test in
 tests/test_streaming.py).
 
-Scale shape: keyed_state drives the matcher (hash-bucketed state, one
-Python call per BUCKET per batch, not per key), and rows are projected
-to (key, ts, id, cls) BEFORE the keyed shuffle, so only 4 short columns
-cross the exchange and the Arrow boundary. Per-key state is O(rows
-inside the watermark delay) plus five scalars of matcher state; rows at
-or below the watermark are processed and dropped immediately, and a key
-with nothing buffered is evicted once its chain cannot extend a match
-(no open START, or the watermark passed START + within; the bucket's
-timer covers that moment too). So state never grows past delay ×
-per-key rate — the same horizon contract as Spark's own stream-stream
-joins.
+The snapshot holds one header row per live key — its position counter
+(the batch `_rn` of its last row), its latest START's position, ts and
+id, and its latest chain breaker's (END/OTHER) position — and the key's
+rows above the next watermark. Per epoch, one shuffle on the key: the
+header, the buffered rows and the epoch's on-time rows continue the
+batch `_rn`/`_start_rn`/`_brk_rn` window rule from the header, and an
+END at or below the next watermark with an open START within `within`
+matches. The key's running state at its last row at or below the next
+watermark is its next header. A key with nothing buffered leaves the
+snapshot once its chain cannot extend a match: no open START, or the
+next watermark more than `within` past it. So the snapshot holds at
+most delay × per-key rate rows per key, plus one header.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql import Column, DataFrame, Window
 
-from .keyed_state import apply_bucketed_state
-
-# per-key matcher state list slots
-_BUF = 0        # [(ts_us, id, cls), ...] rows still above the watermark
-_POS = 1        # events processed so far (the batch rn counter)
-_START_POS = 2  # position of the latest START (-1 = none)
-_START_TS = 3
-_START_ID = 4
-_BRK_POS = 5    # position of the latest chain breaker (END/OTHER)
+from .fold import Epoch, snapshot_fold
+from .sink import IdempotentSink
 
 
-def _new_key_state() -> list:
-    return [[], 0, -1, 0, 0, -1]
-
-
-def advance_key(ks: list, wm_us: int, within_us: int) -> list[tuple]:
-    """Feed a key's buffered rows at or below the watermark through the
-    matcher in (ts, id) order. Mutates ks; returns emitted matches as
-    (start_id, end_id, n_mid, duration_ms). Pure function — unit-tested
-    without Spark."""
-    buf = ks[_BUF]
-    if not buf:
-        return []
-    buf.sort()
-    out: list[tuple] = []
-    cut = 0
-    for ts_us, rid, cls in buf:
-        if ts_us > wm_us:
-            break
-        cut += 1
-        pos = ks[_POS]
-        if cls == "E":
-            if (
-                ks[_START_POS] >= 0
-                and ks[_START_POS] > ks[_BRK_POS]
-                and ts_us - ks[_START_TS] <= within_us
-            ):
-                dur_us = ts_us - ks[_START_TS]
-                out.append(
-                    (
-                        ks[_START_ID],
-                        rid,
-                        pos - ks[_START_POS] - 1,
-                        (dur_us - dur_us % 1000) // 1000,
-                    )
-                )
-            ks[_BRK_POS] = pos
-        elif cls == "S":
-            ks[_START_POS] = pos
-            ks[_START_TS] = ts_us
-            ks[_START_ID] = rid
-        elif cls == "X":
-            ks[_BRK_POS] = pos
-        ks[_POS] = pos + 1
-    if cut:
-        ks[_BUF] = buf[cut:]
-    return out
-
-
-def next_due_us(states: dict, within_us: int) -> int:
-    """Earliest event time at which some key needs the matcher again:
-    its oldest buffered row, or — for a key with nothing buffered, which
-    only stays in state while its START can still open a match — the
-    point where the watermark passes START + within and it is evicted."""
-    return min(
-        ks[_BUF][0][0] if ks[_BUF] else ks[_START_TS] + within_us
-        for ks in states.values()
-    )
-
-
-def match_sequence_stream(
-    df: DataFrame,
+def match_sequence_fold(
+    sink: IdempotentSink,
+    state_sink: IdempotentSink,
+    watermark: str,
     key: str,
     ts: str,
     id_col: str,
@@ -111,83 +48,113 @@ def match_sequence_stream(
     mid_pred: Column,
     end_pred: Column,
     within_s: int,
-) -> DataFrame:
-    """Streaming DataFrame (must already carry ``withWatermark(ts, …)``)
-    → append stream of (key, start_id, end_id, n_mid, duration_ms),
-    one row per matching end event, emitted once its event time is at
-    or below the watermark. Late rows beyond the watermark are dropped
-    (standard event-time contract). Classification precedence and
-    duration math are byte-identical to the batch operator."""
-    key_type = df.schema[key].dataType
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key, key_type),
-            StructField("start_id", id_type),
-            StructField("end_id", id_type),
-            StructField("n_mid", IntegerType()),
-            StructField("duration_ms", LongType()),
-        ]
-    )
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch function that writes (key, start_id, end_id, n_mid,
+    duration_ms) rows to `sink`, one per matching end event, in the
+    epoch whose next watermark reaches its event time; `state_sink`
+    takes the snapshots. `watermark` is the stream's delay ("1 hour").
+    Classification precedence and duration math are the batch
+    operator's."""
     within_us = within_s * 1_000_000
-
     cls = (
         F.when(start_pred, F.lit("S"))
         .when(end_pred, F.lit("E"))
         .when(mid_pred, F.lit("M"))
         .otherwise(F.lit("X"))
     )
-    narrow = df.select(F.col(key), F.col(ts), F.col(id_col), cls.alias("_cls"))
+    header = F.col("cls").isNull()
+    data = ~header & ~F.col("_late")
 
-    def drain(states: dict, wm_us: int) -> list[dict]:
-        rows: list[dict] = []
-        dead = []
-        for k, ks in states.items():
-            for sid, eid, n_mid, dur_ms in advance_key(ks, wm_us, within_us):
-                rows.append(
-                    {
-                        key: k,
-                        "start_id": sid,
-                        "end_id": eid,
-                        "n_mid": n_mid,
-                        "duration_ms": dur_ms,
-                    }
-                )
-            # a key with no pending rows keeps only five counters of
-            # matcher state; evict it once its chain cannot extend a
-            # future match (start older than the watermark horizon)
-            if not ks[_BUF] and (
-                ks[_START_POS] <= ks[_BRK_POS]
-                or wm_us - ks[_START_TS] > within_us
-            ):
-                dead.append(k)
-        for k in dead:
-            del states[k]
-        return rows
+    def fold(ep: Epoch, rows: DataFrame) -> DataFrame:
+        # the header first, then the buffered and on-time rows in
+        # (ts, id) order, then the late rows
+        kind = F.when(header, 0).when(F.col("_late"), 2).otherwise(1)
+        by_key = Window.partitionBy(key).orderBy(kind, "ts", id_col)
+        upto = by_key.rowsBetween(Window.unboundedPreceding, 0)
+        before = by_key.rowsBetween(Window.unboundedPreceding, -1)
+        allrows = rows.unionByName(
+            ep.prior.withColumn("_late", F.lit(False)), allowMissingColumns=True
+        ).withColumn(
+            "_rn", F.sum(F.when(header, F.col("pos")).when(data, 1)).over(upto)
+        )
+        start = F.when(
+            header & F.col("start_pos").isNotNull(),
+            F.struct(
+                F.col("start_pos").alias("rn"),
+                F.col("start_ts").alias("ts"),
+                F.col("start_id").alias("id"),
+            ),
+        ).when(
+            data & (F.col("cls") == "S"),
+            F.struct(F.col("_rn").alias("rn"), "ts", F.col(id_col).alias("id")),
+        )
+        brk = F.when(header, F.col("brk_pos")).when(
+            data & F.col("cls").isin("E", "X"), F.col("_rn")
+        )
+        flagged = allrows.select("*", start.alias("_s"), brk.alias("_b")).select(
+            key, "ts", id_col, "cls", "_late", "_rn", "_b",
+            # the latest START up to this row (an END's own START, as an
+            # END is none), and the latest breaker before it
+            F.max("_s").over(upto).alias("_start"),
+            F.max("_b").over(before).alias("_brk"),
+            F.lead(F.when(data, F.col("ts"))).over(by_key).alias("_next_ts"),
+            F.max(F.when(data, F.col("ts")))
+            .over(by_key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+            .alias("_max_ts"),
+        )
+        dur_us = F.unix_micros("ts") - F.unix_micros("_start.ts")
+        return flagged.select(
+            "*",
+            (
+                data
+                & (F.col("cls") == "E")
+                & (F.col("_start.rn") > F.coalesce("_brk", F.lit(0)))
+                & (dur_us <= within_us)
+            ).alias("_match"),
+            ((dur_us - dur_us % 1000) / 1000).cast("bigint").alias("duration_ms"),
+        )
 
-    def buffer_and_drain(states: dict, pdf: pd.DataFrame, wm_us: int) -> list[dict]:
-        keys = pdf[key].values
-        ts_us = pdf[ts].values.astype("datetime64[us]").astype("int64")
-        ids = pdf[id_col].values
-        clss = pdf["_cls"].values
-        for i in range(len(pdf)):
-            t = int(ts_us[i])
-            if t <= wm_us:
-                # late beyond the watermark: already processed past
-                # this point — dropping keeps streaming positions
-                # identical to an on-time run
-                continue
-            ks = states.get(keys[i])
-            if ks is None:
-                states[keys[i]] = ks = _new_key_state()
-            ks[_BUF].append((t, ids[i].item(), clss[i]))
-        return drain(states, wm_us)
+    def split(ep: Epoch, folded: DataFrame):
+        next_wm = F.timestamp_millis(F.lit(ep.next_wm_ms))
+        ready = header | (F.col("ts") <= next_wm)
+        out = folded.where(F.col("_match") & ready).select(
+            key,
+            F.col("_start.id").alias("start_id"),
+            F.col(id_col).alias("end_id"),
+            (F.col("_rn") - F.col("_start.rn") - 1).cast("int").alias("n_mid"),
+            "duration_ms",
+        )
+        last = ready & (F.col("_next_ts").isNull() | (F.col("_next_ts") > next_wm))
+        buffered = F.col("_max_ts").isNotNull() & (F.col("_max_ts") > next_wm)
+        brk_upto = F.greatest("_brk", "_b")
+        open_start = (
+            F.col("_start").isNotNull()
+            & (F.col("_start.rn") > F.coalesce(brk_upto, F.lit(0)))
+            & (F.unix_micros(next_wm) - F.unix_micros("_start.ts") <= within_us)
+        )
+        # a header row has a null cls, a buffered row null header columns
+        headers = folded.where(last & (buffered | open_start)).select(
+            key,
+            F.col("_rn").alias("pos"),
+            F.col("_start.rn").alias("start_pos"),
+            F.col("_start.ts").alias("start_ts"),
+            F.col("_start.id").alias("start_id"),
+            brk_upto.alias("brk_pos"),
+        )
+        rows = folded.where(~ready).select(key, "ts", id_col, "cls")
+        return out, lambda: headers.unionByName(rows, allowMissingColumns=True)
 
-    return apply_bucketed_state(
-        narrow,
-        key,
-        out_schema,
-        on_rows=buffer_and_drain,
-        on_timeout=drain,
-        due_us=lambda states: next_due_us(states, within_us),
-    )
+    def process(batch_df: DataFrame, epoch: int) -> None:
+        narrow = batch_df.select(
+            key, F.col(ts).cast("timestamp").alias("ts"), id_col, cls.alias("cls")
+        )
+        key_type = narrow.schema[key].dataType.simpleString()
+        id_type = narrow.schema[id_col].dataType.simpleString()
+        schema = (
+            f"`{key}` {key_type}, ts timestamp, `{id_col}` {id_type}, cls string, "
+            f"pos long, start_pos long, start_ts timestamp, start_id {id_type}, "
+            "brk_pos long"
+        )
+        snapshot_fold(sink, state_sink, schema, watermark, fold, split)(narrow, epoch)
+
+    return process

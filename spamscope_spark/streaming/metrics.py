@@ -19,13 +19,12 @@ class MetricsListener(StreamingQueryListener):
 
     `late_rows_dropped` in `summary()` sums the state operators'
     numRowsDroppedByWatermark, so it counts only queries that have a
-    state operator. A stateless query that drops late rows itself
-    records them elsewhere: the enriched (`enriched_turns`), `sessions`
-    and `tool_pairs` queries drop them in their foreachBatch
-    folds (dedup, session and tool-pair) and write the count as
-    `late_rows` in each epoch's line of their sink manifest
-    (`IdempotentSink.manifest_entries()` of `out/enriched`,
-    `out/sessions` and `out/tool_pairs`); their `late_rows_dropped` here
+    state operator. A snapshot fold (fold.py: the dedup, session,
+    tool-pair and CEP folds) runs in a stateless query's foreachBatch,
+    drops late rows itself and writes their count as `late_rows` in each
+    epoch's line of its output sink's manifest
+    (`IdempotentSink.manifest_entries()`, e.g. of `out/enriched`,
+    `out/sessions` and `out/tool_pairs`); its `late_rows_dropped` here
     stays 0."""
 
     def __init__(self):

@@ -1,4 +1,4 @@
-"""Streaming tool-call correlation as a per-epoch fold inside foreachBatch.
+"""Streaming tool-call correlation as a per-epoch snapshot fold (fold.py).
 
 Reference semantics: a branch waits in JsonMaker's buffer until its
 partner arrives (src/bolts/json_maker.py:82-88), forever if it never
@@ -9,14 +9,8 @@ with its response (role='tool', same conv_id and tool, resp_ts in
 invocation still unanswered when the watermark passes ts + band is a
 timeout, reported once.
 
-The query stays stateless (no state store, no no-data batch), like the
-dedup and session folds: the pending rows are a side sink with one
-snapshot per epoch. Epoch k reads the newest snapshot committed BELOW
-k, so a replay of k writes the same rows and snapshot. Per epoch, all
-in the JVM:
+The pending rows are the fold's snapshot. Per epoch, all in the JVM:
 
-- rows at or behind the snapshot's watermark are dropped (Spark's
-  late-row rule) and counted as `late_rows` in the output's manifest;
 - the epoch's invocations and responses are unioned with the
   snapshot's, and each invocation takes the earliest answer in its band
   from a range window over (conv_id, tool) ordered by ts, counting only
@@ -25,16 +19,13 @@ in the JVM:
 - each pending invocation carries its best answer so far, and is
   written again only when the epoch brings an earlier one, so the
   merged output holds each invocation's earliest answer;
-- the next watermark is greatest(watermark, max ts - delay). An
-  invocation stays in the snapshot while ts + band is past it, a
-  response while its ts is: an on-time row of a later epoch lies past
-  that watermark, so it can neither answer an invocation that left nor
-  be answered by a response that left. An invocation that leaves with
-  no answer is a timeout.
+- an invocation stays in the snapshot while ts + band is past the next
+  watermark, a response while its ts is: an on-time row of a later
+  epoch lies past that watermark, so it can neither answer an
+  invocation that left nor be answered by a response that left. An
+  invocation that leaves with no answer is a timeout.
 
-One shuffle on (conv_id, tool) carries the fold. Its result is
-checkpointed once; the output and the snapshot are written from it, and
-the epoch's input is read once.
+One shuffle on (conv_id, tool) carries the fold.
 """
 
 from __future__ import annotations
@@ -42,8 +33,9 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 
+from .fold import Epoch, snapshot_fold
 from .sink import IdempotentSink
 
 # the columns of an epoch's turns the fold reads
@@ -143,46 +135,24 @@ def tool_pair_fold(
     the snapshot unanswered. `watermark` is the stream's delay
     ("4 hours")."""
     band_us = band_s * 1_000_000
-    delayed_ms = F.unix_millis(F.col("ts") - F.expr(f"INTERVAL {watermark}"))
 
-    def process(batch_df: DataFrame, epoch: int) -> None:
-        spark = batch_df.sparkSession
-        entry, open_df = open_sink.read_prior(spark, epoch, _OPEN_SCHEMA)
-        # Spark's first-batch watermark is 0 too
-        wm_ms = entry["watermark_ms"] if entry else 0
-        late = F.col("ts") <= F.timestamp_millis(F.lit(wm_ms))
-        late_obs, wm_obs = Observation(), Observation()
-        # Every epoch row rides through the fold's shuffle to be observed
-        # above it: when the rows below a shuffle come out empty, AQE
-        # prunes their stage from the plan, observations and all.
-        folded = (
-            _fold_pairs(open_df, batch_df.select(*ROW_COLS, late.alias("_late")), band_us)
-            .observe(late_obs, F.count_if("_late").alias("late_rows"))
-            .observe(
-                wm_obs,
-                F.greatest(F.max(F.when(F.col("_new"), delayed_ms)), F.lit(wm_ms))
-                .alias("watermark_ms"),
-            )
-            .where(F.col("is_inv").isNotNull())
-            .drop("_new", "_late")
-            # the one job that reads the epoch's input; it completes
-            # both observations
-            .localCheckpoint()
-        )
-        next_wm_us = wm_obs.get["watermark_ms"] * 1000
+    def fold(ep: Epoch, rows: DataFrame) -> DataFrame:
+        return _fold_pairs(ep.prior, rows.select(*ROW_COLS, "_late"), band_us)
+
+    def split(ep: Epoch, folded: DataFrame):
+        pending = folded.where(F.col("is_inv").isNotNull())
+        next_wm_us = ep.next_wm_ms * 1000
         ts_us = F.unix_micros("ts")
         stays = F.when(F.col("is_inv"), ts_us + band_us > next_wm_us).otherwise(
             ts_us > next_wm_us
         )
         if timeouts:
             unanswered = F.col("is_inv") & F.col("resp_turn_idx").isNull()
-            out = folded.where(unanswered & ~stays).select(*TIMEOUT_COLS)
+            out = pending.where(unanswered & ~stays).select(*TIMEOUT_COLS)
         else:
-            out = folded.where("_better").select(
+            out = pending.where("_better").select(
                 *TIMEOUT_COLS, *[F.col(f"_answer.{c}").alias(c) for c in _ANSWER_COLS]
             )
-        sink.observe_next(late_obs)
-        sink.process_batch(out, epoch)
-        open_sink.write_epoch(folded.where(stays).select(*_OPEN_COLS), epoch, wm_obs)
+        return out, lambda: pending.where(stays).select(*_OPEN_COLS)
 
-    return process
+    return snapshot_fold(sink, open_sink, _OPEN_SCHEMA, watermark, fold, split)

@@ -19,6 +19,11 @@
     → foreachBatch exactly-once sink (epoch-atomic parquet MERGE on
       (conv_id, turn_idx)), JSON-per-turn rows, per-partition lineage
 
+The dedup, session and tool-pair folds above, and the CEP sequence
+matcher (cep_state.match_sequence_fold, no query here), are the four
+snapshot folds: one driver (fold.py) runs each in its query's
+foreachBatch against the newest snapshot below the epoch.
+
 Every query checkpoints; a restart resumes from offsets + state (the
 enriched query's seen-set snapshots, the sessions query's open sessions
 and the tool-pairs query's pending rows live beside their outputs).

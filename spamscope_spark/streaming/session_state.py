@@ -1,4 +1,4 @@
-"""Streaming sessionizer as a per-epoch fold inside foreachBatch.
+"""Streaming sessionizer as a per-epoch snapshot fold (fold.py).
 
 Reference semantics: per-conv_id session windows with a gap timeout —
 the bounded version of the reference's wait-forever greedy buffers
@@ -7,25 +7,19 @@ session (within-session duplicate count, the dedup-filter analog of
 src/bolts/tokenizer.py:176-186); and the session's last MAX_SIGS
 shingle signatures for near-dup turn detection (the ssdeep role).
 
-The query stays stateless (no state store, no no-data batch, no Arrow
-round trip), like the enriched query's dedup_fold: the open sessions
-are a side sink with one snapshot per epoch, one row per open session
+The open sessions are the fold's snapshot, one row per open session
 holding its counters, its seen sha1 list (≤ MAX_SEEN) and its last
-signatures (≤ MAX_SIGS). Epoch k reads the newest snapshot committed
-BELOW k, so a replay of k writes the same sessions and snapshot. Per
-epoch, all in the JVM:
+signatures (≤ MAX_SIGS). Per epoch, all in the JVM:
 
-- rows at or behind the snapshot's watermark are dropped (Spark's
-  late-row rule) and counted as `late_rows` in the output's manifest;
 - sessions are assigned per conv_id over the open session and the
-  epoch's rows in (ts, turn_idx) order: a row more than gap after the
-  latest end before it starts a new session (with_session_ids' rule),
-  and session_seq continues the open session's;
+  epoch's on-time rows in (ts, turn_idx) order: a row more than gap
+  after the latest end before it starts a new session (with_session_ids'
+  rule), and session_seq continues the open session's;
 - a session is closed, and written to the output sink, when a later
   session of its conversation exists, or when session_end + gap <= the
-  next watermark, greatest(watermark, max ts - delay): an on-time row
-  of a later epoch lies past that watermark, so it cannot extend the
-  session. The other sessions are the next snapshot.
+  next watermark: an on-time row of a later epoch lies past that
+  watermark, so it cannot extend the session. The other sessions are
+  the next snapshot.
 
 A turn with a sha1 is a duplicate when that sha1 occurred earlier in
 its session: among the session's rows of the same epoch, or in the
@@ -41,9 +35,8 @@ signatures (duplicate turns' signatures included).
 One shuffle on conv_id carries the whole fold: the open sessions enter
 it as rows (a header per session, plus one row per carried sha1 and
 per carried signature), so a carried list is never copied onto the
-epoch's rows. The per-session result is checkpointed once; both sinks
-are written from it, and the epoch's input (whose plan holds the
-shingle pandas_udf) runs once.
+epoch's rows. The epoch's late rows ride along as a group of their own
+per conversation, which only counts them.
 """
 
 from __future__ import annotations
@@ -51,7 +44,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -62,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.fingerprints import gram_similarity, shingle_grams
+from .fold import Epoch, snapshot_fold
 from .sink import IdempotentSink
 
 MAX_SEEN = 512  # bounded dedup list per session (LRU analog of the
@@ -112,8 +106,8 @@ _OPEN_COLS = ["conv_id", *_CARRIED, "seen", "sigs"]
 
 # Row kinds within a conversation, in fold order: the open session's
 # header (ts = its session_end), its carried sha1s and signatures
-# (ordered by _pos), then the epoch's turns.
-_HEADER, _SEEN, _SIG, _TURN = 0, 1, 2, 3
+# (ordered by _pos), then the epoch's on-time turns and its late ones.
+_HEADER, _SEEN, _SIG, _TURN, _LATE = 0, 1, 2, 3, 4
 _ORDER = ["_kind", "ts", "turn_idx", "_pos"]
 
 
@@ -131,9 +125,11 @@ def _tail(items, field: str, n: int, distinct: bool = False):
 
 
 def _fold_sessions(open_df: DataFrame, rows: DataFrame, gap_us: int) -> DataFrame:
-    """Every session the open sessions and the epoch's on-time `rows`
-    make, one row each: the snapshot columns plus `_later` (a later
-    session of the conversation exists)."""
+    """Every session the open sessions and the epoch's `rows` (with a
+    `_late` flag) make, one row each: the snapshot columns plus `_later`
+    (a later session of the conversation exists), `ts` (its end) and
+    `_late` (0). The late rows make one more row per conversation, with
+    a null session_seq and their count in `_late`."""
     header = open_df.select(
         "conv_id", F.lit(_HEADER).alias("_kind"), F.col("session_end").alias("ts"),
         F.struct(*_CARRIED).alias("_open"),
@@ -146,7 +142,9 @@ def _fold_sessions(open_df: DataFrame, rows: DataFrame, gap_us: int) -> DataFram
         "conv_id", F.lit(_SIG).alias("_kind"),
         F.posexplode("sigs").alias("_pos", "shingle_sig"),
     )
-    allrows = rows.select(*ROW_COLS, F.lit(_TURN).alias("_kind"))
+    allrows = rows.select(
+        *ROW_COLS, F.when(F.col("_late"), _LATE).otherwise(_TURN).alias("_kind")
+    )
     for part in (header, seen, sigs):
         allrows = allrows.unionByName(part, allowMissingColumns=True)
 
@@ -165,8 +163,10 @@ def _fold_sessions(open_df: DataFrame, rows: DataFrame, gap_us: int) -> DataFram
     base = F.coalesce(F.max("_open.session_seq").over(whole_conv), F.lit(0)) - 1
     sessioned = allrows.withColumn("_starts", starts.cast("long")).select(
         "*",
-        (base + F.sum("_starts").over(conv.rowsBetween(Window.unboundedPreceding, 0)))
-        .alias("session_seq"),
+        F.when(
+            F.col("_kind") != _LATE,
+            base + F.sum("_starts").over(conv.rowsBetween(Window.unboundedPreceding, 0)),
+        ).alias("session_seq"),
         (base + F.sum("_starts").over(whole_conv)).alias("_last_seq"),
     )
 
@@ -211,6 +211,7 @@ def _fold_sessions(open_df: DataFrame, rows: DataFrame, gap_us: int) -> DataFram
         F.count_if("_near").alias("n_neardup_turns"),
         F.collect_list(F.when(has_sha, F.struct(*_ORDER, "sha1"))).alias("_seen"),
         F.collect_list(F.when(has_sig, F.struct(*_ORDER, "shingle_sig"))).alias("_sigs"),
+        F.count_if(F.col("_kind") == _LATE).alias("_late"),
     )
     return sess.select(
         "conv_id",
@@ -228,6 +229,8 @@ def _fold_sessions(open_df: DataFrame, rows: DataFrame, gap_us: int) -> DataFram
         _tail("_seen", "sha1", MAX_SEEN, distinct=True).alias("seen"),
         _tail("_sigs", "shingle_sig", MAX_SIGS).alias("sigs"),
         (F.col("session_seq") < F.col("_last_seq")).alias("_later"),
+        F.col("session_end").alias("ts"),
+        "_late",
     )
 
 
@@ -242,38 +245,19 @@ def session_fold(
     rows to `sink` and the open ones as the next snapshot to
     `open_sink`. `watermark` is the stream's delay ("4 hours")."""
     gap_us = gap_s * 1_000_000
-    delayed_ms = F.unix_millis(F.col("ts") - F.expr(f"INTERVAL {watermark}"))
 
-    def process(batch_df: DataFrame, epoch: int) -> None:
-        spark = batch_df.sparkSession
-        entry, open_df = open_sink.read_prior(spark, epoch, _OPEN_SCHEMA)
-        # Spark's first-batch watermark is 0 too
-        wm_ms = entry["watermark_ms"] if entry else 0
-        late = F.col("ts") <= F.timestamp_millis(F.lit(wm_ms))
-        late_obs, wm_obs = Observation(), Observation()
-        rows = (
-            batch_df.select(*ROW_COLS)
-            .observe(late_obs, F.count_if(late).alias("late_rows"))
-            .observe(
-                wm_obs,
-                F.greatest(F.max(delayed_ms), F.lit(wm_ms)).alias("watermark_ms"),
-            )
-            .where(~late)
-        )
-        # the one job that reads the epoch's input; it completes both
-        # observations
-        sessions = _fold_sessions(open_df, rows, gap_us).localCheckpoint()
-        next_wm_us = wm_obs.get["watermark_ms"] * 1000
+    def fold(ep: Epoch, rows: DataFrame) -> DataFrame:
+        return _fold_sessions(ep.prior, rows, gap_us)
+
+    def split(ep: Epoch, sessions: DataFrame):
         closed = F.col("_later") | (
-            F.unix_micros("session_end") + gap_us <= next_wm_us
+            F.unix_micros("session_end") + gap_us <= ep.next_wm_ms * 1000
         )
         out = (
             sessions.where(closed)
             .withColumn("session_id", F.concat_ws("#", "conv_id", "session_seq"))
             .select(*SESSION_OUT_SCHEMA.fieldNames())
         )
-        sink.observe_next(late_obs)
-        sink.process_batch(out, epoch)
-        open_sink.write_epoch(sessions.where(~closed).select(*_OPEN_COLS), epoch, wm_obs)
+        return out, lambda: sessions.where(~closed).select(*_OPEN_COLS)
 
-    return process
+    return snapshot_fold(sink, open_sink, _OPEN_SCHEMA, watermark, fold, split)

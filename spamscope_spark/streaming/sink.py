@@ -14,9 +14,9 @@ This module is the one place that knows the epoch layout
 (`data/epoch=k`, the staging and trash dirs, `_manifest.jsonl`) and
 how a fold finds its previous state (`read_prior`).
 Every other epoch-committed output goes through `IdempotentSink`: the
-queue segments (queue_sink), the SCD2 dimension snapshots (scd2_sink)
-and the per-epoch state snapshots of the dedup, session and tool-pair
-folds and the silence monitor.
+queue segments (queue_sink), the SCD2 dimension snapshots (scd2_sink),
+the silence monitor's state snapshots and the per-epoch snapshots of
+the four snapshot folds (fold.py): dedup, session, tool-pair and CEP.
 
 Scale: the manifest holds one line per epoch (not per row); data files
 are partitioned however the batch is partitioned; nothing here is

@@ -744,11 +744,62 @@ class TestToolTimeoutJoin:
         } == got
 
 
+# The snapshot folds over one turns schema: each case makes (fold, output
+# sink, state sink).
+_FOLD_ROWS = (
+    "conv_id string, turn_idx int, role string, text string, tool string, "
+    "ts timestamp, phishing_score int, sha1 string, shingle_sig string"
+)
+_FOLD_T0 = pd.Timestamp("2026-03-01 00:00:00")
+
+
+def _make_fold(kind, tmp_path, watermark="4 hours"):
+    from spamscope_spark.streaming.cep_state import match_sequence_fold
+    from spamscope_spark.streaming.dedup_state import dedup_fold
+    from spamscope_spark.streaming.pair_state import tool_pair_fold
+    from spamscope_spark.streaming.session_state import session_fold
+
+    sink = IdempotentSink(str(tmp_path / "out"), keys=["conv_id", "turn_idx"])
+    state = IdempotentSink(str(tmp_path / "state"), keys=["conv_id"])
+    role = F.col("role")
+    fold = {
+        "dedup": lambda: dedup_fold(sink, state, watermark, 6 * 3600 * 1000),
+        "sessions": lambda: session_fold(sink, state, watermark, 1800),
+        "tool_pairs": lambda: tool_pair_fold(sink, state, watermark, 600),
+        "tool_timeouts": lambda: tool_pair_fold(sink, state, watermark, 600, True),
+        "cep": lambda: match_sequence_fold(
+            sink, state, watermark, key="conv_id", ts="ts", id_col="turn_idx",
+            start_pred=role == "assistant", mid_pred=role == "user",
+            end_pred=role == "tool", within_s=600,
+        ),
+    }[kind]()
+    return fold, sink, state
+
+
+def _fold_batch(spark, rows):
+    """rows: (conv_id, turn_idx, role, offset after _FOLD_T0 as a Timedelta)"""
+    return spark.createDataFrame(
+        [
+            (c, i, role, f"{c}{i}", None if role == "user" else "t",
+             (_FOLD_T0 + off).to_pydatetime(), 0, f"{c}{i}", None)
+            for c, i, role, off in rows
+        ],
+        _FOLD_ROWS,
+    )
+
+
+def _fold_keys(spark, sinks, epoch):
+    """The conv_ids in `epoch` of each sink in `sinks`."""
+    return {
+        r["conv_id"]
+        for sink in sinks
+        for r in sink.read_epoch(spark, epoch).select("conv_id").collect()
+    }
+
+
 class TestToolPairFold:
     """The tool-pair fold (pair_state.tool_pair_fold) behind the join and
     timeout queries."""
-
-    T0 = pd.Timestamp("2026-03-01 00:00:00")
 
     def test_pairs_and_timeouts_span_epochs_and_a_restart(
         self, spark, turns_input, tmp_path
@@ -843,63 +894,11 @@ class TestToolPairFold:
         }
         assert exp_timeouts and got_timeouts == exp_timeouts
 
-    def _fold(self, tmp_path, timeouts=False):
-        from spamscope_spark.streaming.pair_state import tool_pair_fold
-
-        name = "timeouts" if timeouts else "pairs"
-        sink = IdempotentSink(str(tmp_path / name), keys=["conv_id", "turn_idx"])
-        open_sink = IdempotentSink(
-            str(tmp_path / f"{name}_open"), keys=["conv_id", "turn_idx"]
-        )
-        fold = tool_pair_fold(sink, open_sink, "4 hours", 600, timeouts)
-        return fold, sink, open_sink
-
-    def _batch(self, spark, rows):
-        """rows: (conv_id, turn_idx, role, offset after T0 as a Timedelta)"""
-        return spark.createDataFrame(
-            [
-                (c, i, role, f"{c}{i}", None if role == "user" else "t",
-                 (self.T0 + off).to_pydatetime())
-                for c, i, role, off in rows
-            ],
-            TURNS_SCHEMA,
-        )
-
     @staticmethod
     def _keys(spark, sink, epoch, *cols):
         df = spark.read.parquet(os.path.join(sink.data_dir, f"epoch={epoch}"))
         return sorted(tuple(r[c] for c in ("conv_id", "turn_idx", *cols))
                       for r in df.collect())
-
-    def test_late_row_boundary_is_the_watermark(self, spark, tmp_path):
-        """A row at the snapshot's watermark is dropped and counted once
-        in late_rows; a row 1 s past it is kept."""
-        h, s = pd.Timedelta(hours=1), pd.Timedelta(seconds=1)
-        fold, sink, open_sink = self._fold(tmp_path)
-        fold(self._batch(spark, [("a", 0, "user", 10 * h)]), 0)
-        wm = self.T0 + 6 * h
-        assert open_sink.manifest_entries()[0]["watermark_ms"] == int(
-            wm.timestamp() * 1000
-        )
-        # b's invocation sits at the watermark, c's one second past it
-        fold(self._batch(spark, [
-            ("b", 0, "assistant", 6 * h), ("b", 1, "tool", 6 * h + 30 * s),
-            ("c", 0, "assistant", 6 * h + s), ("c", 1, "tool", 6 * h + 31 * s),
-        ]), 1)
-        assert self._keys(spark, sink, 1, "resp_turn_idx") == [("c", 0, 1)]
-        assert sink.manifest_entries()[1]["late_rows"] == 1
-
-    def test_empty_epoch_before_the_first_snapshot(self, spark, tmp_path):
-        """An epoch with no rows and no snapshot below it (an empty first
-        input file) commits an empty epoch and the 0 watermark; the next
-        epoch folds from it."""
-        fold, sink, open_sink = self._fold(tmp_path)
-        fold(self._batch(spark, []), 0)
-        assert sink.manifest_entries()[0] == {"epoch": 0, "rows": 0, "late_rows": 0}
-        assert open_sink.manifest_entries()[0]["watermark_ms"] == 0
-        s = pd.Timedelta(seconds=1)
-        fold(self._batch(spark, [("a", 0, "assistant", s), ("a", 1, "tool", 2 * s)]), 1)
-        assert self._keys(spark, sink, 1, "resp_turn_idx") == [("a", 0, 1)]
 
     def test_snapshot_bounds(self, spark, tmp_path):
         """With the next watermark at T0 + band, an invocation at T0
@@ -908,16 +907,16 @@ class TestToolPairFold:
         epoch. A response at the watermark leaves, one 1 µs past it
         stays."""
         us, band = pd.Timedelta(microseconds=1), pd.Timedelta(seconds=600)
-        epoch0 = self._batch(spark, [
+        epoch0 = _fold_batch(spark, [
             ("i", 0, "assistant", pd.Timedelta(0)),
             ("j", 0, "assistant", us),
             ("r", 1, "tool", band),
             ("s", 1, "tool", band + us),
             ("z", 0, "user", band + pd.Timedelta(hours=4)),
         ])
-        epoch1 = self._batch(spark, [("j", 1, "tool", band + us)])
-        fold, sink, open_sink = self._fold(tmp_path)
-        tfold, tsink, _ = self._fold(tmp_path, timeouts=True)
+        epoch1 = _fold_batch(spark, [("j", 1, "tool", band + us)])
+        fold, sink, open_sink = _make_fold("tool_pairs", tmp_path / "pairs")
+        tfold, tsink, _ = _make_fold("tool_timeouts", tmp_path / "timeouts")
         for f in (fold, tfold):
             f(epoch0, 0)
         assert self._keys(spark, open_sink, 0) == [("j", 0), ("s", 1)]
@@ -927,6 +926,49 @@ class TestToolPairFold:
             f(epoch1, 1)
         assert self._keys(spark, sink, 1, "resp_turn_idx") == [("j", 0, 1)]
         assert self._keys(spark, tsink, 1) == []
+
+
+_FOLDS = ["dedup", "sessions", "tool_pairs", "cep"]
+
+
+@pytest.mark.parametrize(
+    "kind, rows_out, rows_kept",
+    [("dedup", 2, 2), ("sessions", 0, 1), ("tool_pairs", 1, 2), ("cep", 0, 2)],
+    ids=_FOLDS,
+)
+def test_empty_epoch_before_the_first_snapshot(spark, tmp_path, kind, rows_out, rows_kept):
+    """An epoch with no rows and no snapshot below it (an empty first
+    input file) commits an empty epoch and the 0 watermark; the next
+    epoch folds from it."""
+    fold, sink, state = _make_fold(kind, tmp_path)
+    fold(_fold_batch(spark, []), 0)
+    assert sink.manifest_entries()[0] == {"epoch": 0, "rows": 0, "late_rows": 0}
+    assert state.manifest_entries()[0]["watermark_ms"] == 0
+    s = pd.Timedelta(seconds=1)
+    fold(_fold_batch(spark, [("a", 0, "assistant", s), ("a", 1, "tool", 2 * s)]), 1)
+    assert sink.manifest_entries()[1] == {"epoch": 1, "rows": rows_out, "late_rows": 0}
+    assert _fold_keys(spark, [sink], 1) == ({"a"} if rows_out else set())
+    assert state.manifest_entries()[1]["rows"] == rows_kept
+    assert state.manifest_entries()[1]["watermark_ms"] == int(
+        (_FOLD_T0 + 2 * s - pd.Timedelta(hours=4)).timestamp() * 1000
+    )
+
+
+@pytest.mark.parametrize("kind", _FOLDS)
+def test_late_row_boundary_is_the_watermark(spark, tmp_path, kind):
+    """A row at the snapshot's watermark is dropped and counted once in
+    late_rows; a row 1 s past it is kept."""
+    h, s = pd.Timedelta(hours=1), pd.Timedelta(seconds=1)
+    fold, sink, state = _make_fold(kind, tmp_path)
+    fold(_fold_batch(spark, [("a", 0, "assistant", 10 * h)]), 0)
+    wm = _FOLD_T0 + 6 * h
+    assert state.manifest_entries()[0]["watermark_ms"] == int(wm.timestamp() * 1000)
+    # b's invocation sits at the watermark, c's one second past it
+    fold(_fold_batch(spark, [
+        ("b", 0, "assistant", 6 * h), ("c", 0, "assistant", 6 * h + s),
+    ]), 1)
+    assert sink.manifest_entries()[1]["late_rows"] == 1
+    assert _fold_keys(spark, [sink, state], 1) == {"a", "c"}
 
 
 class TestIcebergSinkPath:
@@ -1244,10 +1286,11 @@ def test_epoch_commit_protocol_lives_in_sink_module():
     assert {rel for rel, _ in found} == {os.path.join("streaming", "sink.py")}, found
 
 
-def test_python_keyed_state_lives_in_keyed_state_module():
-    """Only streaming/keyed_state.py runs applyInPandasWithState, touches
-    GroupState and pickles state: every Python stateful operator keeps
-    its state through it."""
+def test_snapshot_fold_protocol_lives_in_one_module():
+    """Only streaming/fold.py observes late rows and watermarks and names
+    them in a manifest: every snapshot fold runs through it. No module
+    keeps Python keyed state (applyInPandasWithState, GroupState, pickled
+    blobs)."""
     import spamscope_spark
 
     root = os.path.dirname(spamscope_spark.__file__)
@@ -1261,12 +1304,16 @@ def test_python_keyed_state_lives_in_keyed_state_module():
                 text = f.read()
             found += [
                 (os.path.relpath(path, root), needle)
-                for needle in (".applyInPandasWithState(", "GroupState", "pickle.")
+                for needle in (
+                    "Observation(", '"watermark_ms"', '"late_rows"',
+                    "applyInPandasWithState", "GroupState", "pickle.",
+                )
                 if needle in text
             ]
-    assert {rel for rel, _ in found} == {
-        os.path.join("streaming", "keyed_state.py")
-    }, found
+    assert sorted(found) == [
+        (os.path.join("streaming", "fold.py"), needle)
+        for needle in ('"late_rows"', '"watermark_ms"', "Observation(")
+    ], found
 
 
 class TestBuiltinDropDuplicates:
@@ -1438,12 +1485,15 @@ class TestIncrementalConsumer:
 
 
 class TestCepStream:
-    """Streaming CEP (cep_state.match_sequence_stream) emits exactly the
-    batch operator's matches for every end event at or below the final
-    watermark — same pattern, same input, multi-batch arrival."""
+    """The streaming CEP fold (cep_state.match_sequence_fold) emits
+    exactly the batch operator's matches for every end event at or below
+    the final watermark — same pattern, same input, multi-epoch
+    arrival."""
 
     WITHIN_S = 24 * 3600
     DELAY = "1 hour"
+    SCHEMA = "user_id string, event_id long, event_type string, ts timestamp"
+    T0 = pd.Timestamp("2024-01-01")
 
     def _preds(self):
         return dict(
@@ -1452,48 +1502,73 @@ class TestCepStream:
             end_pred=F.col("event_type") == "error",
         )
 
+    def _fold(self, work, delay=DELAY, within_s=WITHIN_S):
+        from spamscope_spark.streaming.cep_state import match_sequence_fold
+
+        sink = IdempotentSink(os.path.join(work, "out"), keys=["user_id", "end_id"])
+        state = IdempotentSink(os.path.join(work, "state"), keys=["user_id"])
+        fold = match_sequence_fold(
+            sink, state, delay, key="user_id", ts="ts", id_col="event_id",
+            within_s=within_s, **self._preds(),
+        )
+        return fold, sink, state
+
+    def _drain(self, spark, schema, inp, work):
+        """Drain the files under `inp` one per epoch through the fold,
+        checkpointed under `work`."""
+        fold, sink, _ = self._fold(work)
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
+            .writeStream.foreachBatch(fold)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return q, sink
+
+    @staticmethod
+    def _matches(df):
+        return {
+            (r.user_id, r.start_id, r.end_id, r.n_mid, r.duration_ms)
+            for r in df.collect()
+        }
+
     def test_matches_batch_below_watermark(self, spark, tmp_path):
+        """Four time-ordered files, one epoch each. Drained in two runs
+        from one checkpoint (2 files, then 2 appended), the merged output
+        equals an uninterrupted drain and the batch matches."""
         from spamscope_spark.operators import cep
-        from spamscope_spark.streaming import cep_state
 
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").withColumn(
-            "ts", F.col("ts").cast("timestamp")  # watermark rejects NTZ
+            "ts", F.col("ts").cast("timestamp")
         )
-        # four time-ordered files -> four microbatches, advancing watermark
         inp = str(tmp_path / "ev_in")
         n = ev.count()
         ranked = ev.orderBy("ts", "event_id").withColumn(
             "_q", F.floor(F.row_number().over(
                 Window.orderBy("ts", "event_id")) * 4 / (n + 1))
         )
-        for q in range(4):
+
+        def append(q):
             ranked.where(F.col("_q") == q).drop("_q").coalesce(1).write.mode(
                 "append"
             ).parquet(inp)
 
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inp)
-            .withWatermark("ts", self.DELAY)
-        )
-        out = cep_state.match_sequence_stream(
-            stream, key="user_id", ts="ts", id_col="event_id",
-            within_s=self.WITHIN_S, **self._preds(),
-        )
-        outdir = str(tmp_path / "cep_out")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outdir)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        got = {
-            (r.user_id, r.start_id, r.end_id, r.n_mid, r.duration_ms)
-            for r in spark.read.parquet(outdir).collect()
-        }
+        resumed = str(tmp_path / "resumed")
+        for q in range(2):
+            append(q)
+        first, _ = self._drain(spark, ev.schema, inp, resumed)
+        assert len(first.recentProgress) == 2
+        for q in range(2, 4):
+            append(q)
+        again, sink = self._drain(spark, ev.schema, inp, resumed)
+        assert len(again.recentProgress) == 2
+        _, whole = self._drain(spark, ev.schema, inp, str(tmp_path / "whole"))
+        got = self._matches(sink.read_merged(spark))
+        assert got == self._matches(whole.read_merged(spark))
 
         batch = cep.match_sequence(
             ev, key="user_id", ts="ts", id_col="event_id",
@@ -1508,104 +1583,91 @@ class TestCepStream:
             F.col("event_id").alias("end_id"),
             F.unix_micros(F.col("ts").cast("timestamp")).alias("_end_us"),
         )
-        exp = {
-            (r.user_id, r.start_id, r.end_id, r.n_mid, r.duration_ms)
-            for r in batch.join(ends, "end_id")
-            .where(F.col("_end_us") <= wm_us)
-            .collect()
-        }
+        exp = self._matches(
+            batch.join(ends, "end_id").where(F.col("_end_us") <= wm_us)
+        )
         assert len(exp) > 0
         assert got == exp
 
+    def _fold_epochs(self, spark, tmp_path, delay, epochs, within_s=600):
+        """Fold one static epoch per list of (user_id, event_id,
+        event_type, seconds after T0); returns the matches of each epoch
+        and the state sink."""
+        fold, sink, state = self._fold(str(tmp_path), delay, within_s)
+        out = []
+        for k, rows in enumerate(epochs):
+            fold(spark.createDataFrame(
+                [(u, i, e, (self.T0 + pd.Timedelta(seconds=t)).to_pydatetime())
+                 for u, i, e, t in rows],
+                self.SCHEMA,
+            ), k)
+            out.append(sorted(
+                tuple(r)[1:] for r in sink.read_epoch(spark, k).collect()
+            ))
+        return out, state
+
     def test_open_start_is_evicted_past_the_horizon(self, spark, tmp_path):
-        """A key whose last event is a START leaves state once the
-        watermark passes START + within, even when no later row reaches
-        its bucket: the bucket's timer covers open chains."""
-        from spamscope_spark.streaming import cep_state
-        from spamscope_spark.streaming.keyed_state import N_BUCKETS
-
-        # three keys in three different buckets
-        cands = [f"u{i}" for i in range(16)]
-        buckets = spark.createDataFrame([(k,) for k in cands], "k string").select(
-            "k", F.pmod(F.xxhash64("k"), F.lit(N_BUCKETS)).alias("b")
-        ).collect()
-        first = {}
-        for r in buckets:
-            first.setdefault(r["b"], r["k"])
-        a, b, c = list(first.values())[:3]
-
-        t0 = pd.Timestamp("2024-01-01").to_pydatetime()
-        hours = lambda n: pd.Timedelta(hours=n).to_pytimedelta()  # noqa: E731
-        within = hours(self.WITHIN_S // 3600)
+        """A key whose last event is a START leaves the snapshot once the
+        watermark passes START + within, though no later row of its key
+        arrives."""
+        h, within = 3600, self.WITHIN_S
         # a: one START; b and c: other-class events that move the
-        # watermark (delay 1 h) past a's START (after b's batch), then
-        # past a's START + within (after c's batch). The last file only
-        # carries the watermark past c: it is filtered out above the
-        # watermark, as any row that entered state would sit above it.
-        files = [
-            (a, 1, "purchase", t0),
-            (b, 2, "login", t0 + hours(2)),
-            (c, 3, "login", t0 + within + hours(3)),
-            ("tick", 4, "login", t0 + within + hours(5)),
+        # watermark (delay 1 h) past a's START (epoch 1), then past a's
+        # START + within (epoch 2)
+        _, state = self._fold_epochs(spark, tmp_path, self.DELAY, [
+            [("a", 1, "purchase", 0)],
+            [("b", 2, "login", 2 * h)],
+            [("c", 3, "login", within + 3 * h)],
+            [("tick", 4, "login", within + 5 * h)],
+        ], within_s=within)
+
+        def keys(epoch):
+            return {r.user_id for r in state.read_epoch(spark, epoch).collect()}
+
+        assert keys(1) == {"a", "b"}
+        assert keys(3) == {"tick"}
+
+    def test_kernel_positions_persist_across_batches(self, spark, tmp_path):
+        # epoch 0: S at 0 s and M at 60 s, processed (delay 0); epoch 1:
+        # E at 120 s matches, n_mid counting the M of epoch 0; epoch 2:
+        # the chain is broken by that E, so a later E alone cannot match
+        out, _ = self._fold_epochs(spark, tmp_path, "0 seconds", [
+            [("k", 1, "purchase", 0), ("k", 2, "click", 60)],
+            [("k", 3, "error", 120)],
+            [("k", 4, "error", 180)],
+        ])
+        assert out == [[], [(1, 3, 1, 120_000)], []]
+
+    def test_kernel_rows_above_watermark_stay_buffered(self, spark, tmp_path):
+        # epoch 0's next watermark is 20 s: S is processed, E buffered;
+        # epoch 1's row of another key moves it to 60 s, past E
+        out, state = self._fold_epochs(spark, tmp_path, "30 seconds", [
+            [("k", 1, "purchase", 10), ("k", 2, "error", 50)],
+            [("z", 3, "login", 90)],
+        ])
+        snap = state.read_epoch(spark, 0).orderBy("cls").collect()
+        assert [(r.user_id, r.event_id, r.cls, r.start_id) for r in snap] == [
+            ("k", None, None, 1), ("k", 2, "E", None),
         ]
-        inp = str(tmp_path / "ev_in")
-        schema = "user_id string, event_id long, event_type string, ts timestamp"
-        for row in files:
-            spark.createDataFrame([row], schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(inp)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inp)
-            .withWatermark("ts", self.DELAY)
-            .where(F.col("ts") < F.lit(files[-1][3]))
-        )
-        out = cep_state.match_sequence_stream(
-            stream, key="user_id", ts="ts", id_col="event_id",
-            within_s=self.WITHIN_S, **self._preds(),
-        )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", str(tmp_path / "cep_out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        assert sum(p.numInputRows for p in q.recentProgress) == len(files)
-        assert q.recentProgress[-1].stateOperators[0].numRowsTotal == 0
+        assert out == [[], [(1, 2, 0, 40_000)]]
 
-    def test_kernel_positions_persist_across_batches(self):
-        from spamscope_spark.streaming.cep_state import (
-            _new_key_state,
-            advance_key,
+    def test_all_late_epoch_after_the_snapshot_emptied(self, spark, tmp_path):
+        """With delay 0 an epoch's rows are all processed at once, and a
+        key with no open START leaves: the snapshot empties. An all-late
+        epoch then writes nothing, counts its drops and keeps the
+        watermark."""
+        out, state = self._fold_epochs(spark, tmp_path, "0 seconds", [
+            [("k", 1, "click", 3600)],
+            [("m", 2, "purchase", 1800), ("k", 3, "error", 3600)],
+        ])
+        assert out == [[], []]
+        entries = state.manifest_entries()
+        assert [entries[e]["rows"] for e in (0, 1)] == [0, 0]
+        assert entries[1]["watermark_ms"] == entries[0]["watermark_ms"] == int(
+            (self.T0 + pd.Timedelta(hours=1)).timestamp() * 1000
         )
-
-        w_us = 600 * 1_000_000
-        ks = _new_key_state()
-        # batch 1: S at t=0, M at t=60s buffered; watermark at 100s
-        ks[0].extend([(0, 1, "S"), (60_000_000, 2, "M")])
-        assert advance_key(ks, 100_000_000, w_us) == []
-        # batch 2: E at t=120s; watermark passes it -> match, n_mid
-        # counts the M processed in the earlier batch
-        ks[0].append((120_000_000, 3, "E"))
-        assert advance_key(ks, 200_000_000, w_us) == [(1, 3, 1, 120_000)]
-        # chain broken by the E; a later E alone cannot match
-        ks[0].append((180_000_000, 4, "E"))
-        assert advance_key(ks, 300_000_000, w_us) == []
-
-    def test_kernel_rows_above_watermark_stay_buffered(self):
-        from spamscope_spark.streaming.cep_state import (
-            _new_key_state,
-            advance_key,
-        )
-
-        ks = _new_key_state()
-        ks[0].extend([(10, 1, "S"), (50, 2, "E")])
-        assert advance_key(ks, 20, 10**9) == []  # E still above wm
-        assert ks[0] == [(50, 2, "E")]
-        assert advance_key(ks, 60, 10**9) == [(1, 2, 0, 0)]
+        sink = IdempotentSink(str(tmp_path / "out"), keys=["user_id", "end_id"])
+        assert sink.manifest_entries()[1]["late_rows"] == 2
 
 
 class TestWindowedCmSketch:
