@@ -9,10 +9,23 @@ Usage (multi-executor cluster):
       app.py --input s3://bucket/turns --work-dir s3://bucket/spamscope \\
              --gap-s 1800 --watermark "4 hours" [--continuous]
 
-Runs the three queries (enriched turns / sessions / tool pairs) with
-checkpoints under {work-dir}/checkpoints — kill it and resubmit, it
-resumes from offsets + state. Default trigger is availableNow (drain
-the backlog and exit); --continuous keeps it running on a 30s trigger.
+Runs the three queries (enriched turns / sessions / tool pairs), each
+reading the turns source, with checkpoints under {work-dir}/checkpoints.
+The same three queries run in both modes; only the trigger differs. The
+default is availableNow (drain the backlog and exit); --continuous keeps
+them running, one microbatch after another. Kill it and resubmit, it
+resumes: a checkpoint holds the source offsets, and each query's state
+(seen set, open sessions, pending tool calls) lives in per-epoch
+snapshots beside its output under {work-dir}/out.
+
+None of the three has a state operator. Queries with one take their
+state-store provider from Spark's conf, as in any deployment; RocksDB is
+
+  --conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
+  --conf spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled=true
+
+The printed summary's `late_rows_dropped` per query is the sum of the
+`late_rows` its folds recorded in its sink's manifest.
 
 The reference's equivalent is `spamscope-topology submit`
 (src/cli/spamscope_topology.py:32-142).
@@ -62,33 +75,18 @@ def main() -> None:
     listener = MetricsListener()
     spark.streams.addListener(listener)
 
-    available_now = not args.continuous
-    if args.continuous:
-        # Storm-topology dataflow: one enrichment pass feeds downstream
-        # stages — sessions stream FROM the enriched sink's epochs as
-        # they land (cascade). In drain mode (availableNow) the stages
-        # run independently instead, since a drained enriched query may
-        # finish after sessions already listed its input files.
-        session_cfg = PipelineConfig(
-            input_path=args.input,
-            work_dir=args.work_dir,
-            input_format=args.input_format,
-            gap_s=args.gap_s,
-            watermark=args.watermark,
-            band_s=args.band_s,
-            max_files_per_trigger=args.max_files_per_trigger,
-            enriched_source=cfg.output("enriched"),
-        )
-    else:
-        session_cfg = cfg
-    queries = [
-        start_enriched_query(spark, cfg, available_now=available_now)[0],
-        start_session_query(spark, session_cfg, available_now=available_now)[0],
-        start_join_query(spark, cfg, available_now=available_now)[0],
+    started = [
+        start(spark, cfg, available_now=not args.continuous)
+        for start in (start_enriched_query, start_session_query, start_join_query)
     ]
-    for q in queries:
+    for q, _ in started:
         q.awaitTermination()
-    json.dump(listener.summary(), sys.stdout, indent=2)
+    summary = listener.summary()
+    for q, sink in started:
+        summary.setdefault(q.name, {})["late_rows_dropped"] = sum(
+            e.get("late_rows", 0) for e in sink.manifest_entries().values()
+        )
+    json.dump(summary, sys.stdout, indent=2)
     print()
 
 

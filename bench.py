@@ -196,36 +196,26 @@ def stream_worker(cpus: int, input_path: str, work_dir: str) -> dict:
     def run_pipeline(
         input_p: str, wd: str, subset: set[str] | None = None
     ) -> dict[str, float]:
-        """Cascade: enrich once (heavy stage, exactly-once sink), then
-        sessions + windows stream FROM the enriched sink (the Storm
-        fan-out: tokenizer feeds downstream bolts once); the tool join
-        reads raw turns (its own branch). Returns per-stage wall."""
-        # state backend: heap (default) or rocksdb via env — rocksdb is
-        # the 10^12-turn configuration (state > executor heap); heap is
-        # faster at this fixture's state size, so the graded number uses
-        # it and the rocksdb path is covered by parity tests + the env.
-        store = os.environ.get("SPARK_GRAFT_STATE_STORE", "hdfs")
-        cfg = PipelineConfig(input_path=input_p, work_dir=wd, state_store=store)
-        cascade = PipelineConfig(
-            input_path=input_p,
-            work_dir=wd,
-            enriched_source=cfg.output("enriched"),
-            state_store=store,
-        )
+        """The enriched, sessions, window-rates and tool-pairs queries
+        in turn, each reading the turns source. Returns per-stage wall.
+        The state-store provider is Spark's conf
+        (spark.sql.streaming.stateStore.providerClass), as in any
+        deployment."""
+        cfg = PipelineConfig(input_path=input_p, work_dir=wd)
         stages = [
-            ("enriched", start_enriched_query, cfg, heavy_parts),
-            ("sessions", start_session_query, cascade, heavy_parts),
-            ("window_rates", start_window_query, cascade, light_parts),
-            ("tool_pairs", start_join_query, cfg, light_parts),
+            ("enriched", start_enriched_query, heavy_parts),
+            ("sessions", start_session_query, heavy_parts),
+            ("window_rates", start_window_query, light_parts),
+            ("tool_pairs", start_join_query, light_parts),
         ]
         walls: dict[str, float] = {}
-        for name, start, c, parts in stages:
+        for name, start, parts in stages:
             if subset is not None and name not in subset:
                 continue
             # picked up at query start (fresh checkpoints every run)
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
             s0 = time.time()
-            q, _ = start(spark, c)
+            q, _ = start(spark, cfg)
             q.awaitTermination()
             walls[name] = round(time.time() - s0, 3)
         return walls

@@ -50,77 +50,6 @@ def score_expanded_col(score: Column) -> Column:
     return F.filter(F.array(*entries), lambda x: x.isNotNull())
 
 
-def phishing_columns(
-    *,
-    text: Column,
-    tool_text: Column | None = None,
-    tool_name: Column | None = None,
-    author: Column | None = None,
-    target_keys: dict[str, list],
-    subject_keys: list,
-    whitelist: list[str] | None = None,
-    urls_body: Column | None = None,
-    urls_tool: Column | None = None,
-) -> dict[str, Column]:
-    """Returns {urls, targets, phishing_score, score_expanded,
-    with_phishing} columns. Surfaces may be omitted (bits stay 0), same
-    as absent mail parts in the reference. urls_body/urls_tool may be
-    passed explicitly (the reference API takes pre-extracted urls,
-    phishing.py:104-106); by default they are extracted from
-    text/tool_text."""
-    tool_text = tool_text if tool_text is not None else F.lit(None).cast("string")
-    tool_name = tool_name if tool_name is not None else F.lit(None).cast("string")
-    author = author if author is not None else F.lit(None).cast("string")
-
-    if urls_body is None:
-        urls_body = filter_whitelisted(extract_urls(text), whitelist or [])
-    if urls_tool is None:
-        urls_tool = filter_whitelisted(extract_urls(tool_text), whitelist or [])
-
-    def surface_hit(surface: Column) -> Column:
-        nonempty = surface.isNotNull() & (F.length(surface) > 0)
-        return nonempty & (F.size(matched_targets(surface, target_keys)) > 0)
-
-    bit = {
-        "mail_body": surface_hit(text),
-        "mail_from": surface_hit(author),
-        "text_attachments": surface_hit(tool_text),
-        "filename_attachments": surface_hit(tool_name),
-        "urls_body": (F.size(urls_body) > 0)
-        & urls_match_any_target(urls_body, target_keys),
-        "urls_attachments": (F.size(urls_tool) > 0)
-        & urls_match_any_target(urls_tool, target_keys),
-        "mail_subject": search_words(F.coalesce(text, F.lit("")), subject_keys),
-        "mail_form": check_form(text),
-    }
-
-    score = F.lit(0)
-    for name, pos in PHISHING_BITMAP.items():
-        score = score + F.when(bit[name], F.lit(1 << pos)).otherwise(F.lit(0))
-    score = score.cast("int")
-
-    # targets accumulate across all four keyword surfaces (phishing.py:125-137)
-    targets = F.array_sort(
-        F.array_distinct(
-            F.concat(
-                matched_targets(F.coalesce(text, F.lit("")), target_keys),
-                matched_targets(F.coalesce(author, F.lit("")), target_keys),
-                matched_targets(F.coalesce(tool_text, F.lit("")), target_keys),
-                matched_targets(F.coalesce(tool_name, F.lit("")), target_keys),
-            )
-        )
-    )
-
-    with_urls = (F.size(urls_body) > 0) | (F.size(urls_tool) > 0)
-    return {
-        "urls": urls_body,
-        "targets": targets,
-        "phishing_score": score,
-        "score_expanded": score_expanded_col(score),
-        "with_phishing": (score > 0) & with_urls,
-    }
-
-
 def with_phishing_columns(
     df: DataFrame,
     *,
@@ -132,7 +61,9 @@ def with_phishing_columns(
     subject_keys: list,
     whitelist: list[str] | None = None,
 ) -> DataFrame:
-    """Staged variant of phishing_columns: intermediates (extracted
+    """Adds the urls, targets, phishing_score, score_expanded and
+    with_phishing columns. Surfaces may be omitted (bits stay 0), same
+    as absent mail parts in the reference. Intermediates (extracted
     urls, per-surface target arrays) are materialized as named columns
     so each expensive subtree appears ONCE in the plan instead of being
     inlined into every bit check — smaller Catalyst trees (analysis

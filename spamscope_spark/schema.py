@@ -12,7 +12,6 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -62,23 +61,5 @@ ENRICHED_SCHEMA = StructType(
         StructField("score_expanded", ArrayType(StringType()), True),
         StructField("with_phishing", BooleanType(), True),
         StructField("is_filtered", BooleanType(), True),
-    ]
-)
-
-# Per-session feature vector emitted by the stateful sessionizer.
-SESSION_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("session_id", StringType(), False),
-        StructField("session_start", TimestampType(), True),
-        StructField("session_end", TimestampType(), True),
-        StructField("n_turns", LongType(), True),
-        StructField("n_user", LongType(), True),
-        StructField("n_assistant", LongType(), True),
-        StructField("n_tool", LongType(), True),
-        StructField("n_system", LongType(), True),
-        StructField("n_tool_calls", LongType(), True),
-        StructField("max_phishing_score", IntegerType(), True),
-        StructField("n_duplicate_turns", LongType(), True),
     ]
 )

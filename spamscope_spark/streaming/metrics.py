@@ -25,7 +25,7 @@ class MetricsListener(StreamingQueryListener):
     epoch's line of its output sink's manifest
     (`IdempotentSink.manifest_entries()`, e.g. of `out/enriched`,
     `out/sessions` and `out/tool_pairs`); its `late_rows_dropped` here
-    stays 0."""
+    stays 0, and app.py prints the manifest sum in its place."""
 
     def __init__(self):
         self.progress: dict[str, list[dict]] = defaultdict(list)

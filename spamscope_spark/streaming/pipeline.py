@@ -24,9 +24,17 @@ matcher (cep_state.match_sequence_fold, no query here), are the four
 snapshot folds: one driver (fold.py) runs each in its query's
 foreachBatch against the newest snapshot below the epoch.
 
+Every query reads the turns source itself (`read_turns_stream`), in
+drain and continuous mode alike: no query streams another query's sink,
+so the dataflow is the same whichever trigger runs it.
+
 Every query checkpoints; a restart resumes from offsets + state (the
 enriched query's seen-set snapshots, the sessions query's open sessions
-and the tool-pairs query's pending rows live beside their outputs).
+and the tool-pairs query's pending rows live beside their outputs). The
+queries with a state operator (windows, sketches, the built-in dedup,
+the anomaly and silence counts) keep it in the state store that Spark's
+own conf names (`spark.sql.streaming.stateStore.providerClass`, e.g.
+RocksDB via `spark-submit --conf`); nothing here overrides it.
 """
 
 from __future__ import annotations
@@ -36,13 +44,6 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
@@ -50,7 +51,7 @@ from ..schema import TURNS_SCHEMA
 from .dedup_state import dedup_fold
 from .pair_state import tool_pair_fold
 from .session_state import session_fold
-from .sink import IdempotentSink, epochs_glob
+from .sink import IdempotentSink
 
 
 @dataclass
@@ -68,22 +69,6 @@ class PipelineConfig:
     slide_s: int | None = None  # sliding windows when set (else tumbling)
     dedup_state_timeout_ms: int = 6 * 3600 * 1000
     max_files_per_trigger: int | None = None
-    # Cascade mode: when set, session/window queries stream from this
-    # enriched-sink path instead of re-deriving enrichment from raw
-    # turns — the Storm-topology dataflow (tokenizer bolt feeds the
-    # downstream bolts exactly once, topologies/spamscope_debug.py:39-73).
-    enriched_source: str | None = None
-    # Keyed-state backend: "hdfs" (default heap-HashMap provider — fine
-    # while per-executor state fits the JVM heap) or "rocksdb"
-    # (RocksDBStateStoreProvider + changelog checkpointing). At the
-    # 10^12-turn design point the keyed state (windows, built-in
-    # dedup, CEP matcher) exceeds
-    # executor heap by orders of magnitude; RocksDB keeps it on local
-    # SSD with bounded memory and checkpoints incrementally (changelog,
-    # not full-snapshot — the knob that keeps commit time flat as state
-    # grows). Recorded per-query at start; a checkpoint resumes with
-    # the provider it was created under.
-    state_store: str = "hdfs"
     # Priority-ingestion approximation (SURVEY §7 risk 6): order each
     # microbatch's sink output by (priority if present, ts, conv_id,
     # turn_idx) — the reference spout's (priority, ctime) queue holds
@@ -123,46 +108,6 @@ def read_turns_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     if cfg.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", cfg.max_files_per_trigger)
     return reader.parquet(cfg.input_path)
-
-
-# Column-pruned view of the enriched sink the downstream stateful
-# stages actually read — a parquet stream with a subset schema scans
-# ONLY these columns (footer projection), not the wide enriched row.
-_ENRICHED_MIN_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("role", StringType(), False),
-        StructField("tool", StringType(), True),
-        StructField("ts", TimestampType(), False),
-        StructField("phishing_score", IntegerType(), True),
-        StructField("sha1", StringType(), True),
-        StructField("shingle_sig", StringType(), True),
-    ]
-)
-
-
-def read_enriched_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Cascade source: stream the enriched sink's epoch directories.
-    One enrichment pass feeds every downstream stage (the reference
-    computes tokenizer features once and fans out; re-deriving
-    enrichment per consumer would multiply the heaviest stage)."""
-    from ..config import ensure_py_files
-
-    ensure_py_files(spark)
-    return (
-        spark.readStream.schema(_ENRICHED_MIN_SCHEMA)
-        .parquet(epochs_glob(cfg.enriched_source))
-        .withWatermark("ts", cfg.watermark)
-    )
-
-
-def _session_input(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """Input for the stateful session/window stages: the enriched sink
-    stream in cascade mode, else enrichment derived from raw turns."""
-    if cfg.enriched_source:
-        return read_enriched_stream(spark, cfg)
-    return enriched_stream(spark, cfg)
 
 
 def _sha1_turns(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
@@ -336,29 +281,6 @@ def windowed_cm_sketch(
 # query assembly
 # ---------------------------------------------------------------------------
 
-_STATE_PROVIDERS = {
-    "hdfs": "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider",
-    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-               "RocksDBStateStoreProvider",
-}
-
-
-def _apply_state_store(spark: SparkSession, cfg: PipelineConfig) -> None:
-    """Select the keyed-state backend for queries started after this
-    call (the provider is captured from the session conf at query
-    start). rocksdb + changelog checkpointing is the 10^12-turn
-    configuration; hdfs is the small-state default."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        _STATE_PROVIDERS[cfg.state_store],
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled",
-        str(cfg.state_store == "rocksdb").lower(),
-    )
-
 
 def _start(
     spark: SparkSession,
@@ -370,13 +292,11 @@ def _start(
     batch_fn=None,
     query_name: str | None = None,
 ):
-    """The one writer behind every start_*_query: select the state-store
-    backend, then run `df` through foreachBatch (`batch_fn`, default the
-    sink itself) in append mode, checkpointed under `name` and drained
-    with availableNow when asked. `query_name` defaults to `name`; three
-    queries pass their own, which MetricsListener and the benchmarks
-    key on. Returns (query, sink)."""
-    _apply_state_store(spark, cfg)
+    """The one writer behind every start_*_query: run `df` through
+    foreachBatch (`batch_fn`, default the sink itself) in append mode,
+    checkpointed under `name` and drained with availableNow when asked.
+    `query_name` defaults to `name`; three queries pass their own, which
+    MetricsListener and the benchmarks key on. Returns (query, sink)."""
     writer = (
         df.writeStream.foreachBatch(batch_fn or sink)
         .option("checkpointLocation", cfg.checkpoint(name))
@@ -499,7 +419,7 @@ def start_session_query(
     open_sink = IdempotentSink(cfg.output("sessions_open"), keys=["conv_id"])
     fold = session_fold(sink, open_sink, cfg.watermark, cfg.gap_s)
     return _start(
-        spark, cfg, _session_input(spark, cfg), "sessions", sink, available_now,
+        spark, cfg, enriched_stream(spark, cfg), "sessions", sink, available_now,
         batch_fn=fold,
     )
 
@@ -513,7 +433,7 @@ def start_window_query(
         cfg.output("window_rates"), keys=["window_start", "conv_id"]
     )
     df = windowed_rates(
-        _session_input(spark, cfg), window_s=cfg.window_s, slide_s=cfg.slide_s
+        enriched_stream(spark, cfg), window_s=cfg.window_s, slide_s=cfg.slide_s
     )
     return _start(spark, cfg, df, "window_rates", sink, available_now)
 
@@ -564,7 +484,7 @@ def start_cm_sketch_query(
         cfg.output("cm_sketch"), keys=["window_start", "row_j", "cell"]
     )
     df = windowed_cm_sketch(
-        _session_input(spark, cfg), window_s=cfg.window_s, depth=depth, width=width
+        enriched_stream(spark, cfg), window_s=cfg.window_s, depth=depth, width=width
     )
     return _start(spark, cfg, df, "cm_sketch", sink, available_now)
 
@@ -575,7 +495,7 @@ def start_linreg_query(
     """Per-window score-drift regression, exactly-once (append mode:
     a window's fit is final once the watermark passes its end)."""
     sink = IdempotentSink(cfg.output("window_linreg"), keys=["window_start"])
-    df = windowed_linreg(_session_input(spark, cfg), window_s=cfg.window_s)
+    df = windowed_linreg(enriched_stream(spark, cfg), window_s=cfg.window_s)
     return _start(spark, cfg, df, "window_linreg", sink, available_now)
 
 

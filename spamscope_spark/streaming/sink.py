@@ -198,12 +198,18 @@ class IdempotentSink:
         compaction's leftovers apart from an epoch write's.
 
         The epoch directory appears ATOMICALLY: staging has a leading
-        "_", so parquet listings ignore it, and a concurrent reader (the
-        cascade stream tails epoch=* dirs) never lists a half-written
-        epoch. A replaced directory is swapped out in two renames (µs
-        window) instead of an rmtree + full rewrite under the reader's
-        feet. A write killed between the two renames leaves staging and
-        trash behind; the next write of the epoch deletes both first.
+        "_", so parquet listings ignore it, and a concurrent reader (a
+        `queue_sink.read_queue_stream` consumer tails epoch=* dirs)
+        never lists a half-written epoch. A replaced directory is
+        swapped out in two renames (µs window) instead of an rmtree +
+        full rewrite under the reader's feet. A write killed between the
+        two renames leaves staging and trash behind; the next write of
+        the epoch deletes both first.
+
+        A replaced epoch's files have new names, and a file stream
+        tracks the files it has read by path: a tailing stream reads a
+        replayed or compacted epoch's rows again, on its next microbatch
+        or its next start, not only during the swap.
 
         The row count comes from the WRITTEN files' parquet FOOTERS,
         read driver-side via pyarrow (~ms): counting `df` first would
@@ -324,9 +330,12 @@ class IdempotentSink:
         number, so last-wins ordering against the untouched tail is
         unchanged, and mid-swap a key is at worst present in both an
         old epoch dir and the compacted dir with the same winning row.
-        (`read_raw` may transiently double-count mid-swap; run
-        compaction when no cascade STREAMING consumer is tailing the
-        epoch dirs — like Iceberg maintenance, it is an offline op.)
+        (`read_raw` may transiently double-count mid-swap.) Like Iceberg
+        maintenance it is an offline op: a stream tailing the epoch dirs
+        (`queue_sink.read_queue_stream`) takes the compacted epoch's
+        rewritten files as new input and re-reads every row in them on
+        its next microbatch or start, so do not compact a sink such a
+        stream reads.
         The manifest is rewritten atomically (tmp + rename): one entry
         for the compacted epoch recording `compacted_from`, tail
         entries preserved."""

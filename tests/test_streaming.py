@@ -529,38 +529,6 @@ class TestStatefulSessions:
         assert (got["session_seq"], got["n_turns"]) == (0, len(texts))
         assert got["n_duplicate_turns"] == expected([first, second]) == 4
 
-    def test_cascade_source_matches_direct(self, spark, cfg, tmp_path):
-        """Sessions computed FROM the enriched sink stream (cascade
-        mode, one enrichment pass feeding downstream stages) must equal
-        sessions derived directly from raw turns."""
-        q, _ = start_enriched_query(spark, cfg)
-        q.awaitTermination(300)
-        direct_cfg = PipelineConfig(
-            input_path=cfg.input_path, work_dir=str(tmp_path / "direct")
-        )
-        q, direct_sink = start_session_query(spark, direct_cfg)
-        q.awaitTermination(300)
-        cascade_cfg = PipelineConfig(
-            input_path=cfg.input_path,
-            work_dir=str(tmp_path / "cascade"),
-            enriched_source=cfg.output("enriched"),
-        )
-        q, cascade_sink = start_session_query(spark, cascade_cfg)
-        q.awaitTermination(300)
-
-        def key(sink):
-            return {
-                r["session_id"]: (
-                    r["session_start"], r["session_end"], r["n_turns"],
-                    r["n_user"], r["n_tool_calls"], r["max_phishing_score"],
-                    r["n_duplicate_turns"], r["n_neardup_turns"],
-                )
-                for r in sink.read_merged(spark).collect()
-            }
-
-        direct, cascade = key(direct_sink), key(cascade_sink)
-        assert direct and direct == cascade
-
 
 class TestWindowedRates:
     def test_windows_match_batch_and_replay_idempotent(self, spark, cfg):
@@ -1264,25 +1232,29 @@ def test_query_is_stateless_with_no_empty_batch(spark, cfg, start):
     assert all(p.numInputRows > 0 for p in progress)
 
 
-def test_epoch_commit_protocol_lives_in_sink_module():
-    """Only streaming/sink.py renames or deletes directories and names
-    the manifest: every epoch-committed output goes through it."""
+def _package_sources():
+    """(path relative to the package, source text) of every module of
+    spamscope_spark."""
     import spamscope_spark
 
     root = os.path.dirname(spamscope_spark.__file__)
-    found = []
     for dirpath, _, files in os.walk(root):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            with open(path) as f:
-                text = f.read()
-            found += [
-                (os.path.relpath(path, root), needle)
-                for needle in ("os.rename(", "shutil.rmtree(", "_manifest.jsonl")
-                if needle in text
-            ]
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path) as f:
+                    yield os.path.relpath(path, root), f.read()
+
+
+def test_epoch_commit_protocol_lives_in_sink_module():
+    """Only streaming/sink.py renames or deletes directories and names
+    the manifest: every epoch-committed output goes through it."""
+    found = [
+        (rel, needle)
+        for rel, text in _package_sources()
+        for needle in ("os.rename(", "shutil.rmtree(", "_manifest.jsonl")
+        if needle in text
+    ]
     assert {rel for rel, _ in found} == {os.path.join("streaming", "sink.py")}, found
 
 
@@ -1291,29 +1263,65 @@ def test_snapshot_fold_protocol_lives_in_one_module():
     them in a manifest: every snapshot fold runs through it. No module
     keeps Python keyed state (applyInPandasWithState, GroupState, pickled
     blobs)."""
-    import spamscope_spark
-
-    root = os.path.dirname(spamscope_spark.__file__)
-    found = []
-    for dirpath, _, files in os.walk(root):
-        for name in files:
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            with open(path) as f:
-                text = f.read()
-            found += [
-                (os.path.relpath(path, root), needle)
-                for needle in (
-                    "Observation(", '"watermark_ms"', '"late_rows"',
-                    "applyInPandasWithState", "GroupState", "pickle.",
-                )
-                if needle in text
-            ]
+    found = [
+        (rel, needle)
+        for rel, text in _package_sources()
+        for needle in (
+            "Observation(", '"watermark_ms"', '"late_rows"',
+            "applyInPandasWithState", "GroupState", "pickle.",
+        )
+        if needle in text
+    ]
     assert sorted(found) == [
         (os.path.join("streaming", "fold.py"), needle)
         for needle in ('"late_rows"', '"watermark_ms"', "Observation(")
     ], found
+
+
+def test_stream_sources_live_in_two_readers():
+    """Only pipeline.read_turns_stream and queue_sink.read_queue_stream
+    open a stream: every query reads the turns source, and none tails
+    another query's sink."""
+    import ast
+
+    found = set()
+    for rel, text in _package_sources():
+        tree = ast.parse(text)
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "readStream":
+                inner = min(
+                    (f for f in funcs if f.lineno <= node.lineno <= f.end_lineno),
+                    key=lambda f: f.end_lineno - f.lineno,
+                    default=None,
+                )
+                found.add((rel, inner and inner.name))
+    assert found == {
+        (os.path.join("streaming", "pipeline.py"), "read_turns_stream"),
+        (os.path.join("streaming", "queue_sink.py"), "read_queue_stream"),
+    }, found
+
+
+def test_no_module_sets_the_state_store_conf():
+    """The state-store provider is the deployment's Spark conf: no
+    module, nor app.py or bench.py, names a
+    spark.sql.streaming.stateStore.* key."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sources = list(_package_sources())
+    for name in ("app.py", "bench.py"):
+        with open(os.path.join(repo, name)) as f:
+            sources.append((name, f.read()))
+    found = [
+        (rel, node.value)
+        for rel, text in sources
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("spark.sql.streaming.stateStore")
+    ]
+    assert found == [], found
 
 
 class TestBuiltinDropDuplicates:
@@ -1363,10 +1371,38 @@ class TestBuiltinDropDuplicates:
         assert n_out == len(want) < batch.count()
 
 
+ROCKSDB_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+
+
+@pytest.fixture()
+def use_rocksdb(spark):
+    """Call it to make the queries started afterwards keep their state
+    in RocksDB with changelog checkpointing: it sets the session conf, as
+    a deployment's `--conf` does. The old values come back afterwards."""
+    old = {k: spark.conf.get(k, None) for k in ROCKSDB_CONF}
+
+    def enable() -> None:
+        for k, v in ROCKSDB_CONF.items():
+            spark.conf.set(k, v)
+
+    yield enable
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
 class TestRocksDBStateStore:
-    def test_rocksdb_windows_match_default_provider(self, spark, turns_input, tmp_path):
-        """state_store="rocksdb" (the 10^12-turn backend: state on local
-        disk, changelog checkpointing) must be a pure backend swap —
+    def test_rocksdb_windows_match_default_provider(
+        self, spark, turns_input, tmp_path, use_rocksdb
+    ):
+        """RocksDB (the 10^12-turn backend: state on local disk,
+        changelog checkpointing) must be a pure backend swap —
         byte-identical window rows vs the default heap provider. The
         windowed-rates aggregate keeps its open windows in keyed state."""
         from spamscope_spark.streaming.pipeline import start_window_query
@@ -1376,10 +1412,9 @@ class TestRocksDBStateStore:
         )
         q, heap_sink = start_window_query(spark, base)
         q.awaitTermination(300)
+        use_rocksdb()
         rocks = PipelineConfig(
-            input_path=turns_input,
-            work_dir=str(tmp_path / "rocks"),
-            state_store="rocksdb",
+            input_path=turns_input, work_dir=str(tmp_path / "rocks")
         )
         q, rocks_sink = start_window_query(spark, rocks)
         q.awaitTermination(300)
@@ -1388,17 +1423,35 @@ class TestRocksDBStateStore:
         b = {key(r): r for r in rocks_sink.read_merged(spark).collect()}
         assert a and a == b
 
-    def test_rocksdb_checkpoint_resume_is_incremental(self, spark, turns_input, tmp_path):
+    def test_session_conf_names_the_provider(
+        self, spark, turns_input, tmp_path, use_rocksdb
+    ):
+        """The pipeline leaves the provider to Spark's conf: with the
+        session naming RocksDB, a query under a default PipelineConfig
+        keeps its state in RocksDB."""
+        from spamscope_spark.streaming.pipeline import start_window_query
+
+        use_rocksdb()
+        cfg = PipelineConfig(input_path=turns_input, work_dir=str(tmp_path))
+        q, _ = start_window_query(spark, cfg)
+        q.awaitTermination(300)
+        ops = [s for p in q.recentProgress for s in p.stateOperators]
+        assert ops and all(
+            any(k.startswith("rocksdb") for k in s.customMetrics) for s in ops
+        )
+
+    def test_rocksdb_checkpoint_resume_is_incremental(
+        self, spark, turns_input, tmp_path, use_rocksdb
+    ):
         """A restart over a RocksDB checkpoint must resume (not recount):
         appending new input and re-running adds only the new rows. The
         built-in dedup keeps the seen sha1s in keyed state, so the
         restart reloads a RocksDB state store."""
         from spamscope_spark.streaming.pipeline import start_dedup_builtin_query
 
+        use_rocksdb()
         cfg = PipelineConfig(
-            input_path=str(tmp_path / "in"),
-            work_dir=str(tmp_path / "wd"),
-            state_store="rocksdb",
+            input_path=str(tmp_path / "in"), work_dir=str(tmp_path / "wd")
         )
         first = spark.read.parquet(turns_input)
         first.coalesce(1).write.mode("append").parquet(cfg.input_path)

@@ -9,6 +9,7 @@ query restarts inside one JVM)."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -32,18 +33,9 @@ def _zip_package(dest: str) -> str:
     return zpath
 
 
-@pytest.mark.skipif(
-    shutil.which("spark-submit") is None, reason="spark-submit not on PATH"
-)
-def test_spark_submit_py_files_round_trip(spark, tmp_path):
-    input_dir = str(tmp_path / "turns_in")
-    work_dir = str(tmp_path / "work")
-    from spamscope_spark.datagen import generate_turns
-
-    generate_turns(spark, n_convs=30, turns_per_conv=8).coalesce(2).write.parquet(
-        input_dir
-    )
-
+def _submit(tmp_path, input_dir: str, work_dir: str, *extra: str) -> dict:
+    """Run app.py under spark-submit with the package shipped as a
+    --py-files zip; return the summary it prints."""
     zpath = _zip_package(str(tmp_path))
     cmd = [
         "spark-submit",
@@ -57,6 +49,7 @@ def test_spark_submit_py_files_round_trip(spark, tmp_path):
         "--work-dir", work_dir,
         "--gap-s", "1800",
         "--watermark", "4 hours",
+        *extra,
     ]
     # Foreign cwd + scrubbed PYTHONPATH: the ONLY route to the package
     # is the --py-files zip, exactly like a cluster submit.
@@ -66,15 +59,29 @@ def test_spark_submit_py_files_round_trip(spark, tmp_path):
         if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")
     }
     env["PYSPARK_PYTHON"] = sys.executable
+    r = subprocess.run(
+        cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=420,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    return json.loads(r.stdout[r.stdout.index("{"):])
 
-    def submit() -> None:
-        r = subprocess.run(
-            cmd, cwd=str(tmp_path), env=env, capture_output=True, text=True,
-            timeout=420,
-        )
-        assert r.returncode == 0, r.stderr[-4000:]
 
-    submit()
+needs_submit = pytest.mark.skipif(
+    shutil.which("spark-submit") is None, reason="spark-submit not on PATH"
+)
+
+
+@needs_submit
+def test_spark_submit_py_files_round_trip(spark, tmp_path):
+    input_dir = str(tmp_path / "turns_in")
+    work_dir = str(tmp_path / "work")
+    from spamscope_spark.datagen import generate_turns
+
+    generate_turns(spark, n_convs=30, turns_per_conv=8).coalesce(2).write.parquet(
+        input_dir
+    )
+    _submit(tmp_path, input_dir, work_dir)
     enriched = spark.read.parquet(
         os.path.join(work_dir, "out", "enriched", "data", "epoch=*")
     )
@@ -90,10 +97,52 @@ def test_spark_submit_py_files_round_trip(spark, tmp_path):
 
     # resubmit from the same checkpoints: a fresh JVM resumes, drains
     # nothing new, and the committed output is unchanged
-    submit()
+    _submit(tmp_path, input_dir, work_dir)
     assert (
         spark.read.parquet(
             os.path.join(work_dir, "out", "enriched", "data", "epoch=*")
         ).count()
         == n_in
     )
+
+
+@needs_submit
+def test_printed_late_rows_are_the_manifest_sums(spark, tmp_path):
+    """The three queries fold their state in foreachBatch and drop late
+    rows there, so the printed `late_rows_dropped` of each is the sum of
+    `late_rows` over its sink's manifest. A second file whose rows all
+    lie at or below the first file's next watermark is late in full."""
+    import pyspark.sql.functions as F
+
+    from spamscope_spark.datagen import generate_turns
+
+    input_dir = str(tmp_path / "turns_in")
+    work_dir = str(tmp_path / "work")
+    first = generate_turns(spark, n_convs=12, turns_per_conv=8)
+    lo, hi = first.select(F.min("ts"), F.max("ts")).first()
+    # max ts of the second file = lo - 4 hours <= hi - 4 hours, the
+    # watermark the first file leaves
+    back = int((hi - lo).total_seconds()) + 4 * 3600
+    late = first.withColumn(
+        "conv_id", F.concat(F.lit("late_"), F.col("conv_id"))
+    ).withColumn("ts", F.col("ts") - F.expr(f"INTERVAL {back} SECONDS"))
+    first.coalesce(1).write.parquet(input_dir)
+    (old,) = [n for n in os.listdir(input_dir) if n.endswith(".parquet")]
+    late.coalesce(1).write.mode("append").parquet(input_dir)
+    (new,) = [
+        n for n in os.listdir(input_dir) if n.endswith(".parquet") and n != old
+    ]
+    # maxFilesPerTrigger takes the oldest file first
+    t = os.path.getmtime(os.path.join(input_dir, old)) + 1
+    os.utime(os.path.join(input_dir, new), (t, t))
+
+    summary = _submit(
+        tmp_path, input_dir, work_dir, "--max-files-per-trigger", "1"
+    )
+    for query, out in (
+        ("enriched_turns", "enriched"), ("sessions", "sessions"),
+        ("tool_pairs", "tool_pairs"),
+    ):
+        with open(os.path.join(work_dir, "out", out, "_manifest.jsonl")) as f:
+            manifest = sum(json.loads(line).get("late_rows", 0) for line in f)
+        assert summary[query]["late_rows_dropped"] == manifest > 0, query
