@@ -24,7 +24,9 @@ state-store provider from Spark's conf, as in any deployment; RocksDB is
   --conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
   --conf spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled=true
 
-The printed summary's `late_rows_dropped` per query is the sum of the
+The printed summary has one entry per query, built from all its
+progress events: it is printed once the listener has seen every query
+terminate. Its `late_rows_dropped` per query is the sum of the
 `late_rows` its folds recorded in its sink's manifest.
 
 The reference's equivalent is `spamscope-topology submit`
@@ -38,6 +40,10 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+
+# How long the summary waits for the listener bus to deliver the
+# queries' last events after they have terminated.
+_TERMINATION_WAIT_S = 60
 
 
 def main() -> None:
@@ -81,6 +87,7 @@ def main() -> None:
     ]
     for q, _ in started:
         q.awaitTermination()
+    listener.wait_terminated([q.id for q, _ in started], _TERMINATION_WAIT_S)
     summary = listener.summary()
     for q, sink in started:
         summary.setdefault(q.name, {})["late_rows_dropped"] = sum(

@@ -319,12 +319,14 @@ def silence_windows(
     observed window and flag the windows where the key went silent,
     with a running windows_since_seen counter.
 
-    Shared kernel of the batch q_silence_windows query and the
-    streaming start_silence_query — for a fixed (window, key) the
-    output row depends only on that key's activity at windows <= it,
-    so under watermark-monotone closure the streaming emission is
-    final the first time it is computable (same argument as
-    score_rate_windows).
+    The kernel of the batch q_silence_windows query, and the oracle
+    of the streaming start_silence_query: the stream has its own
+    densify and carry-forward code (pipeline.py, over its per-key
+    snapshot), and TestStreamingSilence checks its rows against this
+    kernel's on the same input. For a fixed (window, key) the output
+    row depends only on that key's activity at windows <= it, so under
+    watermark-monotone closure the streaming emission is final the
+    first time it is computable (same argument as score_rate_windows).
 
     Scale shape: the input is already the aggregated count table
     (|keys| x |windows| rows, orders of magnitude below the raw

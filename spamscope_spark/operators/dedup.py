@@ -76,7 +76,7 @@ def hot_keys(flat: DataFrame, key: str, cap: int) -> DataFrame:
     LSH bucket) shared by 1M docs creates a quadratic candidate set.
     The result is by construction tiny (≤ distinct_keys/cap rows), so
     the caller anti-joins it broadcast. Callers should count/log it —
-    no silent capping (see bench.py / tests)."""
+    no silent capping (tests/test_operators.py checks what it reports)."""
     return (
         flat.groupBy(key)
         .agg(F.count(F.lit(1)).alias("key_df"))

@@ -9,6 +9,8 @@ the enriched output rows additionally carry `_lineage_partition`
 from __future__ import annotations
 
 import json
+import threading
+import traceback
 from collections import defaultdict
 
 from pyspark.sql.streaming import StreamingQueryListener
@@ -25,19 +27,29 @@ class MetricsListener(StreamingQueryListener):
     epoch's line of its output sink's manifest
     (`IdempotentSink.manifest_entries()`, e.g. of `out/enriched`,
     `out/sessions` and `out/tool_pairs`); its `late_rows_dropped` here
-    stays 0, and app.py prints the manifest sum in its place."""
+    stays 0, and app.py prints the manifest sum in its place.
+
+    The listener bus delivers events asynchronously, after
+    `awaitTermination` may have returned, but in order: once a query's
+    termination event has arrived, so have all its progress events.
+    `wait_terminated` waits for that point."""
 
     def __init__(self):
         self.progress: dict[str, list[dict]] = defaultdict(list)
+        self.unparsed: list[str] = []
+        self._terminated: set[str] = set()
+        self._cond = threading.Condition()
 
     def onQueryStarted(self, event):  # noqa: N802
         pass
 
     def onQueryProgress(self, event):  # noqa: N802
-        p = event.progress
         try:
-            d = json.loads(p.json)
-        except Exception:
+            d = json.loads(event.progress.json)
+        except ValueError:
+            # runs on the listener bus, which would only log a raise;
+            # summary() raises instead
+            self.unparsed.append(traceback.format_exc())
             return
         self.progress[d.get("name") or d.get("id", "?")].append(
             {
@@ -63,7 +75,20 @@ class MetricsListener(StreamingQueryListener):
         )
 
     def onQueryTerminated(self, event):  # noqa: N802
-        pass
+        with self._cond:
+            self._terminated.add(str(event.id))
+            self._cond.notify_all()
+
+    def wait_terminated(self, query_ids, timeout_s: float) -> None:
+        """Block until the termination event of every query id has
+        arrived; raise TimeoutError if one has not within timeout_s."""
+        ids = {str(i) for i in query_ids}
+        with self._cond:
+            if not self._cond.wait_for(lambda: ids <= self._terminated, timeout_s):
+                raise TimeoutError(
+                    f"no termination event within {timeout_s}s for queries "
+                    f"{sorted(ids - self._terminated)}"
+                )
 
     def onQueryIdle(self, event):  # noqa: N802
         pass
@@ -73,7 +98,13 @@ class MetricsListener(StreamingQueryListener):
         batches that processed data (numInputRows > 0) and only their
         triggerExecution time: in a long-running streaming job the
         query start and the final drain/no-data batches amortize to
-        zero — what recurs per microbatch is data-batch processing."""
+        zero — what recurs per microbatch is data-batch processing.
+        Raises ValueError if a progress event could not be parsed."""
+        if self.unparsed:
+            raise ValueError(
+                f"{len(self.unparsed)} progress events could not be parsed; "
+                f"the first:\n{self.unparsed[0]}"
+            )
         out = {}
         for name, batches in self.progress.items():
             data = [b for b in batches if (b["numInputRows"] or 0) > 0]

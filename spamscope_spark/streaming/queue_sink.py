@@ -10,7 +10,9 @@ own queue entries carrying the parent mail's ids), flushing every
 Engine recast: a foreachBatch sink appending one epoch-atomic segment
 per queue and microbatch — the microbatch IS the flush batch; a
 consumer drains committed epochs in order (the queue contract); a
-replayed epoch overwrites its own segment (exactly-once). Each queue is
+replayed epoch overwrites its own segment, so the queue holds each
+message once. Delivery to a consumer is at-least-once across replay and
+compaction (see `read_queue_stream`). Each queue is
 an `IdempotentSink` whose rows are the messages: parquet with one
 `value` string column, the JSON message byte for byte, so segment row
 counts come from the parquet footers. The split: every enriched turn
@@ -96,9 +98,15 @@ def read_queue_stream(
     epoch segments. The broker handshake is subsumed by the directory
     protocol — segments become visible ONLY via QueueSink's atomic
     rename, so discovery never sees a half-written epoch; offsets in
-    the consumer's checkpoint are the acks (a restart resumes exactly
-    after the last committed batch, replacing channel redelivery);
-    `max_files_per_trigger` is the basic_qos prefetch bound. With a
+    the consumer's checkpoint are the acks (a restart resumes after the
+    last committed batch, replacing channel redelivery);
+    `max_files_per_trigger` is the basic_qos prefetch bound.
+
+    Delivery is at-least-once across replay and compaction: the file
+    source tracks segments by file name, and a replayed QueueSink epoch
+    or an `IdempotentSink.compact()` rewrites segments under new names,
+    so their messages are delivered again. Consumers must tolerate
+    duplicates, e.g. by deduplicating on (conv_id, turn_idx). With a
     `schema`, messages are parsed from JSON into columns (the client's
     json.loads); corrupt records become null columns rather than
     killing the consumer, matching the client's log-and-continue."""

@@ -1304,13 +1304,13 @@ def test_stream_sources_live_in_two_readers():
 
 def test_no_module_sets_the_state_store_conf():
     """The state-store provider is the deployment's Spark conf: no
-    module, nor app.py or bench.py, names a
+    module, nor app.py or tools/scaling_pair.py, names a
     spark.sql.streaming.stateStore.* key."""
     import ast
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sources = list(_package_sources())
-    for name in ("app.py", "bench.py"):
+    for name in ("app.py", os.path.join("tools", "scaling_pair.py")):
         with open(os.path.join(repo, name)) as f:
             sources.append((name, f.read()))
     found = [

@@ -81,12 +81,16 @@ def test_spark_submit_py_files_round_trip(spark, tmp_path):
     generate_turns(spark, n_convs=30, turns_per_conv=8).coalesce(2).write.parquet(
         input_dir
     )
-    _submit(tmp_path, input_dir, work_dir)
+    summary = _submit(tmp_path, input_dir, work_dir)
     enriched = spark.read.parquet(
         os.path.join(work_dir, "out", "enriched", "data", "epoch=*")
     )
     n_in = spark.read.parquet(input_dir).count()
     assert enriched.count() == n_in > 0
+    # the summary holds every query's progress, the last to end too
+    for query in ("enriched_turns", "sessions", "tool_pairs"):
+        assert summary[query]["batches"] >= 1, (query, summary)
+        assert summary[query]["total_input_rows"] == n_in, (query, summary)
     assert {"conv_id", "turn_idx", "json"} <= set(enriched.columns)
     sessions = spark.read.parquet(
         os.path.join(work_dir, "out", "sessions", "data", "epoch=*")
