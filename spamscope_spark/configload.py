@@ -65,7 +65,7 @@ class HotReloadConfig:
     Holds the SOURCE specs (file paths / inline values); `current()`
     re-evaluates the loaders — re-reading files and re-applying
     whitelist expiry — and is called once per microbatch inside
-    foreachBatch (streaming/pipeline.py:start_hot_enriched_query). The
+    foreachBatch (streaming/pipeline.py:start_enriched_query). The
     per-batch cost is a few config-file reads on the driver; the fresh
     dicts reach executors as literals folded into the batch's plan
     (exactly how the reference broadcasts reloaded keywords to bolt

@@ -88,21 +88,6 @@ def filter_whitelisted(urls: Column, whitelist: list[str]) -> Column:
     return F.filter(urls, lambda s: ~s["domain"].isin(whitelist))
 
 
-# ---- SQL twins for the DuckDB oracle ---------------------------------------
-
-# DuckDB's RE2 accepts the same inline-(?i) pattern; single-quoted with
-# backslashes intact.
-SQL_RE_URL = RE_URL.replace("'", "''")
-
-
-def sql_extract_url_strings(text_expr: str) -> str:
-    """DuckDB: sorted distinct URL matches as a list."""
-    return (
-        f"list_sort(list_distinct(regexp_extract_all(coalesce({text_expr}, ''), "
-        f"'{SQL_RE_URL}', 1)))"
-    )
-
-
 # ---- canonicalization (web-pipeline URL dedup) ------------------------------
 
 # Tracking parameters stripped during canonicalization (the standard

@@ -565,19 +565,6 @@ def sql_simhash(text_expr: str, bits: int = 32) -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-def simhash_dup_groups(
-    df: DataFrame, id_col: str, text_col: str = "text", bits: int = 32
-) -> DataFrame:
-    """Docs sharing an identical simhash (near-identical content).
-    Hamming-band variants build on the same column."""
-    return (
-        df.select(F.col(id_col).alias("doc"), simhash(F.col(text_col), bits).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.min("doc").alias("canonical_id"), F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # exact substring dedup — rolling fixed-width window hashes
 # ---------------------------------------------------------------------------

@@ -59,12 +59,10 @@ def enrich_turns(
     )
 
     if dedup_flag:
-        out = with_dedup_flag(out)
-    elif "is_filtered" not in out.columns:
-        # an upstream stateful dedup (streaming) may have set the flag
-        # already — never clobber it
-        out = out.withColumn("is_filtered", F.lit(False))
-    return out
+        return with_dedup_flag(out)
+    # placeholder: the enriched query replaces it per epoch
+    # (streaming/dedup_state.dedup_fold)
+    return out.withColumn("is_filtered", F.lit(False))
 
 
 def with_dedup_flag(df: DataFrame, key: str = "sha1") -> DataFrame:

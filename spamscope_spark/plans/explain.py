@@ -18,19 +18,6 @@ def plan_text(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def has_pushed_filter(df: DataFrame, fragment: str = "") -> bool:
-    """True if the scan carries PushedFilters (optionally matching a
-    fragment)."""
-    txt = plan_text(df)
-    for line in txt.splitlines():
-        if "PushedFilters" in line and "[]" not in line.replace("PushedFilters: []", "[]"):
-            if "PushedFilters: []" in line:
-                continue
-            if fragment in line:
-                return True
-    return False
-
-
 def read_schema_columns(df: DataFrame) -> list[str]:
     """Columns actually read from parquet (column pruning check)."""
     txt = plan_text(df)
@@ -45,6 +32,3 @@ def read_schema_columns(df: DataFrame) -> list[str]:
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan_text(df) or "BroadcastNestedLoopJoin" in plan_text(df)
 
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return plan_text(df).count("WholeStageCodegen")

@@ -1,1 +1,2 @@
-"""Sources: batch parquet tables + streaming file source for turns."""
+"""Sources: storage layouts of the batch tables (bucketed, hive-partitioned,
+z-ordered, schema-evolving)."""

@@ -39,6 +39,9 @@ _WRITTEN_SCHEMA = (
 )
 _FIRST = ["ts", "conv_id", "turn_idx"]
 
+# how long past its newest row's ts a seen-set bucket lives (`ttl_ms`)
+SEEN_TTL_MS = 6 * 3600 * 1000
+
 
 def dedup_fold(
     sink: IdempotentSink,

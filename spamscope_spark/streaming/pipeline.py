@@ -40,15 +40,14 @@ RocksDB via `spark-submit --conf`); nothing here overrides it.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..datagen import SUBJECT_KEYS, TARGET_KEYS, WHITELIST_DOMAINS
 from ..operators.enrich import enrich_turns
 from ..schema import TURNS_SCHEMA
-from .dedup_state import dedup_fold
+from .dedup_state import SEEN_TTL_MS, dedup_fold
 from .pair_state import tool_pair_fold
 from .session_state import session_fold
 from .sink import IdempotentSink
@@ -67,16 +66,12 @@ class PipelineConfig:
     band_s: int = 600
     window_s: int = 600
     slide_s: int | None = None  # sliding windows when set (else tumbling)
-    dedup_state_timeout_ms: int = 6 * 3600 * 1000
     max_files_per_trigger: int | None = None
     # Priority-ingestion approximation (SURVEY §7 risk 6): order each
     # microbatch's sink output by (priority if present, ts, conv_id,
     # turn_idx) — the reference spout's (priority, ctime) queue holds
     # only within a microbatch here, never across batches.
     priority_order: bool = False
-    target_keys: dict = field(default_factory=lambda: dict(TARGET_KEYS))
-    subject_keys: list = field(default_factory=lambda: list(SUBJECT_KEYS))
-    whitelist: list = field(default_factory=lambda: list(WHITELIST_DOMAINS))
 
     def checkpoint(self, name: str) -> str:
         return os.path.join(self.work_dir, "checkpoints", name)
@@ -112,7 +107,7 @@ def read_turns_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
 
 def _sha1_turns(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     """Raw turn stream + content sha1, watermarked on ts: the common
-    prefix of both exact-dedup paths."""
+    prefix of every enriched output."""
     return (
         read_turns_stream(spark, cfg)
         .withColumn("sha1", F.sha1(F.coalesce(F.col("text"), F.lit(""))))
@@ -120,19 +115,29 @@ def _sha1_turns(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def _enrich(
+    df: DataFrame, target_keys=None, subject_keys=None, whitelist=None
+) -> DataFrame:
+    """Turns → enrichment + lineage columns, with is_filtered a False
+    placeholder. The keys are positional in the order of
+    configload.HotReloadConfig.current(); None takes enrich_turns'
+    default."""
+    enriched = enrich_turns(
+        df,
+        target_keys=target_keys,
+        subject_keys=subject_keys,
+        whitelist=whitelist,
+        dedup_flag=False,  # a stream cannot rank; dedup_fold flags per epoch
+    )
+    return enriched.withColumn("_lineage_partition", F.spark_partition_id())
+
+
 def enriched_stream(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     """Watermarked raw turns → enrichment + lineage columns, stateless.
     is_filtered is a False placeholder: the enriched query sets the
     flag per epoch in its foreachBatch (start_enriched_query), and the
-    other consumers never read it."""
-    enriched = enrich_turns(
-        _sha1_turns(spark, cfg),
-        target_keys=cfg.target_keys,
-        subject_keys=cfg.subject_keys,
-        whitelist=cfg.whitelist,
-        dedup_flag=False,  # batch window-rank is illegal on streams
-    )
-    return enriched.withColumn("_lineage_partition", F.spark_partition_id())
+    queue sink's turns messages carry the placeholder as is."""
+    return _enrich(_sha1_turns(spark, cfg))
 
 
 def deduped_stream_builtin(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
@@ -149,15 +154,7 @@ def deduped_stream_builtin(spark: SparkSession, cfg: PipelineConfig) -> DataFram
     watermark is dropped from state, so re-arrivals beyond the
     watermark horizon are NOT deduped — same horizon contract as the
     tool-pair fold's pending rows."""
-    deduped = _sha1_turns(spark, cfg).dropDuplicatesWithinWatermark(["sha1"])
-    enriched = enrich_turns(
-        deduped,
-        target_keys=cfg.target_keys,
-        subject_keys=cfg.subject_keys,
-        whitelist=cfg.whitelist,
-        dedup_flag=False,
-    )
-    return enriched.withColumn("_lineage_partition", F.spark_partition_id())
+    return _enrich(_sha1_turns(spark, cfg).dropDuplicatesWithinWatermark(["sha1"]))
 
 
 def with_json_row(df: DataFrame) -> DataFrame:
@@ -309,13 +306,24 @@ def _start(
 
 
 def start_enriched_query(
-    spark: SparkSession, cfg: PipelineConfig, available_now: bool = True
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    available_now: bool = True,
+    config_source=None,
 ):
     """Primary output: enriched JSON-per-turn rows, exactly-once, with
     the duplicate flag folded per epoch in foreachBatch against the
     seen-set snapshots of the `enriched_seen` side sink (dedup_fold).
-    The query itself is stateless: its checkpoint holds offsets only."""
-    df = enriched_stream(spark, cfg)
+    The query itself is stateless: its checkpoint holds offsets only.
+
+    Each epoch is enriched in the foreachBatch. With a `config_source`
+    (configload.HotReloadConfig) its `current()` keys score the epoch:
+    the reference reloads keyword/whitelist YAML on every tick tuple
+    (abstracts.py:83-85, tokenizer.py:151-154), so an edited keyword
+    file or an expired whitelist changes the scoring of the NEXT epoch
+    without restarting the stream. Without one, enrich_turns' defaults
+    score every epoch."""
+    df = _sha1_turns(spark, cfg)
     order = []
     if cfg.priority_order:
         # PRIORITY-ORDERED INGESTION approximation (the reference spout's
@@ -331,11 +339,14 @@ def start_enriched_query(
         out = with_json_row(flagged)
         return out.orderBy(*order) if order else out
 
-    fold = dedup_fold(
-        sink, seen_sink, cfg.watermark, cfg.dedup_state_timeout_ms, prepare
-    )
+    fold = dedup_fold(sink, seen_sink, cfg.watermark, SEEN_TTL_MS, prepare)
+
+    def process(batch_df: DataFrame, epoch: int) -> None:
+        keys = config_source.current() if config_source else ()
+        fold(_enrich(batch_df, *keys), epoch)
+
     return _start(
-        spark, cfg, df, "enriched", sink, available_now, batch_fn=fold,
+        spark, cfg, df, "enriched", sink, available_now, batch_fn=process,
         query_name="enriched_turns",
     )
 
@@ -369,42 +380,6 @@ def start_queue_query(
     return _start(
         spark, cfg, df, "queues", sink, available_now,
         query_name="queue_sink",
-    )
-
-
-def start_hot_enriched_query(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    config_source,
-    available_now: bool = True,
-):
-    """Enriched query with PER-MICROBATCH config hot-reload — the
-    reference reloads keyword/whitelist YAML on every tick tuple
-    (abstracts.py:83-85, phishing.py:77-80); here `config_source
-    .current()` (configload.HotReloadConfig) is re-evaluated inside
-    foreachBatch, so an edited keyword file or an expired whitelist
-    changes the scoring of the NEXT microbatch without restarting the
-    stream. Config-independent columns would stay in the streaming
-    plan; the keyword/whitelist-dependent enrichment is built fresh
-    per batch (plan construction per batch is driver-cheap; execution
-    is identical to the static query)."""
-    sink = IdempotentSink(cfg.output("enriched_hot"), keys=["conv_id", "turn_idx"])
-    turns = read_turns_stream(spark, cfg).withWatermark("ts", cfg.watermark)
-
-    def process(batch_df: DataFrame, epoch: int) -> None:
-        target_keys, subject_keys, whitelist = config_source.current()
-        enriched = enrich_turns(
-            batch_df,
-            target_keys=target_keys,
-            subject_keys=subject_keys,
-            whitelist=whitelist,
-            dedup_flag=False,  # the static enriched query owns the flag
-        )
-        sink.process_batch(with_json_row(enriched), epoch)
-
-    return _start(
-        spark, cfg, turns, "enriched_hot", sink, available_now,
-        batch_fn=process,
     )
 
 

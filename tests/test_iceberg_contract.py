@@ -42,6 +42,13 @@ def test_merge_sql_golden():
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *"
     )
+    # the default source view
+    assert merge_sql(TABLE, KEYS) == (
+        "MERGE INTO warehouse.turns_enriched t USING _batch_src s "
+        "ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
 
 
 class _RecordingCatalog:

@@ -939,29 +939,6 @@ def test_late_row_boundary_is_the_watermark(spark, tmp_path, kind):
     assert _fold_keys(spark, [sink, state], 1) == {"a", "c"}
 
 
-class TestIcebergSinkPath:
-    def test_factory_falls_back_without_runtime(self, spark, tmp_path):
-        """No Iceberg jar in this sandbox: make_sink must return the
-        parquet+manifest sink with the same interface."""
-        from spamscope_spark.streaming.iceberg_sink import (
-            iceberg_available,
-            make_sink,
-            merge_sql,
-        )
-
-        assert iceberg_available(spark) is False
-        sink = make_sink(spark, str(tmp_path / "s"), keys=["conv_id", "turn_idx"])
-        assert isinstance(sink, IdempotentSink)
-        # the production MERGE statement (string-level contract)
-        sql = merge_sql("cat.db.turns", ["conv_id", "turn_idx"])
-        assert sql == (
-            "MERGE INTO cat.db.turns t USING _batch_src s "
-            "ON t.conv_id = s.conv_id AND t.turn_idx = s.turn_idx "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-
-
 class TestConfigHotReload:
     def test_whitelist_change_between_microbatches(self, spark, tmp_path):
         """The reference re-reads keyword/whitelist YAML every tick
@@ -972,7 +949,7 @@ class TestConfigHotReload:
 
         from spamscope_spark.configload import HotReloadConfig
         from spamscope_spark.datagen import SUBJECT_KEYS, TARGET_KEYS
-        from spamscope_spark.streaming.pipeline import start_hot_enriched_query
+        from spamscope_spark.streaming.pipeline import start_enriched_query
 
         wl_file = tmp_path / "whitelist.yml"
         wl_file.write_text("[]\n")
@@ -990,22 +967,22 @@ class TestConfigHotReload:
         spark.createDataFrame(rows1, schema).coalesce(1).write.mode("append").parquet(str(in_dir))
 
         cfg = PipelineConfig(input_path=str(in_dir), work_dir=str(tmp_path / "wd"))
-        q, sink = start_hot_enriched_query(spark, cfg, src)
+        q, sink = start_enriched_query(spark, cfg, config_source=src)
         q.awaitTermination(300)
 
         # batch 2: whitelist now covers the domain; new input file
         wl_file.write_text("- secure-hampton.info\n")
         spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(str(in_dir))
-        q, sink = start_hot_enriched_query(spark, cfg, src)
+        q, sink = start_enriched_query(spark, cfg, config_source=src)
         q.awaitTermination(300)
 
-        scores = {
-            r["turn_idx"]: r["phishing_score"]
-            for r in sink.read_merged(spark).collect()
-        }
+        rows = sink.read_merged(spark).collect()
+        scores = {r["turn_idx"]: r["phishing_score"] for r in rows}
         assert scores[0] & 2, scores  # urls_body bit set pre-change
         assert not (scores[1] & 2), scores  # dropped by the reloaded whitelist
         assert scores[0] & 1 and scores[1] & 1  # mail_body bit unaffected
+        # same text twice: the second turn is flagged in the same output
+        assert {r["turn_idx"]: r["is_filtered"] for r in rows} == {0: False, 1: True}
 
 
 class TestPriorityIngestion:
@@ -1300,6 +1277,27 @@ def test_stream_sources_live_in_two_readers():
         (os.path.join("streaming", "pipeline.py"), "read_turns_stream"),
         (os.path.join("streaming", "queue_sink.py"), "read_queue_stream"),
     }, found
+
+
+def test_enrichment_lives_in_one_streaming_function():
+    """Only one function under streaming/ calls enrich_turns: every
+    enriched stream and the enriched query's per-epoch reload build
+    enrichment + lineage through it."""
+    import ast
+
+    found = []
+    for rel, text in _package_sources():
+        if not rel.startswith("streaming" + os.sep):
+            continue
+        tree = ast.parse(text)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and any(
+                isinstance(n, ast.Call)
+                and getattr(n.func, "id", getattr(n.func, "attr", None)) == "enrich_turns"
+                for n in ast.walk(fn)
+            ):
+                found.append((rel, fn.name))
+    assert len(found) == 1, found
 
 
 def test_no_module_sets_the_state_store_conf():
