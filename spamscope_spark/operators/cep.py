@@ -176,7 +176,9 @@ def score_rate_windows(cnt: DataFrame, key: str, lookback: int = 6) -> DataFrame
     ``lookback`` observed windows per key: adds n_prev (history size),
     var_num (exact-integer variance numerator, the zero-variance
     guard), mean_prev, and z (both rounded to 4dp). Shared kernel of
-    the batch rate_anomaly and the streaming start_anomaly_query —
+    the batch rate_anomaly and the streaming start_anomaly_query, which
+    scores each batch's closed windows after each key's ``lookback``
+    newest earlier windows (the trailing frame needs no more) —
     determinism notes on rate_anomaly."""
     w = (
         Window.partitionBy(key)
@@ -319,14 +321,15 @@ def silence_windows(
     observed window and flag the windows where the key went silent,
     with a running windows_since_seen counter.
 
-    The kernel of the batch q_silence_windows query, and the oracle
-    of the streaming start_silence_query: the stream has its own
-    densify and carry-forward code (pipeline.py, over its per-key
-    snapshot), and TestStreamingSilence checks its rows against this
-    kernel's on the same input. For a fixed (window, key) the output
-    row depends only on that key's activity at windows <= it, so under
-    watermark-monotone closure the streaming emission is final the
-    first time it is computable (same argument as score_rate_windows).
+    The kernel of the batch q_silence_windows query, and an oracle of
+    the streaming start_silence_query (sql_silence_windows is the
+    other): the stream densifies only past its last emitted window,
+    from a snapshot of each key's last active window, and
+    TestStreamingSilence checks its rows against this kernel's on the
+    same input. For a fixed (window, key) the output row depends only
+    on that key's activity at windows <= it, so under watermark-monotone
+    closure the streaming emission is final the first time it is
+    computable (same argument as score_rate_windows).
 
     Scale shape: the input is already the aggregated count table
     (|keys| x |windows| rows, orders of magnitude below the raw

@@ -26,15 +26,18 @@ foreachBatch against the newest snapshot below the epoch.
 
 Every query reads the turns source itself (`read_turns_stream`), in
 drain and continuous mode alike: no query streams another query's sink,
-so the dataflow is the same whichever trigger runs it.
+and none reads its own output back, so the dataflow is the same
+whichever trigger runs it.
 
 Every query checkpoints; a restart resumes from offsets + state (the
-enriched query's seen-set snapshots, the sessions query's open sessions
-and the tool-pairs query's pending rows live beside their outputs). The
-queries with a state operator (windows, sketches, the built-in dedup,
-the anomaly and silence counts) keep it in the state store that Spark's
-own conf names (`spark.sql.streaming.stateStore.providerClass`, e.g.
-RocksDB via `spark-submit --conf`); nothing here overrides it.
+enriched query's seen-set snapshots, the sessions query's open sessions,
+the tool-pairs query's pending rows and the anomaly and silence
+monitors' newest windows per key live beside their outputs, each read
+back through `IdempotentSink.read_prior`). The queries with a state
+operator (windows, sketches, the built-in dedup, the anomaly and
+silence counts) keep it in the state store that Spark's own conf names
+(`spark.sql.streaming.stateStore.providerClass`, e.g. RocksDB via
+`spark-submit --conf`); nothing here overrides it.
 """
 
 from __future__ import annotations
@@ -495,19 +498,59 @@ def start_scd2_query(
     return _start(spark, cfg, df, "scd2_dim", sink, available_now)
 
 
-def _key_window_counts(
-    spark: SparkSession, cfg: PipelineConfig, key: str, bucket_s: int
-) -> DataFrame:
-    """Watermarked tumbling (window, key) turn count over raw turns —
-    the one wide stage of the anomaly and silence monitors. Append mode
-    emits a row once, when the watermark passes its window end."""
-    return (
+def _start_window_monitor(
+    spark: SparkSession, cfg: PipelineConfig, name: str, key: str,
+    bucket_s: int, keep: int, step, available_now: bool,
+):
+    """The one shape of the anomaly and silence monitors: a watermarked
+    tumbling (window_start, key, n) turn count over raw turns — their
+    one wide stage — then, in foreachBatch, `step(history, fresh)` over
+    the count rows the epoch closed (`fresh`) and the `{name}_state`
+    snapshot (`history`), written to the `name` sink.
+
+    Append mode emits a (window, key) row once, when the watermark
+    passes the window end, and window closure is GLOBAL (one watermark):
+    every window an epoch closes is newer than every window closed
+    before it. So each key's `keep` newest count rows are all the
+    history a trailing-window step needs, and the snapshot written each
+    epoch holds exactly those rows of history ∪ fresh: |keys| × `keep`
+    rows, constant in stream lifetime.
+
+    History is the newest snapshot STRICTLY BEFORE the epoch
+    (`read_prior`): on a crash-replay of epoch E the state sink may
+    already hold E's own snapshot, and stepping from it would treat the
+    replayed windows as history. Excluding E makes the replay recompute
+    the identical rows (the step is deterministic over closed windows)
+    and overwrite E with the same content — exactly-once by
+    convergence, the same property process_batch's always-overwrite
+    contract assumes."""
+    sink = IdempotentSink(cfg.output(name), keys=["window_start", key])
+    state_sink = IdempotentSink(cfg.output(f"{name}_state"), keys=["window_start", key])
+    cnt = (
         read_turns_stream(spark, cfg)
         .withWatermark("ts", cfg.watermark)
         .groupBy(F.window("ts", f"{bucket_s} seconds").alias("w"), F.col(key))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), key, "n")
     )
+    schema = cnt.schema.toDDL()
+    newest = Window.partitionBy(key).orderBy(F.col("window_start").desc())
+
+    def process(batch_df: DataFrame, epoch: int) -> None:
+        # the one job that runs the count; the step and the snapshot
+        # read its result
+        fresh = batch_df.select("window_start", key, "n").localCheckpoint()
+        _, history = state_sink.read_prior(spark, epoch, schema)
+        sink.process_batch(step(history, fresh), epoch)
+        kept = (
+            history.unionByName(fresh)
+            .withColumn("_rn", F.row_number().over(newest))
+            .where(F.col("_rn") <= keep)
+            .drop("_rn")
+        )
+        state_sink.write_epoch(kept, epoch)
+
+    return _start(spark, cfg, cnt, name, sink, available_now, batch_fn=process)
 
 
 def start_anomaly_query(
@@ -523,40 +566,27 @@ def start_anomaly_query(
     """Streaming twin of operators/cep.py::rate_anomaly — the always-on
     campaign/surge monitor over the turn stream.
 
-    Shape: a watermarked tumbling-window count (append mode: a
-    (window, key) count row is FINAL once the watermark passes the
-    window end — exactly-once, replay-safe), then the z-score against
-    the trailing ``lookback`` windows is computed in foreachBatch over
-    [sink history ∪ this batch] with the SAME score_rate_windows
-    kernel the batch operator uses. History completeness holds by
-    watermark monotonicity: any window earlier than one finalizing now
-    has an earlier end, hence finalized in this or a previous batch —
-    so trailing-observed-window semantics match the batch operator
-    exactly, and the emitted rows are a watermark-closed prefix of the
-    batch result on the same input.
+    Shape (_start_window_monitor, keep = ``lookback``): each closed
+    (window, key) count row is FINAL, and its z-score against the
+    trailing ``lookback`` windows is computed in foreachBatch over
+    [each key's ``lookback`` newest earlier windows ∪ this batch] with
+    the SAME score_rate_windows kernel the batch operator uses. History
+    completeness holds by watermark monotonicity: any window earlier
+    than one finalizing now has an earlier end, hence finalized in this
+    or a previous batch — so trailing-observed-window semantics match
+    the batch operator exactly, and the emitted rows are a
+    watermark-closed prefix of the batch result on the same input.
 
     Scale: the windowed count is the only wide stage over raw turns
     (map-side partial aggs, watermark-bounded state). The foreachBatch
-    z-score reads back only the count table — |keys| × |windows| rows,
-    orders of magnitude smaller than the stream — and the per-key
-    window pass parallelizes across keys."""
+    z-score reads |keys| × ``lookback`` snapshot rows besides the batch,
+    and the per-key window pass parallelizes across keys."""
     from ..operators import cep
 
-    sink = IdempotentSink(
-        cfg.output("rate_anomaly"), keys=["window_start", key]
-    )
-    cnt = _key_window_counts(spark, cfg, key, bucket_s)
-
-    def process(batch_df: DataFrame, epoch: int) -> None:
-        fresh = batch_df.select("window_start", key, "n")
-        if sink.committed_epochs():
-            hist = sink.read_merged(spark).select("window_start", key, "n")
-            allc = hist.unionByName(fresh).dropDuplicates(
-                ["window_start", key]
-            )
-        else:
-            allc = fresh
-        scored = cep.score_rate_windows(allc, key, lookback).withColumn(
+    def score(history: DataFrame, fresh: DataFrame) -> DataFrame:
+        scored = cep.score_rate_windows(
+            history.unionByName(fresh), key, lookback
+        ).withColumn(
             # NULL z (insufficient/zero-variance history) is "not an
             # anomaly", not three-valued unknown, in the stored column
             "is_anomaly",
@@ -564,21 +594,14 @@ def start_anomaly_query(
                 cep.anomaly_predicate(min_history, z_threshold), F.lit(False)
             ),
         )
-        new = scored.join(
-            fresh.select("window_start", key), ["window_start", key],
-            "left_semi",
-        )
-        sink.process_batch(
-            new.select(
-                "window_start", key, "n", "n_prev", "mean_prev", "z_e4",
-                "is_anomaly",
-            ),
-            epoch,
+        return scored.join(
+            fresh.select("window_start", key), ["window_start", key], "left_semi"
+        ).select(
+            "window_start", key, "n", "n_prev", "mean_prev", "z_e4", "is_anomaly"
         )
 
-    return _start(
-        spark, cfg, cnt, "rate_anomaly", sink, available_now,
-        batch_fn=process,
+    return _start_window_monitor(
+        spark, cfg, "rate_anomaly", key, bucket_s, lookback, score, available_now
     )
 
 
@@ -594,11 +617,10 @@ def start_silence_query(
     timeline and emit rows for windows where a previously-seen key
     went SILENT (plus its active windows), with windows_since_seen.
 
-    Same architecture as the anomaly query: a watermarked tumbling
-    count in append mode is the only wide stage over raw turns; the
-    foreachBatch pass extends each key's dense timeline and emits the
-    newly-closed windows. Finality: a (window, key) row depends only on
-    that key's activity at windows <= it, all of which are
+    Same shape as the anomaly query (_start_window_monitor, keep = 1):
+    the foreachBatch pass extends each key's dense timeline and emits
+    the newly-closed windows. Finality: a (window, key) row depends only
+    on that key's activity at windows <= it, all of which are
     watermark-closed by the time the window itself closes — so rows
     never change after emission and MERGE idempotence absorbs replays.
     A key silent FOREVER keeps accruing rows as later windows close
@@ -608,63 +630,40 @@ def start_silence_query(
     (src/spouts/files_mails.py:72-79), a per-item timeout this
     operator generalizes to per-key timeline gaps.
 
-    BOUNDED STATE: extending a key's timeline needs only
-    (last_active, last_emitted) per key — not the sink's full history.
-    Each epoch persists one complete |keys|-row state snapshot beside
-    the output (untouched keys pass through), and the next epoch reads
-    only the newest one (`last_committed` + `read_epoch`), so per-batch
-    cost is O(|keys| + new windows), constant in stream lifetime."""
-    sink = IdempotentSink(cfg.output("silence"), keys=["window_start", key])
-    state_sink = IdempotentSink(cfg.output("silence_state"), keys=[key])
-    cnt = _key_window_counts(spark, cfg, key, bucket_s)
+    BOUNDED STATE: extending a key's timeline needs only its last
+    active window — its newest count row, the snapshot's one row per
+    key. The newest of those across all keys is the last window emitted
+    for every key. So per-batch cost is O(|keys| + new windows),
+    constant in stream lifetime."""
     ival = F.expr(f"interval {bucket_s} seconds")
 
-    def process(batch_df: DataFrame, epoch: int) -> None:
-        fresh = batch_df.select("window_start", key, "n")
-        # State is the newest snapshot STRICTLY BEFORE this epoch: on a
-        # crash-replay of epoch E the state sink may already hold E's
-        # own snapshot, and resuming from it would start the timeline
-        # after the replayed windows. Excluding E makes the replay
-        # recompute the identical rows (the extension is deterministic
-        # over closed windows) and overwrite E with the same content —
-        # exactly-once by convergence, the same property
-        # process_batch's always-overwrite contract assumes.
-        _, st = state_sink.read_prior(
-            spark, epoch, f"{key} string, last_active timestamp, last_emitted timestamp"
+    def extend(history: DataFrame, fresh: DataFrame) -> DataFrame:
+        # Global bounds, one broadcast 1-row aggregate (never a driver
+        # action): the last window emitted so far, and the max window
+        # this epoch closed, up to which every key's timeline extends.
+        bounds = F.broadcast(
+            history.agg(F.max("window_start").alias("_emitted")).crossJoin(
+                fresh.agg(F.max("window_start").alias("_gmax"))
+            )
         )
-        # Per-key summary of the newly closed windows. Append mode
-        # delivers a (window, key) row exactly once, when the watermark
-        # passes the window end; window closure is GLOBAL (one
-        # watermark), so every arriving window is > every previously
-        # emitted window — the timeline only ever extends forward.
-        fkeys = fresh.groupBy(key).agg(
-            F.min("window_start").alias("_f_first")
-        )
-        merged = st.join(fkeys, key, "full_outer").select(
-            key,
-            F.col("last_active").alias("_base_lastact"),
-            # first window this epoch must emit for the key: one past
-            # its last emission, or its first-seen window if new
-            F.coalesce(
-                F.col("last_emitted") + ival, F.col("_f_first")
-            ).alias("_start_w"),
-        )
-        # Global emission bound: the max closed window observed so far.
-        # One broadcast 1-row aggregate — never a driver action.
-        gmax = F.broadcast(
-            fresh.select(F.col("window_start").alias("_b"))
-            .unionByName(st.select(F.col("last_emitted").alias("_b")))
-            .agg(F.max("_b").alias("_gmax"))
-        )
+        firsts = fresh.groupBy(key).agg(F.min("window_start").alias("_first"))
         grid = (
-            merged.crossJoin(gmax)
+            history.select(key, F.col("window_start").alias("_base_lastact"))
+            .join(firsts, key, "full_outer")
+            .crossJoin(bounds)
+            # first window this epoch must emit for the key: one past
+            # the last emission, or its first-seen window if new
+            .withColumn(
+                "_start_w",
+                F.when(
+                    F.col("_base_lastact").isNotNull(), F.col("_emitted") + ival
+                ).otherwise(F.col("_first")),
+            )
             .where(F.col("_start_w") <= F.col("_gmax"))
             .select(
                 key,
                 "_base_lastact",
-                F.explode(
-                    F.sequence("_start_w", "_gmax", ival)
-                ).alias("window_start"),
+                F.explode(F.sequence("_start_w", "_gmax", ival)).alias("window_start"),
             )
         )
         dense = grid.join(fresh, [key, "window_start"], "left").withColumn(
@@ -682,7 +681,7 @@ def start_silence_query(
             ).over(w),
             F.col("_base_lastact"),
         )
-        emitted = dense.select(
+        return dense.select(
             "window_start",
             key,
             "n",
@@ -694,32 +693,7 @@ def start_silence_query(
             .alias("windows_since_seen"),
             (F.col("n") == 0).alias("is_silent"),
         )
-        sink.process_batch(emitted, epoch)
-        # New state snapshot: |keys| rows. Keys with nothing to emit
-        # this epoch pass through unchanged (anti-join side).
-        extended = (
-            dense.groupBy(key)
-            .agg(
-                F.max(
-                    F.when(F.col("n") > 0, F.col("window_start"))
-                ).alias("_new_act"),
-                F.max("window_start").alias("last_emitted"),
-                F.first("_base_lastact").alias("_base_lastact"),
-            )
-            .select(
-                key,
-                F.coalesce(
-                    F.greatest("_new_act", "_base_lastact"),
-                    "_new_act",
-                    "_base_lastact",
-                ).alias("last_active"),
-                "last_emitted",
-            )
-        )
-        untouched = st.join(extended.select(key), key, "left_anti")
-        state_sink.write_epoch(extended.unionByName(untouched), epoch)
 
-    return _start(
-        spark, cfg, cnt, "silence", sink, available_now,
-        batch_fn=process,
+    return _start_window_monitor(
+        spark, cfg, "silence", key, bucket_s, 1, extend, available_now
     )

@@ -11,12 +11,12 @@ would page on transitions of.
 Exactly-once without a transactional store: one complete dimension
 snapshot per epoch, written through an `IdempotentSink` (`write_epoch`,
 the same staging + rename + manifest commit as every other epoch
-output). Epoch k folds into the newest snapshot committed below k, so
-a replayed epoch k rebuilds from snapshot k-1 — which still exists —
-and overwrites snapshot k with identical content; `scd2_apply` itself
-is idempotent for re-delivered duplicate change rows (a duplicate is
-run-collapsed away, asserted in tests). Restart resumes from the latest
-committed snapshot.
+output). Epoch k folds into the newest snapshot committed below k
+(`read_prior`), so a replayed epoch k rebuilds from snapshot k-1 —
+which still exists — and overwrites snapshot k with identical content;
+`scd2_apply` itself is idempotent for re-delivered duplicate change
+rows (a duplicate is run-collapsed away, asserted in tests). Restart
+resumes from the latest committed snapshot.
 
 Scale: per batch, only TOUCHED entities re-enter a window
 (`scd2_apply` anti-joins the untouched majority straight through), and
@@ -86,13 +86,12 @@ class Scd2DimSink:
             ts_col=self.ts_col,
             seq_col=self.seq_col,
         )
-        prev = self._snapshots.last_committed(before=epoch)
-        if prev is None:
-            dim = init_scd2_dim(changes, **kw)
-        else:
-            dim_prev = self._snapshots.read_epoch(batch_df.sparkSession, prev[0])
-            dim = scd2_apply(dim_prev, changes, **kw)
-        self._snapshots.write_epoch(dim, epoch)
+        # before the first snapshot the prior is empty, and scd2_apply
+        # over it builds the dimension from the changes alone
+        _, dim_prev = self._snapshots.read_prior(
+            batch_df.sparkSession, epoch, init_scd2_dim(changes, **kw).schema.toDDL()
+        )
+        self._snapshots.write_epoch(scd2_apply(dim_prev, changes, **kw), epoch)
 
     def __call__(self, batch_df: DataFrame, epoch: int) -> None:
         self.process_batch(batch_df, epoch)

@@ -15,8 +15,11 @@ This module is the one place that knows the epoch layout
 how a fold finds its previous state (`read_prior`).
 Every other epoch-committed output goes through `IdempotentSink`: the
 queue segments (queue_sink), the SCD2 dimension snapshots (scd2_sink),
-the silence monitor's state snapshots and the per-epoch snapshots of
-the four snapshot folds (fold.py): dedup, session, tool-pair and CEP.
+the anomaly and silence monitors' window snapshots and the per-epoch
+snapshots of the four snapshot folds (fold.py): dedup, session,
+tool-pair and CEP. Each of those per-epoch states is read back through
+`read_prior` alone; `read_merged` and `read_asof` serve consumers of
+an output, never the query that writes it.
 
 Scale: the manifest holds one line per epoch (not per row); data files
 are partitioned however the batch is partitioned; nothing here is

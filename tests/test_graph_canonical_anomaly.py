@@ -5,6 +5,8 @@ reads."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -12,7 +14,11 @@ from spamscope_spark.datagen import generate_turns
 from spamscope_spark.functions.urls import canonicalize_url, sql_canonicalize_url
 from spamscope_spark.operators import cep
 from spamscope_spark.operators.graph import SCALE, pagerank, sql_pagerank
-from spamscope_spark.streaming.pipeline import PipelineConfig, start_anomaly_query
+from spamscope_spark.streaming.pipeline import (
+    PipelineConfig,
+    start_anomaly_query,
+    start_silence_query,
+)
 
 EDGES = [
     (1, 2), (2, 3), (3, 1), (1, 3), (4, 1), (4, 2), (5, 4),
@@ -118,6 +124,59 @@ class TestCanonicalUrl:
             assert got == m[u], u
 
 
+def _write_ts_split(turns, path, n_files):
+    """Append `turns` to `path` as `n_files` files split at evenly
+    spaced ts cut points, oldest first: drained one file per trigger,
+    the watermark closes windows in several epochs."""
+    lo, hi = turns.agg(F.min("ts"), F.max("ts")).first()
+    cuts = [None] + [lo + (hi - lo) * i / n_files for i in range(1, n_files)] + [None]
+    for a, b in zip(cuts, cuts[1:]):
+        part = turns
+        if a is not None:
+            part = part.where(F.col("ts") >= F.lit(a))
+        if b is not None:
+            part = part.where(F.col("ts") < F.lit(b))
+        part.coalesce(1).write.mode("append").parquet(path)
+
+
+def _duck_turns(duck, turns, key):
+    """Register (key, ts) of `turns` as the DuckDB table `turns`; ts
+    travels as epoch microseconds, so DuckDB's timestamps are UTC (see
+    _local)."""
+    raw = turns.select(key, F.unix_micros("ts").alias("us")).toPandas()
+    duck.register("raw_turns", raw)
+    duck.execute(
+        f"CREATE OR REPLACE VIEW turns AS "
+        f"SELECT {key}, make_timestamp(us) AS ts FROM raw_turns"
+    )
+
+
+def _local(utc):
+    """A naive UTC datetime from DuckDB as the naive local datetime
+    that collect() gives for the same instant."""
+    return utc.replace(tzinfo=dt.timezone.utc).astimezone().replace(tzinfo=None)
+
+
+def _assert_anomaly_oracle(duck, got, key, lookback, min_history, z):
+    """The stream's rows against DuckDB sql_rate_anomaly on the emitted
+    windows: every row with a z-score at a threshold that keeps them
+    all, and the anomaly rows at the query's own thresholds."""
+    def oracle(min_h, z_thr):
+        sql = cep.sql_rate_anomaly(
+            "turns", key, "ts", lookback=lookback, min_history=min_h,
+            z_threshold=z_thr,
+        )
+        return {
+            (_local(w), k): (n, n_prev, mean_prev, z_e4)
+            for k, w, n, n_prev, mean_prev, z_e4 in duck.sql(sql).fetchall()
+            if (_local(w), k) in got
+        }
+
+    scored = {k: v[:4] for k, v in got.items() if v[3] is not None}
+    assert scored and scored == oracle(0, -1e6)
+    assert {k: v[:4] for k, v in got.items() if v[4]} == oracle(min_history, z)
+
+
 class TestStreamingRateAnomaly:
     KEY, BUCKET_S, LOOKBACK, MIN_H, Z = "role", 3600, 6, 4, 2.0
 
@@ -127,7 +186,7 @@ class TestStreamingRateAnomaly:
         generate_turns(spark, n_convs=20, turns_per_conv=24).write.parquet(path)
         return PipelineConfig(input_path=path, work_dir=str(tmp_path / "work"))
 
-    def test_stream_matches_batch_and_replays_clean(self, spark, anomaly_cfg):
+    def test_stream_matches_batch_and_replays_clean(self, spark, duck, anomaly_cfg):
         q, sink = start_anomaly_query(
             spark, anomaly_cfg, key=self.KEY, bucket_s=self.BUCKET_S,
             lookback=self.LOOKBACK, min_history=self.MIN_H, z_threshold=self.Z,
@@ -173,6 +232,8 @@ class TestStreamingRateAnomaly:
             ).collect()
         }
         assert got_anom == {k for k in op if k in got}
+        _duck_turns(duck, turns, self.KEY)
+        _assert_anomaly_oracle(duck, got, self.KEY, self.LOOKBACK, self.MIN_H, self.Z)
 
         # restart from the same checkpoint: exactly-once, no new rows
         q2, sink2 = start_anomaly_query(
@@ -181,6 +242,54 @@ class TestStreamingRateAnomaly:
         )
         q2.awaitTermination(300)
         assert sink2.read_merged(spark).count() == len(got)
+
+    def test_carried_history_matches_batch_and_oracle(self, spark, duck, tmp_path):
+        """Drained one time-ordered file per trigger, windows close in
+        several epochs, so later epochs score against the history the
+        state snapshot carries: every emitted row still equals the batch
+        value and DuckDB's. z >= 1 flags some windows of this input (its
+        largest z is below the class's 2.0)."""
+        z = 1.0
+        path = str(tmp_path / "turns_in")
+        turns = generate_turns(spark, n_convs=20, turns_per_conv=24)
+        _write_ts_split(turns, path, 5)
+        cfg = PipelineConfig(
+            input_path=path, work_dir=str(tmp_path / "work"),
+            max_files_per_trigger=1,
+        )
+        q, sink = start_anomaly_query(
+            spark, cfg, key=self.KEY, bucket_s=self.BUCKET_S,
+            lookback=self.LOOKBACK, min_history=self.MIN_H, z_threshold=z,
+        )
+        q.awaitTermination(300)
+        emitting = [e for e, m in sink.manifest_entries().items() if m["rows"]]
+        assert len(emitting) >= 2, sink.manifest_entries()
+        got = {
+            (r["window_start"], r[self.KEY]): (
+                r["n"], r["n_prev"], r["mean_prev"], r["z_e4"], r["is_anomaly"]
+            )
+            for r in sink.read_merged(spark).collect()
+        }
+        turns = spark.read.parquet(path)
+        cnt = turns.groupBy(
+            F.date_trunc("hour", F.col("ts")).alias("window_start"),
+            F.col(self.KEY),
+        ).agg(F.count(F.lit(1)).alias("n"))
+        scored = cep.score_rate_windows(cnt, self.KEY, self.LOOKBACK).withColumn(
+            "is_anomaly",
+            F.coalesce(cep.anomaly_predicate(self.MIN_H, z), F.lit(False)),
+        )
+        exp = {
+            (r["window_start"], r[self.KEY]): (
+                r["n"], r["n_prev"], r["mean_prev"], r["z_e4"], r["is_anomaly"]
+            )
+            for r in scored.collect()
+        }
+        max_emitted = max(k[0] for k in got)
+        assert got == {k: v for k, v in exp.items() if k[0] <= max_emitted}
+        assert any(v[4] for v in got.values())
+        _duck_turns(duck, turns, self.KEY)
+        _assert_anomaly_oracle(duck, got, self.KEY, self.LOOKBACK, self.MIN_H, z)
 
 
 class TestStreamingSilence:
@@ -203,9 +312,7 @@ class TestStreamingSilence:
         ).write.parquet(path)
         return PipelineConfig(input_path=path, work_dir=str(tmp_path / "work"))
 
-    def test_stream_matches_batch_and_replays_clean(self, spark, silence_cfg):
-        from spamscope_spark.streaming.pipeline import start_silence_query
-
+    def test_stream_matches_batch_and_replays_clean(self, spark, duck, silence_cfg):
         q, sink = start_silence_query(
             spark, silence_cfg, key=self.KEY, bucket_s=self.BUCKET_S
         )
@@ -241,6 +348,16 @@ class TestStreamingSilence:
         max_emitted = max(k[0] for k in got)
         missing = {k for k in exp if k[0] <= max_emitted} - set(got)
         assert not missing, sorted(missing)[:5]
+        # independent oracle: DuckDB's densify and carry-forward
+        _duck_turns(duck, turns, self.KEY)
+        oracle = {
+            (_local(w), k): (n, since, silent)
+            for w, k, n, since, silent in duck.sql(
+                cep.sql_silence_windows("turns", self.KEY, "ts", self.BUCKET_S)
+            ).fetchall()
+            if _local(w) <= max_emitted
+        }
+        assert got == oracle
 
         # restart from the same checkpoint: exactly-once, no new rows
         q2, sink2 = start_silence_query(
@@ -338,21 +455,25 @@ class TestStatsOperators:
         assert sum(r["contrib_e6"] for r in out) == 10_000_000
 
 
+MONITORS = {
+    # monitor: (starter, output name, snapshot rows kept per key)
+    "silence": (start_silence_query, "silence", 1),
+    "anomaly": (start_anomaly_query, "rate_anomaly", 6),  # its lookback
+}
+
+
 class TestSilenceBoundedState:
-    """Round-4: the silence monitor's per-epoch cost must be bounded by
-    |keys| + new windows — NOT stream lifetime. The state snapshot
-    carries exactly one row per key, at every epoch."""
+    """The anomaly and silence monitors' per-epoch cost must be bounded
+    by |keys| + new windows — NOT stream lifetime. The state snapshot
+    carries at most `keep` rows per key, at every epoch."""
 
     KEY, BUCKET_S = "role", 3600
 
-    def test_state_rows_equal_keys_across_epochs(self, spark, tmp_path):
+    @pytest.mark.parametrize("monitor", sorted(MONITORS))
+    def test_state_rows_equal_keys_across_epochs(self, spark, tmp_path, monitor):
         import glob as globmod
 
-        from spamscope_spark.streaming.pipeline import (
-            PipelineConfig,
-            start_silence_query,
-        )
-
+        start, name, keep = MONITORS[monitor]
         path = str(tmp_path / "turns_in")
         t = generate_turns(spark, n_convs=12, turns_per_conv=24)
         # many input files + maxFilesPerTrigger → multiple epochs
@@ -363,39 +484,45 @@ class TestSilenceBoundedState:
             work_dir=str(tmp_path / "work"),
             max_files_per_trigger=2,
         )
-        q, sink = start_silence_query(
-            spark, cfg, key=self.KEY, bucket_s=self.BUCKET_S
-        )
+        q, sink = start(spark, cfg, key=self.KEY, bucket_s=self.BUCKET_S)
         q.awaitTermination(300)
 
-        state_dir = cfg.output("silence_state")
-        epoch_dirs = sorted(globmod.glob(f"{state_dir}/data/epoch=*"))
+        state_dir = cfg.output(f"{name}_state")
+        epoch_dirs = sorted(
+            globmod.glob(f"{state_dir}/data/epoch=*"),
+            key=lambda d: int(d.rsplit("=", 1)[1]),
+        )
         assert len(epoch_dirs) >= 3, "expected multiple epochs"
         for d in epoch_dirs:
             rows = spark.read.parquet(d).collect()
-            # bounded: ≤ one row per key, never the emitted-row history
-            assert len(rows) <= n_keys, (d, len(rows))
-            assert len({r[self.KEY] for r in rows}) == len(rows)
-        # final state covers every key seen
-        last = spark.read.parquet(epoch_dirs[-1])
-        assert last.count() == n_keys
-        # and per-key last_emitted equals the global max emitted window
-        out_max = (
-            sink.read_merged(spark).agg(F.max("window_start")).collect()[0][0]
-        )
-        le = {r["last_emitted"] for r in last.collect()}
-        assert le == {out_max}
+            # bounded: ≤ keep rows per key, never the emitted-row history
+            assert len(rows) <= n_keys * keep, (d, len(rows))
+            per_key = [r[self.KEY] for r in rows]
+            assert max(map(per_key.count, per_key), default=0) <= keep
+        # the last snapshot is each key's `keep` newest observed windows
+        last = {tuple(r) for r in spark.read.parquet(epoch_dirs[-1]).collect()}
+        out = sink.read_merged(spark)
+        observed = {}
+        for r in out.select("window_start", self.KEY, "n").where("n > 0").collect():
+            observed.setdefault(r[self.KEY], []).append(tuple(r))
+        newest = {
+            r for rows in observed.values() for r in sorted(rows, reverse=True)[:keep]
+        }
+        assert last == newest and len(observed) == n_keys
+        # the newest snapshot window is the global max emitted window
+        out_max = out.agg(F.max("window_start")).collect()[0][0]
+        assert max(r[0] for r in last) == out_max
 
-    def test_restart_reads_only_the_newest_snapshot(self, spark, tmp_path):
+    @pytest.mark.parametrize("monitor", sorted(MONITORS))
+    def test_restart_reads_only_the_newest_snapshot(self, spark, tmp_path, monitor):
         """Each state snapshot is complete (untouched keys pass
         through), so a restart needs only the newest one: with every
-        older silence_state epoch deleted, the resumed run's output
-        equals an uninterrupted run's over the same input."""
+        older state epoch deleted, the resumed run's output equals an
+        uninterrupted run's over the same input."""
         import glob as globmod
         import shutil
 
-        from spamscope_spark.streaming.pipeline import start_silence_query
-
+        start, name, _ = MONITORS[monitor]
         path = str(tmp_path / "turns_in")
         t = generate_turns(spark, n_convs=12, turns_per_conv=24)
         lo, hi = t.agg(F.min("ts"), F.max("ts")).first()
@@ -415,9 +542,7 @@ class TestSilenceBoundedState:
                 work_dir=str(tmp_path / work),
                 max_files_per_trigger=1,
             )
-            q, sink = start_silence_query(
-                spark, cfg, key=self.KEY, bucket_s=self.BUCKET_S
-            )
+            q, sink = start(spark, cfg, key=self.KEY, bucket_s=self.BUCKET_S)
             q.awaitTermination(300)
             rows = sink.read_merged(spark).collect()
             return cfg, sorted(map(tuple, rows))
@@ -425,7 +550,7 @@ class TestSilenceBoundedState:
         for i in range(3):
             append_part(i)
         cfg, _ = run("resumed")
-        state_dirs = globmod.glob(f"{cfg.output('silence_state')}/data/epoch=*")
+        state_dirs = globmod.glob(f"{cfg.output(f'{name}_state')}/data/epoch=*")
         newest = max(state_dirs, key=lambda d: int(d.rsplit("=", 1)[1]))
         assert len(state_dirs) >= 3, "expected multiple epochs"
         for d in state_dirs:

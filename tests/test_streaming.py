@@ -1235,6 +1235,19 @@ def test_epoch_commit_protocol_lives_in_sink_module():
     assert {rel for rel, _ in found} == {os.path.join("streaming", "sink.py")}, found
 
 
+def test_prior_state_is_read_only_through_read_prior():
+    """Only streaming/sink.py calls the merged, as-of and below-epoch
+    reads: every per-epoch state is found through `read_prior`, and no
+    query reads its own output back."""
+    found = [
+        (rel, needle)
+        for rel, text in _package_sources()
+        for needle in (".read_merged(", ".read_asof(", ".last_committed(before=")
+        if needle in text
+    ]
+    assert {rel for rel, _ in found} == {os.path.join("streaming", "sink.py")}, found
+
+
 def test_snapshot_fold_protocol_lives_in_one_module():
     """Only streaming/fold.py observes late rows and watermarks and names
     them in a manifest: every snapshot fold runs through it. No module
